@@ -12,7 +12,7 @@ defensible artifact in the repo):
 * **Per-query loadavg snapshots** (the ``loadavg`` dict in the output): one
   loadavg pair around a multi-minute sweep cannot adjudicate per-query
   noise; a reader can now see exactly which rows ran under external load.
-* **Heavy rows run LAST** (flagship → persist → whale → longdocs → the sf1
+* **Heavy rows run LAST** (flagship → forcesalt → whale → longdocs → the sf1
   block), so their heat cannot contaminate the cheap JVM-native rows that
   r5's sweep showed as phantom 18-84% "regressions".
 
@@ -323,20 +323,14 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
         clear_cache=True, restore=_restore_flagship)
 
     # measured salt-skip (VERDICT_r6 #1): the flagship corpus is balanced
-    # (32 even generator partitions), so the auto_salt probe skips the
-    # featurize round-robin — same job with ONE FEWER full-data exchange
-    # (plan audit §quality_filter_nosalt); the delta vs the flagship row is
-    # the measured price of the salt on an input that doesn't need it
-    run("quality_filter_autosalt",
+    # (32 even generator partitions), so the default auto_salt probe skips
+    # the featurize round-robin in the flagship row; this row forces the
+    # salt — ONE MORE full-data exchange (plan audit §quality_filter vs
+    # §quality_filter_nosalt) — so the delta is the measured price of the
+    # salt on an input that doesn't need it
+    run("quality_filter_forcesalt",
         lambda: _materialize(quality_filter(
-            state["tr"], salt_partitions=CPUS * 2, auto_salt=True)),
-        clear_cache=True, restore=_restore_flagship)
-
-    # freq_source strategy comparison (see quality_filter docstring): the
-    # dictionary's second-look cost as rescan-input vs persist-featurized
-    run("quality_filter_persist",
-        lambda: _materialize(quality_filter(
-            state["tr"], salt_partitions=CPUS * 2, freq_source="persist")),
+            state["tr"], salt_partitions=CPUS * 2, auto_salt=False)),
         clear_cache=True, restore=_restore_flagship)
     state["tr"].unpersist()
 
@@ -349,15 +343,16 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     def _restore_whale():
         wstate["df"] = _cached(spark, corpora["whale"]["path"])
 
-    run("quality_filter_whale",
+    # a new key: the former quality_filter_whale row also salted the
+    # dictionary rescan, a different plan
+    run("quality_filter_whale_nodictsalt",
         lambda: _materialize(quality_filter(
-            wstate["df"], salt_partitions=CPUS * 2,
-            dict_salt_partitions=CPUS * 2)),
+            wstate["df"], salt_partitions=CPUS * 2)),
         clear_cache=True, restore=_restore_whale)
     n_whale = corpora["whale"]["turns"]
     timings["_whale_turns"] = n_whale
-    timings["_whale_turns_per_sec"] = round(
-        n_whale / timings["quality_filter_whale"], 1)
+    timings["_whale_nodictsalt_turns_per_sec"] = round(
+        n_whale / timings["quality_filter_whale_nodictsalt"], 1)
     wstate["df"].unpersist()
 
     # long-document corpus (r4): 10-50 KB texts — mask/scrub/langid measured
@@ -446,7 +441,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
 
     # many-file scan (VERDICT_r6 #6): the same sf1 corpus as ~256 parquet
     # files, read UNCACHED from disk each rep — a 100 TB run starts as
-    # thousands of files, and with freq_source="rescan" this row pays the
+    # thousands of files, and with the rescan dictionary this row pays the
     # honest double scan (featurize + dictionary) off the file layout
     run("quality_filter_sf1_files256",
         lambda: _materialize(quality_filter(
@@ -464,15 +459,16 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     def _restore_whale_sf1():
         ws1["df"] = _cached(spark, corpora["whale_sf1"]["path"])
 
-    run("quality_filter_whale_sf1",
+    # a new key: the former quality_filter_whale_sf1 row also salted the
+    # dictionary rescan, a different plan
+    run("quality_filter_whale_sf1_nodictsalt",
         lambda: _materialize(quality_filter(
-            ws1["df"], salt_partitions=CPUS * 2,
-            dict_salt_partitions=CPUS * 2)),
+            ws1["df"], salt_partitions=CPUS * 2)),
         clear_cache=True, restore=_restore_whale_sf1)
     nws1 = corpora["whale_sf1"]["turns"]
     timings["_whale_sf1_turns"] = nws1
-    timings["_whale_sf1_turns_per_sec"] = round(
-        nws1 / timings["quality_filter_whale_sf1"], 1)
+    timings["_whale_sf1_nodictsalt_turns_per_sec"] = round(
+        nws1 / timings["quality_filter_whale_sf1_nodictsalt"], 1)
     ws1["df"].unpersist()
 
     # dedup family at sf1 scale (VERDICT_r5 ask): 10x the documents corpus
@@ -534,9 +530,11 @@ def run_bench() -> dict:
         "sf1_turns": timings.get("_sf1_turns"),
         "sf1_turns_per_sec": timings.get("_sf1_turns_per_sec"),
         "whale_turns": timings.get("_whale_turns"),
-        "whale_turns_per_sec": timings.get("_whale_turns_per_sec"),
+        "whale_nodictsalt_turns_per_sec": timings.get(
+            "_whale_nodictsalt_turns_per_sec"),
         "whale_sf1_turns": timings.get("_whale_sf1_turns"),
-        "whale_sf1_turns_per_sec": timings.get("_whale_sf1_turns_per_sec"),
+        "whale_sf1_nodictsalt_turns_per_sec": timings.get(
+            "_whale_sf1_nodictsalt_turns_per_sec"),
         "longdoc_turns": timings.get("_longdoc_turns"),
         "longdoc_mb": timings.get("_longdoc_mb"),
         "longdoc_mb_per_sec": timings.get("_longdoc_mb_per_sec"),

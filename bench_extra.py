@@ -5,9 +5,8 @@ reproducible).  Prints ONE JSON line.
 Contents:
 * noop-sink stage isolation of quality_filter at the 10x corpus (guide
   §1.4): featurize / dictionary-rescan / full, the split that exposed the
-  JVM mask chain as half the pipeline wall;
-* the whale_sf1 dictionary-salt exchange A/B (full-row vs prefix-only vs
-  unsalted) behind the r8 `with_mask_key_arrow(repartition=...)` change;
+  JVM mask chain (the test-side reference in tests/reference_paths.py) as
+  half the pipeline wall;
 * embedding_near_dup_pairs at the bench shape (4k vectors) and at a 10x
   scale point (VERDICT_r7 #3 — the one dedup/ANN member without
   order-of-magnitude evidence).  At 10x the vectors, the bench shape's
@@ -45,12 +44,12 @@ def main() -> dict:
     from pyspark.sql import functions as F
 
     from bytefreq_spark.pipeline import (
-        featurize, mask_frequency_dict, quality_filter, with_mask_key,
-        with_mask_key_arrow,
+        featurize, mask_frequency_dict, quality_filter, with_mask_key_arrow,
     )
     from bytefreq_spark.session import get_spark
     from bytefreq_spark.similarity import embedding_near_dup_pairs
     from bytefreq_spark.synth import gen_transcripts_spark
+    from tests.reference_paths import with_mask_key
 
     spark = get_spark("bytefreq-bench-extra", cores=CPUS,
                       shuffle_partitions=max(CPUS, 16))
@@ -82,9 +81,6 @@ def main() -> dict:
         n10 = max(int(0.1 * 100000), 200) * 10
         gen_transcripts_spark(spark, n10, partitions=CPUS).write.mode(
             "overwrite").parquet(f"{root}/sf1")
-        gen_transcripts_spark(
-            spark, n10, partitions=CPUS, skew_every=n10, skew_len=100_000,
-        ).write.mode("overwrite").parquet(f"{root}/whale_sf1")
 
         def cached(name):
             def _r():
@@ -110,18 +106,7 @@ def main() -> dict:
               lambda d: _mat(quality_filter(d, salt_partitions=CPUS * 2)),
               restore=cached("sf1"))
 
-        # ---- 2. whale dict-salt exchange A/B ----------------------------
-        sc.setJobDescription("whale dict: salted exchange of prefixes")
-        timed("whale_sf1_dict_salted_prefix",
-              lambda d: _mat(mask_frequency_dict(
-                  with_mask_key_arrow(d, CPUS * 2))),
-              restore=cached("whale_sf1"))
-        sc.setJobDescription("whale dict: unsalted")
-        timed("whale_sf1_dict_unsalted",
-              lambda d: _mat(mask_frequency_dict(with_mask_key_arrow(d))),
-              restore=cached("whale_sf1"))
-
-        # ---- 3. embedding near-dups: bench shape + 10x scale point ------
+        # ---- 2. embedding near-dups: bench shape + 10x scale point ------
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         dim = len(emb.select("embedding").head(1)[0][0])
         both = emb.union(

@@ -39,11 +39,6 @@ def main(argv: list[str] | None = None) -> int:
                          "wide conversation shuffle halves)")
     qf.add_argument("--checkpoint-dir", default=None)
     qf.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
-    qf.add_argument("--freq-source", default="rescan",
-                    choices=["rescan", "persist"],
-                    help="mask-frequency dictionary strategy (see "
-                         "pipeline.quality_filter docstring for the "
-                         "100 TB cost math)")
 
     pr = sub.add_parser("profile", help="bytefreq DQ pattern profile")
     pr.add_argument("--input", required=True)
@@ -144,7 +139,6 @@ def main(argv: list[str] | None = None) -> int:
             )
         else:
             out = quality_filter(df, salt_partitions=args.salt_partitions,
-                                 freq_source=args.freq_source,
                                  drop_text=args.drop_text,
                                  auto_salt=args.auto_salt)
         writer = out.write.mode("overwrite")

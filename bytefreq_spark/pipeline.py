@@ -1,26 +1,30 @@
 """Distributed quality-filter pipeline (the north-rule system).
 
-Stage graph (all declarative DataFrame ops; Python only in Arrow-vectorized
-pandas-UDF stages):
+One tally pass, then one rule pass — every entry point runs the same chain
+(all declarative DataFrame ops; Python only in Arrow-vectorized pandas-UDF
+stages):
 
-1. **featurize** — one pandas-UDF stage computing per-turn features, langid,
-   perplexity and scrubbed text from the shared kernels (single Arrow
-   round-trip; no per-row Python).
-2. **mask-frequency dictionary** — distributed ``groupBy(lu_key).count()``
-   (the Spark analogue of bytefreq's associative-array tallies) broadcast-
-   joined back onto turns (J4).  At 10^12 turns the dictionary stays small
-   (low-cardinality masks) — the broadcast is what makes this scale.
-3. **prev-turn join** — duplicate-turn detection via a self-join on
-   ``(conv_id, turn_idx-1)`` instead of a ``Window.partitionBy(conv_id)``:
-   hash-partitioning on the *composite* key spreads a million-turn whale
-   conversation over the cluster, where a window would pin it to one task
-   (explicit skew handling per the north rule).  ``salt`` on the featurize
-   repartition covers residual input-partition skew.
-4. **decide** — shared ``decide()`` kernel in a pandas UDF over the joined
-   columns (identical arithmetic to the reference implementation).
-5. **write** — ``repartitionByRange(conv_id, turn_idx)`` +
-   ``sortWithinPartitions`` for stable (conv_id, turn_idx) output order,
-   snapshot checkpoints with manifests, per-partition metrics + lineage.
+1. **salt probe** — ``input_salt_decision`` measures the input's partition
+   layout and keeps the featurize round-robin only when partitions are too
+   few or skewed by rows or bytes.
+2. **featurize** — one pandas-UDF stage computing per-turn features, langid,
+   perplexity, the LU mask key and scrubbed text from the shared kernels
+   (single Arrow round-trip; no per-row Python).
+3. **mask-frequency dictionary** — distributed ``groupBy(lu_key).count()``
+   (the Spark analogue of bytefreq's associative-array tallies).  Only its
+   source differs per entry point: a column-pruned Arrow rescan of the input
+   (``quality_filter``), the featurized snapshot (``run_with_checkpoints``),
+   the monoid merge of the committed tally with the new batch's
+   (``run_incremental``), or a caller-supplied dictionary (the stream).
+4. **labelling** — :func:`label_turns`: broadcast-join the dictionary (J4),
+   hash the raw text to 64 bits, ONE hash exchange on ``conv_id`` sorted by
+   ``(conv_id, turn_idx)`` (``conversation_layout``), an exchange-free lag
+   over the hash for the duplicate flag, and the keep/drop decision as
+   native expressions.  The output is conversation-contiguous and sorted
+   by construction.
+5. **snapshots** — versioned parquet snapshots with manifests for
+   checkpoint/resume and incremental ingest, plus per-partition metrics and
+   file lineage.
 """
 
 from __future__ import annotations
@@ -33,12 +37,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType, DoubleType, LongType, StringType, StructField, StructType,
+    DoubleType, LongType, StringType, StructField, StructType,
 )
 
 from .langid import detect_language
 from .perplexity import perplexity
-from .quality import decide, text_features
+from .quality import text_features
 from .scrub import scrub_series_sparse
 
 FEATURE_SCHEMA = StructType([
@@ -52,11 +56,6 @@ FEATURE_SCHEMA = StructType([
     StructField("scrubbed_text", StringType()),
 ])
 
-DECISION_SCHEMA = StructType([
-    StructField("keep", BooleanType()),
-    StructField("drop_reason", StringType()),
-])
-
 
 def _featurize_udf():
     @F.pandas_udf(FEATURE_SCHEMA)
@@ -64,9 +63,8 @@ def _featurize_udf():
         # lu_key from the PYTHON kernel: the vectorized run-collapse costs
         # ~13 µs core/turn vs ~87 µs for the JVM regexp chain (docs/PLANS.md
         # §lu_key_mask_cost) — the featurize stage pays whichever engine
-        # computes it, so the cheap one wins.  NULL text yields NULL lu_key
-        # for exact parity with the JVM expression the rescan dictionary
-        # branch still uses (mask_col ≡ mask_series elsewhere: test_masks).
+        # computes it, so the cheap one wins.  NULL text yields NULL lu_key,
+        # exactly as the rescan dictionary's key (with_mask_key_arrow).
         f = text_features(text).drop(columns=["n_chars"])
         f.loc[text.isna(), "lu_key"] = None
         f["lang"] = detect_language(text)
@@ -99,46 +97,6 @@ def _featurize_udf():
     return feats
 
 
-def _decide_udf():
-    @F.pandas_udf(DECISION_SCHEMA)
-    def dec(
-        lang: pd.Series, ppl: pd.Series, n_chars: pd.Series,
-        digit_count: pd.Series, weird_count: pd.Series, mask_entropy: pd.Series,
-        lu_count: pd.Series, lu_total: pd.Series, is_dup: pd.Series,
-        role: pd.Series,
-    ) -> pd.DataFrame:
-        return decide(lang, ppl, n_chars, digit_count, weird_count,
-                      mask_entropy, lu_count, lu_total, is_dup, role)
-
-    return dec
-
-
-def with_mask_key(df: DataFrame) -> DataFrame:
-    """Native (JVM-only) columns: LU-mask dictionary key + char count.
-
-    This is the RESCAN dictionary path: the mask-frequency pass re-reads the
-    input with this projection (Catalyst prunes to the `text` column; zero
-    Python) instead of re-running the heavy featurize UDF.  The featurize
-    stage itself emits lu_key from the Python kernel since r6 (~7× cheaper
-    per turn than this regexp chain — docs/PLANS.md §lu_key_mask_cost); the
-    two engines agree exactly (`mask_col` ≡ `mask_series`, test_masks;
-    NULL text → NULL key on both sides).
-    """
-    from .masks import mask_col
-    from .quality import LU_KEY_LEN, LU_KEY_SRC_CHARS
-
-    return df.withColumns({
-        # mask only a text prefix: the collapse regex on multi-KB turns is
-        # the dominant JVM cost, and the dictionary key is truncated anyway
-        # (same prefix rule in quality.text_features — frozen contract)
-        "lu_key": F.substring(
-            mask_col(F.substring(F.col("text"), 1, LU_KEY_SRC_CHARS), "LU"),
-            1, LU_KEY_LEN,
-        ),
-        "n_chars": F.coalesce(F.length("text"), F.lit(0)).cast("long"),
-    })
-
-
 def _lu_key_udf():
     """Arrow-vectorized LU dictionary key: the fused flat-buffer kernel
     (``masks.lu_mask_key_series``) over a JVM-side 512-char prefix.
@@ -146,8 +104,7 @@ def _lu_key_udf():
     This is the same kernel featurize emits ``lu_key`` from, so dictionary
     keys and featurize keys agree STRUCTURALLY (one engine), on top of the
     char-for-char JVM≡Python parity test_masks pins.  NULL text yields NULL
-    key — matching both ``with_mask_key`` (mask_col propagates NULL) and
-    featurize (explicit ``.loc[text.isna()] = None``)."""
+    key, as in featurize (explicit ``.loc[text.isna()] = None``)."""
     from .masks import lu_mask_key_series
     from .quality import LU_KEY_LEN, LU_KEY_SRC_CHARS
 
@@ -160,36 +117,25 @@ def _lu_key_udf():
     return lu_key
 
 
-def with_mask_key_arrow(
-    df: DataFrame, repartition: int | None = None,
-) -> DataFrame:
+def with_mask_key_arrow(df: DataFrame) -> DataFrame:
     """The RESCAN dictionary projection via the Arrow kernel: ``(lu_key)``
     only — the frequency dictionary groups by the key and needs nothing
     else, so the Arrow boundary carries exactly one 512-char JVM-side text
     prefix in and one ≤64-char key out (ship only the columns the function
     needs).
 
-    r8: the JVM ``with_mask_key`` chain (translate + 5 regexp passes + the
-    backreference collapse) measured 5.1-6.9 s on the 1.86M-turn corpus —
-    half the entire pipeline wall — while this kernel does the same masking
-    ~7× cheaper per turn (docs/PLANS.md §lu_key_mask_cost).  ``with_mask_key``
-    remains the zero-Python reference surface (differential-tested equal).
-
-    ``repartition`` inserts the caller's dict-salt exchange BETWEEN the
-    prefix projection and the Arrow stage, so the exchange moves ≤512-char
-    prefixes instead of whole rows (project before the exchange): measured
-    1.87 s vs 3.35 s on the salted whale_sf1 dict branch.  (Measured in the
-    same sweep: with this kernel the whale's fat partition is no longer a
-    meaningful straggler — the UNSALTED dict branch read 1.04 s — so the
-    dict salt is close to pure exchange cost now; it remains honored as the
-    explicit opt-in it is.)"""
+    r8: the JVM mask chain (translate + 5 regexp passes + the backreference
+    collapse) measured 5.1-6.9 s on the 1.86M-turn corpus — half the entire
+    pipeline wall — while this kernel does the same masking ~7× cheaper per
+    turn (docs/PLANS.md §lu_key_mask_cost).  The JVM chain survives as the
+    differential-test reference in the test suite.  The projection keeps
+    the input's partition layout: a salt exchange in front of it measured
+    1.87 s against 1.04 s unsalted on the whale_sf1 dictionary branch."""
     from .quality import LU_KEY_SRC_CHARS
 
     pref = df.select(
         F.substring(F.col("text"), 1, LU_KEY_SRC_CHARS).alias("_pref")
     )
-    if repartition:
-        pref = pref.repartition(repartition)
     return pref.select(_lu_key_udf()(F.col("_pref")).alias("lu_key"))
 
 
@@ -274,7 +220,7 @@ def featurize(df: DataFrame, salt_partitions: int | None = None) -> DataFrame:
     # serially on the same task thread, so the cheaper one shortens the
     # stage (measured 0.5 s JVM vs 0.07 s Python wall on the 184k-turn
     # flagship; audit in docs/PLANS.md §lu_key_mask_cost).  The rescan
-    # dictionary branch still uses with_mask_key — JVM-only by design.
+    # dictionary branch runs the same kernel (with_mask_key_arrow).
     df = df.withColumn(
         "n_chars", F.coalesce(F.length("text"), F.lit(0)).cast("long"))
     # ASCII router for the scrub fast path: char count == UTF-8 byte count
@@ -332,9 +278,8 @@ def mask_frequency_dict(featurized: DataFrame) -> DataFrame:
     return featurized.groupBy("lu_key").agg(F.count("*").alias("lu_count"))
 
 
-def with_mask_frequency(featurized: DataFrame, freq: DataFrame | None = None) -> DataFrame:
+def with_mask_frequency(featurized: DataFrame, freq: DataFrame) -> DataFrame:
     """Stage 2b: broadcast the dictionary back onto turns (J4)."""
-    freq = freq if freq is not None else mask_frequency_dict(featurized)
     # lu_total rides on the dictionary itself so the dict has exactly one
     # consumer — a second consumer (e.g. a separate total agg) would re-run
     # the full input scan that builds it.  Fold the tiny dict to ONE row
@@ -352,7 +297,7 @@ def with_mask_frequency(featurized: DataFrame, freq: DataFrame | None = None) ->
     return featurized.join(F.broadcast(freq2), "lu_key", "left")
 
 
-def conversation_layout(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def conversation_layout(df: DataFrame) -> DataFrame:
     """THE wide shuffle: hash-partition by conv_id, sort by (conv_id, turn_idx).
 
     This single exchange serves three consumers at once:
@@ -366,74 +311,37 @@ def conversation_layout(df: DataFrame, partitions: int | None = None) -> DataFra
     the expensive per-turn UDF work is already done (salted, upstream) — the
     whale only pays a streaming lag + native filters here.
     """
-    args = [partitions] if partitions else []
-    return df.repartition(*args, "conv_id").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
+    return df.repartition("conv_id").sortWithinPartitions("conv_id", "turn_idx")
 
 
-def with_dup_flag(df: DataFrame) -> DataFrame:
-    """Duplicate-turn detection via lag over the conversation layout.
+def with_dup_flag_hashed(df: DataFrame) -> DataFrame:
+    """Duplicate-turn flag: a lag over the PRE-SHUFFLE 64-bit text hash
+    ``_text_h`` instead of the raw text, so the lag window never needs the
+    text column and ``drop_text=True`` can prune text/tool BEFORE the wide
+    conversation shuffle (the dominant data movement at scale — see
+    docs/SCALE.md).
 
     MUST run on a ``conversation_layout`` frame — then Catalyst plans the
     window with zero extra exchanges (check: no Exchange above the window in
-    `.explain`).  For inputs without that layout use ``with_prev_turn``
-    (join-based, layout-free) instead.
-    """
+    `.explain`).  The hash column must be NULL for NULL text (``xxhash64``
+    would hash a NULL to the seed constant, letting a real text that hashes
+    to the seed false-match an adjacent NULL row); with that convention the
+    NULL/empty semantics match the exact text comparison.  A 64-bit
+    collision between two ADJACENT same-conversation turns falsely flags a
+    duplicate: expected false dups ≈ n_pairs·2⁻⁶⁴ ≈ 5×10⁻⁸ across 10^12
+    turns — noise for a training-corpus filter (same documented tradeoff as
+    paragraph_dedup's hash keys).  Equivalence with the exact flag is
+    differential-tested (test_dup_flag_hashed_equals_exact)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    prev = F.lag("text").over(w)
+    prev = F.lag("_text_h").over(w)
     return df.withColumn(
         "is_dup",
         prev.isNotNull()
-        & (prev == F.col("text"))
-        & (F.coalesce(F.col("text"), F.lit("")) != ""),
-    )
-
-
-def with_dup_flag_hashed(df: DataFrame, hash_col: str = "_text_h") -> DataFrame:
-    """``with_dup_flag`` over a PRE-SHUFFLE 64-bit text hash instead of the
-    raw text: the lag window then never needs the text column, so
-    ``drop_text=True`` can prune text/tool BEFORE the wide conversation
-    shuffle (the dominant data movement at scale — see docs/SCALE.md).
-
-    The hash column must be NULL for NULL text (``xxhash64`` would hash a
-    NULL to the seed constant, letting a real text that hashes to the seed
-    false-match an adjacent NULL row); with that convention the NULL/empty
-    semantics match the exact comparison.  A 64-bit collision between two
-    ADJACENT same-conversation turns falsely flags a duplicate: expected
-    false dups ≈ n_pairs·2⁻⁶⁴ ≈ 5×10⁻⁸ across 10^12 turns — noise for a
-    training-corpus filter (same documented tradeoff as paragraph_dedup's
-    hash keys).  Equivalence with the exact flag is differential-tested
-    (test_dup_flag_hashed_equals_exact)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    prev = F.lag(hash_col).over(w)
-    return df.withColumn(
-        "is_dup",
-        prev.isNotNull()
-        & (prev == F.col(hash_col))
+        & (prev == F.col("_text_h"))
         & (F.col("n_chars") > 0),
     )
-
-
-def with_prev_turn(df: DataFrame) -> DataFrame:
-    """Alternate duplicate detection: skew-safe self-join on the composite
-    key (no layout requirement; costs its own shuffle of both sides)."""
-    prev = df.select(
-        F.col("conv_id").alias("conv_id"),
-        (F.col("turn_idx") + 1).alias("turn_idx"),
-        F.col("text").alias("_prev_text"),
-    )
-    joined = df.join(prev, ["conv_id", "turn_idx"], "left")
-    return joined.withColumn(
-        "is_dup",
-        F.col("_prev_text").isNotNull()
-        & (F.col("_prev_text") == F.col("text"))
-        & (F.coalesce(F.col("text"), F.lit("")) != ""),
-    ).drop("_prev_text")
 
 
 def decision_cols() -> tuple[F.Column, F.Column]:
@@ -480,73 +388,68 @@ def with_decision(df: DataFrame) -> DataFrame:
     return df.withColumns({"keep": keep, "drop_reason": reason})
 
 
-def with_decision_udf(df: DataFrame) -> DataFrame:
-    """Pandas-UDF variant of the decision (kernel-identical to the reference
-    implementation; kept for differential testing of ``decision_cols``)."""
-    dec = _decide_udf()(
-        F.col("lang"), F.col("ppl"), F.col("n_chars"), F.col("digit_count"),
-        F.col("weird_count"), F.col("mask_entropy"), F.col("lu_count"),
-        F.col("lu_total"), F.col("is_dup"), F.col("role"),
-    )
-    return df.withColumn("_d", dec).select("*", "_d.*").drop("_d")
-
-
-def stable_order(
-    df: DataFrame, partitions: int | None = None, mode: str = "range"
+def label_turns(
+    feat: DataFrame, freq: DataFrame, drop_text: bool = False,
 ) -> DataFrame:
-    """Stage 5: stable (conv_id, turn_idx) ordering for output.
+    """The labelling tail every entry point shares: featurized turns + a
+    mask-frequency dictionary → labeled turns.
 
-    ``range``: globally sorted output (repartitionByRange samples the input —
-    call only on a persisted/snapshotted frame or the whole upstream runs
-    twice).  ``hash``: conversation-contiguous, per-partition sorted, no
-    sampling pass — the cheap choice at 100 TB where global total order
-    across files buys nothing.
-    """
-    args = [partitions] if partitions else []
-    if mode == "hash":
-        rp = df.repartition(*args, "conv_id")
-    else:
-        rp = df.repartitionByRange(*args, "conv_id", "turn_idx")
-    return rp.sortWithinPartitions("conv_id", "turn_idx")
+    ONE wide shuffle: dictionary broadcast join → conversation layout →
+    exchange-free lag window → native decision.  Output is
+    conversation-contiguous and (conv_id, turn_idx)-sorted by construction;
+    no sampling job, no persist needed.  The dup lag compares a 64-bit text
+    hash computed BEFORE the shuffle (NULL for NULL text — see
+    with_dup_flag_hashed), so with ``drop_text`` the raw text/tool columns
+    are pruned from the exchange payload entirely: at 10^12-turn scale that
+    halves the one full-data shuffle (scrubbed_text is the deliverable; raw
+    text was riding along only to feed the adjacent-duplicate comparison).
+    ``drop_text`` also drops ``lu_key`` from the output."""
+    pre = with_mask_frequency(feat, freq).withColumn(
+        "_text_h",
+        F.when(F.col("text").isNotNull(), F.xxhash64("text")),
+    )
+    if drop_text:
+        pre = pre.drop("text", "tool")
+    labels = with_decision(
+        with_dup_flag_hashed(conversation_layout(pre))).drop("_text_h")
+    return labels.drop("lu_key") if drop_text else labels
+
+
+def _probe_salt(df: DataFrame, salt_partitions: int | None) -> int | None:
+    """Resolve the featurize salt by probing the input layout.  Without an
+    explicit ``salt_partitions`` the probe still runs, against a
+    cluster-sized default target — otherwise ``auto_salt=True`` alone (the
+    CLI default) would silently never protect a skewed input (r7 review).
+    Looks ``input_salt_decision`` up at call time, so a wrapper installed on
+    this module (the traced benchmark's probe timer) sees every call."""
+    target = salt_partitions or (
+        df.sparkSession.sparkContext.defaultParallelism * 2)
+    return input_salt_decision(df, target)
 
 
 def quality_filter(
     df: DataFrame,
     salt_partitions: int | None = None,
-    ordered: bool = True,
     drop_text: bool = False,
-    freq_source: str = "rescan",
-    dict_salt_partitions: int | None = None,
     auto_salt: bool = True,
 ) -> DataFrame:
     """Full pipeline: transcripts → labeled/scrubbed turns.
 
-    ``freq_source`` picks how the corpus-wide mask-frequency dictionary is
-    built — the one stage that inherently needs a second look at the data:
+    The corpus-wide mask-frequency dictionary — the one stage that
+    inherently needs a second look at the data — comes from a second,
+    column-pruned scan of the *input* (``with_mask_key_arrow``): only a
+    512-char text prefix crosses into the Arrow mask kernel and only the
+    ≤64-char key comes back, so the heavy featurize UDF stage runs exactly
+    once.  Cost at 100 TB: input is columnar parquet, so the rescan reads
+    just the text column's compressed bytes (~the dominant column, call it
+    T bytes) a second time — total I/O ≈ 2T reads, zero extra writes.
+    (Persisting the featurized frame instead writes and re-reads its 2-3T
+    of text + scrubbed_text + features; it measured slower in BENCH_r08.)
 
-    * ``"rescan"`` (default): dictionary from a second scan of the *input*,
-      JVM-only and column-pruned to ``text`` (the cheap native mask
-      projection); the heavy pandas-UDF stage runs exactly once.
-      Cost at 100 TB: input is columnar parquet, so the rescan reads just the
-      text column's compressed bytes (~the dominant column, call it T bytes)
-      a second time — total I/O ≈ 2T reads, zero extra writes.
-    * ``"persist"``: materialize the featurized frame (DISK_ONLY), build the
-      dictionary from its ``lu_key`` and join against the cached copy.
-      Cost at 100 TB: one T read plus a write+read of the featurized frame —
-      which carries text + scrubbed_text + features ≈ 2-3T — so ≥ 2-3T of
-      writes and the same again in reads, on cluster-local disks.
-
-    Rescan wins whenever the input is a columnar format on cheap storage
-    (the 100 TB parquet/Iceberg case: a pruned re-read beats writing 2-3T of
-    scratch).  Persist wins when the input decode itself is expensive or
-    non-columnar (CSV/JSON sources, or a remote store where reads are the
-    bottleneck) — then paying local-disk materialization once is cheaper
-    than decoding twice.  Measured at sf0.1 in BENCH_r02 (see bench.py).
-
-    ``drop_text`` drops the raw text/tool columns from the output (the
-    scrubbed text is the deliverable at scale).  ``ordered`` is kept for API
-    compatibility — output is always conversation-contiguous sorted (it
-    falls out of the one shuffle).
+    ``drop_text`` drops the raw text/tool columns (and ``lu_key``) from the
+    output — the scrubbed text is the deliverable at scale.  Output is
+    always conversation-contiguous sorted (it falls out of the one shuffle;
+    see :func:`label_turns`).
 
     ``auto_salt`` makes the featurize salt a MEASURED decision
     (``input_salt_decision``): the round-robin exchange is kept only when
@@ -565,58 +468,10 @@ def quality_filter(
     probe keeps.
     """
     if auto_salt:
-        # without an explicit salt_partitions the probe still runs, against
-        # a cluster-sized default target — otherwise `auto_salt=True` alone
-        # (the CLI's --auto-salt) would silently never protect a skewed
-        # input (r7 review)
-        target = salt_partitions or (
-            df.sparkSession.sparkContext.defaultParallelism * 2)
-        salt_partitions = input_salt_decision(df, target)
+        salt_partitions = _probe_salt(df, salt_partitions)
     feat = featurize(df, salt_partitions)
-    if freq_source == "persist":
-        from pyspark import StorageLevel
-
-        feat = feat.persist(StorageLevel.DISK_ONLY)
-        freq = mask_frequency_dict(feat)
-    else:
-        # the rescan branch inherits the INPUT's partition layout.
-        # ``dict_salt_partitions`` (explicit opt-in) round-robins it first —
-        # historically needed because the JVM mask chain serialized on a
-        # fat partition (measured 2.4× on the whale shape in r3).  r8: the
-        # rescan masks through the Arrow kernel instead (~7× cheaper per
-        # turn than the JVM regexp chain — the chain measured 5-7 s on the
-        # 1.86M-turn corpus, HALF the whole pipeline wall); the Arrow
-        # boundary carries only a 512-char JVM-side prefix in and the
-        # ≤64-char key out, and the opt-in dict-salt exchange is inserted
-        # BETWEEN the prefix projection and the Arrow stage so it moves
-        # prefixes, not whole rows (measured 1.87 s vs 3.35 s on the salted
-        # whale_sf1 dict branch).  With the kernel this fast, the unsalted
-        # whale dict branch measured 1.04 s — the fat partition is no
-        # longer a meaningful straggler, so the salt is mostly exchange
-        # cost and stays an explicit opt-in, default OFF.
-        freq = mask_frequency_dict(
-            with_mask_key_arrow(df, dict_salt_partitions))
-    with_freq = with_mask_frequency(feat, freq)
-    # ONE wide shuffle: conversation layout → exchange-free lag window →
-    # native decision.  Output is conversation-contiguous and (conv_id,
-    # turn_idx)-sorted by construction; no sampling job, no persist needed.
-    # The dup lag compares a 64-bit text hash computed BEFORE the shuffle
-    # (NULL for NULL text — see with_dup_flag_hashed), so with drop_text
-    # the raw text/tool columns are pruned from the exchange payload
-    # entirely: at 10^12-turn scale that halves the one full-data shuffle
-    # (scrubbed_text is the deliverable; raw text was riding along only to
-    # feed the adjacent-duplicate comparison).
-    pre = with_freq.withColumn(
-        "_text_h",
-        F.when(F.col("text").isNotNull(), F.xxhash64("text")),
-    )
-    if drop_text:
-        pre = pre.drop("text", "tool")
-    laid_out = conversation_layout(pre)
-    decided = with_decision(with_dup_flag_hashed(laid_out)).drop("_text_h")
-    if drop_text:
-        decided = decided.drop("lu_key")
-    return decided
+    return label_turns(
+        feat, mask_frequency_dict(with_mask_key_arrow(df)), drop_text)
 
 
 def run_incremental(
@@ -690,23 +545,17 @@ def run_incremental(
     elif snapshot_valid(out_dir, "freq", freq_cfg):
         freq_old = read_snapshot(spark, out_dir, "freq")
     else:  # stale or missing cache → rebuild from the committed labels
-        freq_old = (
-            old_labels.groupBy("lu_key").agg(F.count("*").alias("lu_count"))
-        )
+        freq_old = mask_frequency_dict(old_labels)
     # same Arrow mask kernel as the one-shot rescan (r8) — the delta tally
-    # must agree with featurize's lu_key, which this makes structural; the
-    # optional salt exchange moves ≤512-char prefixes, not whole rows
-    delta = mask_frequency_dict(with_mask_key_arrow(new, salt_partitions))
+    # must agree with featurize's lu_key, which this makes structural
+    delta = mask_frequency_dict(with_mask_key_arrow(new))
     freq = (
         delta if freq_old is None
         else freq_old.unionByName(delta).groupBy("lu_key").agg(
             F.sum("lu_count").alias("lu_count"))
     )
 
-    feat = featurize(new, salt_partitions)
-    labeled_new = with_decision(
-        with_dup_flag(conversation_layout(with_mask_frequency(feat, freq)))
-    )
+    labeled_new = label_turns(featurize(new, salt_partitions), freq)
     combined = (
         labeled_new if old_labels is None
         else old_labels.unionByName(labeled_new)
@@ -716,7 +565,7 @@ def run_incremental(
     # refresh the derived caches, keyed to the version just committed
     new_v = snapshot_versions(out_dir, "labels")[-1]
     write_snapshot(
-        labels.groupBy("lu_key").agg(F.count("*").alias("lu_count")),
+        mask_frequency_dict(labels),
         out_dir, "freq", dict(config, labels_version=new_v),
     )
     write_snapshot(
@@ -913,8 +762,10 @@ def run_with_checkpoints(
     whose input layout now probes differently recomputes instead of
     silently reusing a snapshot built under the other plan, and with
     ``drop_text`` the labels snapshot carries scrubbed text only (raw
-    text/tool never cross the conversation exchange — same hashed dup-lag
-    as quality_filter).
+    text/tool never cross the conversation exchange).  The labels come from
+    the same :func:`label_turns` tail as quality_filter; only the
+    dictionary's source differs — it is tallied from the featurized
+    snapshot's ``lu_key`` instead of a rescan of the input.
 
     r8 (ADVICE_r7 #1): the probe's full input scan is skipped on RESUME —
     when the current labels snapshot was committed with the same config
@@ -936,9 +787,7 @@ def run_with_checkpoints(
         } == base_cfg:
             salt_partitions = prev_cfg.get("salt")  # resume: reuse decision
         else:
-            target = salt_partitions or (
-                spark.sparkContext.defaultParallelism * 2)
-            salt_partitions = input_salt_decision(transcripts, target)
+            salt_partitions = _probe_salt(transcripts, salt_partitions)
     config = dict(config or {}, version=1, salt=salt_partitions,
                   drop_text=drop_text)
 
@@ -953,20 +802,7 @@ def run_with_checkpoints(
         labels = read_snapshot(spark, out_dir, "labels")
         labels_resumed = True
     else:
-        pre = with_mask_frequency(feat)
-        if drop_text:
-            # hashed dup-lag so the raw columns can be pruned before the
-            # wide exchange — identical decisions (differential-tested in
-            # test_drop_text_equals_default_projection)
-            pre = pre.withColumn(
-                "_text_h",
-                F.when(F.col("text").isNotNull(), F.xxhash64("text")),
-            ).drop("text", "tool")
-            labels = with_decision(
-                with_dup_flag_hashed(conversation_layout(pre))
-            ).drop("_text_h", "lu_key")
-        else:
-            labels = with_decision(with_dup_flag(conversation_layout(pre)))
+        labels = label_turns(feat, mask_frequency_dict(feat), drop_text)
         write_snapshot(labels, out_dir, "labels", config)
         labels = read_snapshot(spark, out_dir, "labels")
         labels_resumed = False

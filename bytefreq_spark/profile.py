@@ -76,8 +76,8 @@ def mask_frequency(
     measured 2.2× faster than the ``"native"`` JVM regexp chain at sf0.1
     (translate table + numpy collapse vs 8 regex passes); both surfaces are
     equivalence-tested char-for-char (test_masks).  The pipeline's frequency
-    dictionary intentionally stays native (JVM-only rescan, zero Python —
-    see pipeline.with_mask_key).
+    dictionary masks through the same kind of Arrow kernel (see
+    pipeline.with_mask_key_arrow).
 
     Scale note: ``min(raw)`` on a string has an immutable aggregation buffer,
     which forces Catalyst to a **SortAggregate** (per-partition sort of the

@@ -58,18 +58,16 @@ def quality_filter_stream(
 
     The mask-frequency dictionary is precomputed (batch job over history, or a
     periodically refreshed snapshot) and broadcast into every micro-batch —
-    the streaming analogue of the reference's pre-built tally.  Duplicate
-    detection: only the intra-batch prev-turn join (cross-batch dedup would
-    need ``applyInPandasWithState``; documented limitation).
+    the streaming analogue of the reference's pre-built tally.  Each batch
+    runs the batch pipeline's own labelling tail (``pipeline.label_turns``),
+    so its duplicate flag sees only turns inside the same micro-batch; a
+    duplicate pair straddling two batches is caught by the stateful operator
+    in ``streaming.stateful_dedup`` instead.
     """
-    from ..pipeline import (
-        featurize, with_decision, with_mask_frequency, with_prev_turn,
-    )
+    from ..pipeline import featurize, label_turns
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        feat = featurize(batch_df, salt_partitions)
-        scored = with_decision(with_prev_turn(with_mask_frequency(feat, freq)))
-        (scored.sortWithinPartitions("conv_id", "turn_idx")
+        (label_turns(featurize(batch_df, salt_partitions), freq)
          .write.mode("append").parquet(output_dir))
 
     return (

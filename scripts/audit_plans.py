@@ -52,10 +52,10 @@ one shortens the stage).  r8 routed the RESCAN dictionary branch through the
 same kernel (`pipeline.with_mask_key_arrow`): the JVM chain measured
 5.1-6.9 s on the 1.86M-turn sf1 corpus — HALF the whole pipeline wall —
 vs ~1.5 s for the Arrow stage (512-char prefix in, ≤64-char key out; the
-r8 bench delta confirms).  `with_mask_key` (JVM) remains the zero-Python
-reference surface.  Cross-engine key agreement is pinned by test_masks
-(`mask_col` ≡ `mask_series`) and test_mask_key_arrow_equals_jvm
-(NULL text → NULL key on every surface).
+r8 bench delta confirms).  The JVM chain (`with_mask_key`) remains the
+zero-Python reference surface in `tests/reference_paths.py`.  Cross-engine
+key agreement is pinned by test_masks (`mask_col` ≡ `mask_series`) and
+test_mask_key_arrow_equals_jvm (NULL text → NULL key on every surface).
 
 Reproduce: time `with_mask_key(tr).select("lu_key","n_chars")` vs
 `tr.select(substring(text,1,512), length(text))` on
@@ -125,7 +125,7 @@ def main():
     # (the probe-driven default resolves to the nosalt plan below on
     # balanced input).
     tr = gen_transcripts_spark(spark, 50)
-    qf = quality_filter(tr, salt_partitions=8, ordered=False, auto_salt=False)
+    qf = quality_filter(tr, salt_partitions=8, auto_salt=False)
     audit("quality_filter", qf, [
         ("exactly 2 arrow UDF stages (featurize + dict key; decision native)",
          lambda p: len(re.findall(r"^\(\d+\) ArrowEvalPython", p, re.M)) == 2),
@@ -134,8 +134,8 @@ def main():
         ("freq dict broadcast-joined", lambda p: "BroadcastHashJoin" in p),
         ("no per-row python (BatchEvalPython)", lambda p: "BatchEvalPython" not in p),
         # exactly 2 FULL-data exchanges in the salted config: the featurize
-        # salt and the conversation layout (dict-rescan salt is an explicit
-        # opt-in for non-splittable skewed inputs; see pipeline.quality_filter)
+        # salt and the conversation layout (the dict rescan keeps the
+        # input's layout)
         ("2 full-data exchanges (salt + layout), dict exchanges tiny",
          lambda p: len(re.findall(r"RoundRobinPartitioning", p)) >= 1
          and len(re.findall(r"hashpartitioning\(conv_id", p)) >= 1
@@ -171,8 +171,7 @@ def main():
     # which is bit-identically the plan the probe-driven default produces
     # after a skip decision (the probe job itself is separate and leaves no
     # trace in this plan).
-    qf_nosalt = quality_filter(tr, salt_partitions=None, ordered=False,
-                               auto_salt=False)
+    qf_nosalt = quality_filter(tr, salt_partitions=None, auto_salt=False)
     audit("quality_filter_nosalt", qf_nosalt, [
         ("no round-robin salt exchange",
          lambda p: "RoundRobinPartitioning" not in p),

@@ -2,7 +2,7 @@
 
     spark-submit --master <cluster> --py-files dist/bytefreq_spark.zip \
         scripts/submit_job.py --input transcripts/ --output labeled/ \
-        [--salt-partitions N] [--checkpoint-dir ckpt/] [--freq-source rescan]
+        [--salt-partitions N] [--checkpoint-dir ckpt/]
 
 Deliberately self-contained: imports bytefreq_spark only from the shipped
 zip (no repo sys.path tricks), builds the session from spark-submit's conf,
@@ -21,8 +21,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--salt-partitions", type=int, default=None)
     ap.add_argument("--checkpoint-dir", default=None)
-    ap.add_argument("--freq-source", default="rescan",
-                    choices=["rescan", "persist"])
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -39,10 +37,7 @@ def main() -> None:
         )
         labels.write.mode("overwrite").parquet(args.output)
     else:
-        out = quality_filter(
-            tr, salt_partitions=args.salt_partitions,
-            freq_source=args.freq_source,
-        )
+        out = quality_filter(tr, salt_partitions=args.salt_partitions)
         out.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
     print(json.dumps({"output": args.output, "rows": n}))

@@ -11,6 +11,7 @@ Covers the legacy grain deltas vs the Rust/primary grains:
 
 from __future__ import annotations
 
+import os
 import shutil
 import subprocess
 
@@ -28,6 +29,7 @@ from bytefreq_spark.masks import (
 
 AWK_SCRIPT = "/root/reference/scripts/awk/bytefreq_v1.05.awk"
 MAWK = shutil.which("mawk")
+NO_AWK_ENGINE = MAWK is None or not os.path.exists(AWK_SCRIPT)
 
 VALUES = [
     "Hello--World",
@@ -68,7 +70,8 @@ def run_mawk(values: list[str], grain: str) -> list[str]:
     return patterns
 
 
-@pytest.mark.skipif(MAWK is None, reason="mawk not installed")
+@pytest.mark.skipif(NO_AWK_ENGINE,
+                    reason="mawk or the reference AWK script is missing")
 @pytest.mark.parametrize("grain", ["H", "L"])
 def test_awk_mask_matches_mawk(grain):
     expected = run_mawk(VALUES, grain)
@@ -76,7 +79,8 @@ def test_awk_mask_matches_mawk(grain):
     assert got == expected, list(zip(VALUES, got, expected))
 
 
-@pytest.mark.skipif(MAWK is None, reason="mawk not installed")
+@pytest.mark.skipif(NO_AWK_ENGINE,
+                    reason="mawk or the reference AWK script is missing")
 def test_awk_series_and_duckdb_match_mawk():
     import duckdb
 

@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 from bytefreq_spark.pipeline import quality_filter, run_with_checkpoints
 from bytefreq_spark.reference import run_reference
 from bytefreq_spark.synth import gen_transcripts_pandas, gen_transcripts_spark
+from tests.reference_paths import (
+    with_decision_udf, with_dup_flag, with_mask_key, with_prev_turn,
+)
 
 N_CONVS = 400  # ≈ several thousand turns incl. one skewed whale (serial 399? no: 997-1 not hit; use skew_every=200)
 SKEW = dict(skew_every=200, skew_len=400)
@@ -149,7 +152,7 @@ def test_dup_flag_hashed_equals_exact(spark):
     text never matches anything (hash column stays NULL), empty text never
     flags, and duplicates across conversation boundaries never flag."""
     from bytefreq_spark.pipeline import (
-        conversation_layout, with_dup_flag, with_dup_flag_hashed,
+        conversation_layout, with_dup_flag_hashed,
     )
 
     rows = [
@@ -177,12 +180,12 @@ def test_dup_flag_hashed_equals_exact(spark):
 
 def test_lu_key_python_equals_jvm(spark):
     """r6 moved lu_key INTO the featurize UDF (Python kernel ~7× cheaper
-    than the JVM regexp chain — docs/PLANS.md §lu_key_mask_cost), while the
-    rescan dictionary branch still computes it with ``with_mask_key`` (JVM).
-    The two engines must agree on EVERY row — including NULL text (NULL key
-    on both sides, so dictionary joins behave identically) and empty text
-    ('_'), else rescan-mode frequency joins would silently miss."""
-    from bytefreq_spark.pipeline import featurize, with_mask_key
+    than the JVM regexp chain — docs/PLANS.md §lu_key_mask_cost); the JVM
+    chain survives as the test-side reference ``with_mask_key``.  The two
+    engines must agree on EVERY row — including NULL text (NULL key on both
+    sides, so dictionary joins behave identically) and empty text ('_'),
+    else frequency joins would silently miss."""
+    from bytefreq_spark.pipeline import featurize
 
     rows = [
         ("c0", 0, "user", "Hello World 42!", None),
@@ -209,9 +212,7 @@ def test_mask_key_arrow_equals_jvm(spark):
     per turn.  The two rescan surfaces must agree key-for-key — NULL text →
     NULL key, empty → '_', >512-char prefix truncation, non-ASCII classes,
     run collapse — and the dictionary built from either must be identical."""
-    from bytefreq_spark.pipeline import (
-        mask_frequency_dict, with_mask_key, with_mask_key_arrow,
-    )
+    from bytefreq_spark.pipeline import mask_frequency_dict, with_mask_key_arrow
 
     rows = [
         ("c0", 0, "user", "Hello World 42!", None),
@@ -255,7 +256,7 @@ def test_native_decision_equals_kernel(spark, corpus_pdf):
     """decision_cols (native exprs) ≡ decide() kernel (pandas UDF)."""
     from bytefreq_spark.pipeline import (
         conversation_layout, featurize, mask_frequency_dict, with_decision,
-        with_decision_udf, with_dup_flag, with_mask_frequency, with_mask_key,
+        with_mask_frequency,
     )
 
     df = spark.createDataFrame(corpus_pdf)
@@ -267,23 +268,6 @@ def test_native_decision_equals_kernel(spark, corpus_pdf):
     b = with_decision_udf(base).select(*key, "keep", "drop_reason").toPandas().set_index(key).sort_index()
     assert (a["keep"] == b["keep"]).all()
     assert (a["drop_reason"].fillna("") == b["drop_reason"].fillna("")).all()
-
-
-def test_freq_source_persist_identical(spark, corpus_pdf):
-    """quality_filter(freq_source='persist') must produce byte-identical
-    labels/scrub to the default rescan strategy."""
-    from bytefreq_spark.pipeline import quality_filter
-
-    tr = spark.createDataFrame(corpus_pdf)
-    cols = ["conv_id", "turn_idx", "keep", "drop_reason", "scrubbed_text"]
-    a = quality_filter(tr, salt_partitions=8).select(cols).toPandas()
-    b = quality_filter(tr, salt_partitions=8, freq_source="persist").select(
-        cols
-    ).toPandas()
-    key = ["conv_id", "turn_idx"]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    assert a.equals(b)
 
 
 def test_whale_conversation_stress(spark):
@@ -301,8 +285,6 @@ def test_whale_conversation_stress(spark):
         quality_filter,
         with_decision,
         with_mask_frequency,
-        with_mask_key,
-        with_prev_turn,
     )
     from bytefreq_spark.synth import gen_transcripts_spark
 
@@ -314,10 +296,8 @@ def test_whale_conversation_stress(spark):
     assert whale["count"] == 100_000  # the whale is really there
     assert n < whale["count"] * 1.5   # ...and dominates the corpus
 
-    # (a) completes, labels every turn (dict salt opted in: the cached
-    # generator layout is exactly the non-splittable skewed source the knob
-    # exists for)
-    out = quality_filter(tr, salt_partitions=16, dict_salt_partitions=16).cache()
+    # (a) completes, labels every turn
+    out = quality_filter(tr, salt_partitions=16).cache()
     assert out.count() == n
     assert out.filter(F.col("keep").isNull()).count() == 0
 
@@ -373,12 +353,10 @@ def test_longdoc_corpus_parity(spark):
 def test_quality_filter_stream_matches_batch(spark, tmp_path):
     """foreachBatch streaming quality filter (availableNow over a staged
     directory): a single micro-batch must equal the batch pipeline exactly
-    (single batch ⇒ the intra-batch prev-turn join sees the whole input, so
-    the documented cross-batch dup limitation does not bite); a checkpointed
-    restart must be a no-op."""
-    from bytefreq_spark.pipeline import (
-        mask_frequency_dict, quality_filter, with_mask_key,
-    )
+    (single batch ⇒ the intra-batch dup lag sees the whole input, so the
+    cross-batch dup gap does not bite); a checkpointed restart must be a
+    no-op."""
+    from bytefreq_spark.pipeline import mask_frequency_dict, quality_filter
     from bytefreq_spark.streaming.profile_stream import (
         quality_filter_stream, read_transcript_stream,
     )
@@ -467,15 +445,14 @@ def test_snapshot_time_travel(spark, tmp_path):
 
 
 def test_quality_filter_stream_multibatch_boundary(spark, tmp_path):
-    """The documented limitation, made falsifiable: with >1 micro-batch the
-    foreachBatch filter detects only intra-batch duplicate turns.  A dup
+    """The stateless stream's dup scope, made falsifiable: with >1
+    micro-batch the foreachBatch filter detects only intra-batch duplicate
+    turns (cross-batch pairs are streaming.stateful_dedup's job).  A dup
     pair straddling the batch boundary is flagged by the batch pipeline but
     NOT by the stream — and that must be the ONLY divergence."""
     from pyspark.sql import functions as F
 
-    from bytefreq_spark.pipeline import (
-        mask_frequency_dict, quality_filter, with_mask_key,
-    )
+    from bytefreq_spark.pipeline import mask_frequency_dict, quality_filter
     from bytefreq_spark.streaming.profile_stream import quality_filter_stream
     from bytefreq_spark.synth import TRANSCRIPT_SCHEMA
 
@@ -593,7 +570,7 @@ def test_run_incremental(spark, tmp_path):
     the same corpus is a no-op."""
     from bytefreq_spark.pipeline import (
         mask_frequency_dict, quality_filter, read_snapshot, run_incremental,
-        snapshot_versions, with_mask_key,
+        snapshot_versions,
     )
     from bytefreq_spark.synth import gen_transcripts_spark
 
@@ -679,7 +656,7 @@ def test_incremental_ingest_stream(spark, tmp_path):
     case) is a no-op thanks to the anti-join — effectively-exactly-once
     without sink transactions."""
     from bytefreq_spark.pipeline import (
-        mask_frequency_dict, read_snapshot, snapshot_versions, with_mask_key,
+        mask_frequency_dict, read_snapshot, snapshot_versions,
     )
     from bytefreq_spark.streaming.profile_stream import (
         incremental_ingest_stream, read_transcript_stream,
@@ -875,10 +852,11 @@ def test_auto_salt_default_target(spark):
     pd.testing.assert_frame_equal(out_a, out_b)
 
 
-def test_checkpoint_drop_text_and_auto_salt(spark, corpus_pdf):
+@pytest.mark.parametrize("drop_text", [False, True])
+def test_checkpoint_drop_text_and_auto_salt(spark, corpus_pdf, drop_text):
     """r7 review: the CLI forwards --drop-text/--auto-salt to the
-    checkpointed path — it must behave like quality_filter's at-scale
-    config, not silently ignore the flags."""
+    checkpointed path — it must behave like quality_filter in the same
+    config, column for column, not silently ignore the flags."""
     import tempfile as _tf
 
     df = spark.createDataFrame(corpus_pdf)
@@ -886,17 +864,17 @@ def test_checkpoint_drop_text_and_auto_salt(spark, corpus_pdf):
     try:
         labels = run_with_checkpoints(
             spark, df, tmp, salt_partitions=8,
-            drop_text=True, auto_salt=True,
+            drop_text=drop_text, auto_salt=True,
         ).toPandas()
         for gone in ("text", "tool", "lu_key"):
-            assert gone not in labels.columns
-        full = quality_filter(df, salt_partitions=8).toPandas()
+            assert (gone in labels.columns) is not drop_text
+        full = quality_filter(
+            df, salt_partitions=8, drop_text=drop_text).toPandas()
+        assert list(labels.columns) == list(full.columns)
         key = ["conv_id", "turn_idx"]
         a = labels.sort_values(key).reset_index(drop=True)
         b = full.sort_values(key).reset_index(drop=True)
-        assert (a["keep"] == b["keep"]).all()
-        assert (a["scrubbed_text"].fillna("")
-                == b["scrubbed_text"].fillna("")).all()
+        pd.testing.assert_frame_equal(a, b)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
