@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -210,23 +210,52 @@ def _banded(signatures: DataFrame, id_col: str, bands: int, rows_per_band: int) 
     )
 
 
-def _cap_hot_buckets(banded: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Drop LSH buckets with more than ``max_bucket`` members before the
-    self-join.  One viral boilerplate string at 10^12 docs otherwise makes a
-    quadratic bucket (|b|² pairs); genuinely-similar clusters that big are a
-    boilerplate class, not near-dup pairs — surface them via
-    ``lsh_hot_buckets`` instead.  The bucket count rides on the same
-    (band, band_hash) shuffle the self-join needs (window, no extra agg+join).
-    """
-    if max_bucket is None:
-        return banded
-    from pyspark.sql import Window
+def bucket_pairs(
+    banded: DataFrame, id_col: str = "doc_id", key: str = "band_hash",
+    max_bucket: int | None = 64,
+) -> DataFrame:
+    """Candidate pairs of every LSH family: distinct ``(id_a, id_b)`` with
+    ``id_a < id_b`` for each two rows of ``banded`` that share a
+    ``(band, key)`` bucket.  Every other column of ``banded`` rides through
+    as ``<col>_a`` / ``<col>_b`` (simhash carries its hashes this way).
 
-    w = Window.partitionBy("band", "band_hash")
+    Buckets with more than ``max_bucket`` members are dropped first.  One
+    viral boilerplate string at 10^12 docs otherwise makes a quadratic
+    bucket (|b|² pairs); genuinely-similar clusters that big are a
+    boilerplate class, not near-dup pairs — surface them via
+    ``lsh_hot_buckets`` instead.  The bucket count is a window over the same
+    (band, key) shuffle the self-join needs (no extra agg+join).  Residual
+    in-bucket skew is left to AQE skew-join at runtime.
+
+    The capped table is cached: the self-join consumes it twice, and
+    without the cache each side can re-run the banding (and any signature
+    kernel under it) plus the cap window's shuffle — exchange reuse does
+    not save minhash, whose cached signature table sits below the banding
+    (r8 interleaved A/B: −14% on the 10× minhash corpus; the cached rows
+    are the narrow ``(id, band, key)`` proxy)."""
+    if max_bucket is not None:
+        w = Window.partitionBy("band", key)
+        banded = (
+            banded.withColumn("_bucket_n", F.count("*").over(w))
+            .filter(F.col("_bucket_n") <= max_bucket)
+            .drop("_bucket_n")
+        )
+    banded.cache()
+    extra = [c for c in banded.columns if c not in (id_col, "band", key)]
+    a, b = banded.alias("a"), banded.alias("b")
     return (
-        banded.withColumn("_bucket_n", F.count("*").over(w))
-        .filter(F.col("_bucket_n") <= max_bucket)
-        .drop("_bucket_n")
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"{side}.{c}").alias(f"{c}_{side}")
+              for c in extra for side in "ab"],
+        )
+        .distinct()
     )
 
 
@@ -262,32 +291,12 @@ def lsh_candidate_pairs(
     Scale analysis: the exploded band table is n·bands rows; the self-join is
     per (band, band_hash) bucket — genuinely similar docs collide, everything
     else distributes.  Hot buckets (boilerplate) are dropped at
-    ``max_bucket`` members (see ``_cap_hot_buckets``/``lsh_hot_buckets``);
-    residual in-bucket skew is handled by AQE skew-join at runtime.
+    ``max_bucket`` members (see ``bucket_pairs``/``lsh_hot_buckets``).
     """
-    banded = _cap_hot_buckets(
-        _banded(signatures, id_col, bands, rows_per_band), max_bucket
+    return bucket_pairs(
+        _banded(signatures, id_col, bands, rows_per_band), id_col,
+        "band_hash", max_bucket,
     )
-    # cache the capped banded table: the self-join consumes it twice, and
-    # without the cache each side re-runs the banding explode + the cap
-    # window's (band, band_hash) shuffle (r8 interleaved A/B: −14% on the
-    # 10× corpus; the cached rows are (id, band, hash) — the narrow proxy)
-    banded.cache()
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    return pairs
 
 
 def minhash_similarity(
@@ -418,31 +427,11 @@ def simhash_pairs_from_banded(
     """Cap + self-join + hamming filter over a prebuilt banded table (e.g.
     one staged to parquet — the driver contract replays exactly this)."""
     assert max_hamming < bands, "pigeonhole guarantee needs max_hamming < bands"
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "band_bits")
-        banded = (
-            banded.withColumn("_n", F.count("*").over(w))
-            .filter(F.col("_n") <= max_bucket)
-            .drop("_n")
-        )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_bits") == F.col("b.band_bits"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
+    pairs = bucket_pairs(banded, id_col, "band_bits", max_bucket).select(
+        "id_a", "id_b",
+        F.bit_count(
+            F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
+        ).alias("hamming"),
     )
     return pairs.filter(F.col("hamming") <= max_hamming)
 

@@ -208,10 +208,8 @@ def _code_lut() -> np.ndarray:
 def _seg_count16(mask: np.ndarray, starts: np.ndarray,
                  lens: np.ndarray) -> np.ndarray:
     """Per-row popcount of a flat boolean mask (uint16 reduceat — counts are
-    bounded by CAP_CHARS).  Empty-row-safe: an interior empty row makes
-    reduceat return a stray element (zeroed via ``lens == 0``); a TRAILING
-    empty row has start == len(mask), which reduceat rejects, so those rows
-    are excluded up front (their count is 0 by definition).
+    bounded by CAP_CHARS) through ``quality._rowwise_sum``, which also
+    handles the empty-row quirks.
 
     PRECONDITION: per-row counts must fit uint16 — every caller caps texts
     at CAP_CHARS first.  Asserted here (ADVICE r6): a future uncapped caller
@@ -219,17 +217,9 @@ def _seg_count16(mask: np.ndarray, starts: np.ndarray,
     assert not len(lens) or int(lens.max()) < (1 << 16), (
         "_seg_count16 requires rows < 2^16 chars (cap at CAP_CHARS first)"
     )
-    out = np.zeros(len(starts), dtype=np.uint16)
-    if not len(mask):
-        return out.astype(np.int64)
-    vals = mask.astype(np.uint16)
-    valid = starts < len(mask)
-    if valid.all():
-        out = np.add.reduceat(vals, starts)
-    elif valid.any():
-        out[valid] = np.add.reduceat(vals, starts[valid])
-    out[lens == 0] = 0
-    return out.astype(np.int64)
+    from .quality import _rowwise_sum
+
+    return _rowwise_sum(mask.astype(np.uint16), starts, lens).astype(np.int64)
 
 
 def _script_counts(sub: pd.Series) -> dict[str, np.ndarray]:
@@ -489,26 +479,3 @@ def detect_language_naive(texts: pd.Series) -> pd.Series:
     out[latin] = np.array(LATIN_ORDER, dtype=object)[best[latin]]
 
     return pd.Series(out, index=texts.index, dtype=object)
-
-
-def detect_language_fasttext(texts: pd.Series, model_path: str) -> pd.Series:
-    """fastText language-ID (the north star's named engine), gated on the
-    library being installed — it is NOT present in this container, so the
-    vectorized n-gram heuristic (``detect_language``) is the default engine
-    throughout the pipeline.  When fasttext + a lid model (e.g. lid.176.bin)
-    are available, this returns the same ISO-639-1 shape so it can be swapped
-    into the featurize stage behind the same interface."""
-    try:
-        import fasttext  # type: ignore[import-not-found]
-    except ImportError as e:  # pragma: no cover - env constraint
-        raise NotImplementedError(
-            "fasttext is not installed in this container; "
-            "detect_language (n-gram heuristic) is the default engine"
-        ) from e
-    model = fasttext.load_model(model_path)
-    cleaned = [t.replace("\n", " ") for t in texts.fillna("")]
-    labels, _scores = model.predict(cleaned)
-    return pd.Series(
-        [ls[0].replace("__label__", "") if ls else "und" for ls in labels],
-        index=texts.index,
-    )

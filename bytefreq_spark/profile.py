@@ -45,15 +45,6 @@ def melt(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     return long
 
 
-def melt_with_index(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Like ``melt`` but with the driver-side column index (insertion order)."""
-    cols = columns or df.columns
-    idx = F.create_map(
-        *[x for i, c in enumerate(cols) for x in (F.lit(c), F.lit(i))]
-    )
-    return melt(df, cols).withColumn("col_idx", idx[F.col("column")])
-
-
 # ---------------------------------------------------------------------------
 # Mask-frequency table (A1 + A2) and DQ report (O1)
 # ---------------------------------------------------------------------------
@@ -64,7 +55,6 @@ def mask_frequency(
     columns: list[str] | None = None,
     grain: str = "LU",
     examples: bool = True,
-    impl: str = "arrow",
 ) -> DataFrame:
     """``(column, pattern, count[, example])`` — one row per (column, mask).
 
@@ -72,12 +62,11 @@ def mask_frequency(
     north star; the output is small (low-cardinality masks) and is what gets
     broadcast as the mask-frequency dictionary downstream (J4).
 
-    ``impl``: ``"arrow"`` (default) masks via the vectorized pandas UDF —
-    measured 2.2× faster than the ``"native"`` JVM regexp chain at sf0.1
-    (translate table + numpy collapse vs 8 regex passes); both surfaces are
-    equivalence-tested char-for-char (test_masks).  The pipeline's frequency
-    dictionary masks through the same kind of Arrow kernel (see
-    pipeline.with_mask_key_arrow).
+    Values are masked by the vectorized pandas UDF — measured 2.2× faster
+    than the JVM regexp chain ``mask_col`` at sf0.1 (translate table + numpy
+    collapse vs 8 regex passes); both surfaces are equivalence-tested
+    char-for-char (test_masks).  The pipeline's frequency dictionary masks
+    through the same kind of Arrow kernel (see pipeline.with_mask_key_arrow).
 
     Scale note: ``min(raw)`` on a string has an immutable aggregation buffer,
     which forces Catalyst to a **SortAggregate** (per-partition sort of the
@@ -88,10 +77,7 @@ def mask_frequency(
     from .masks import mask_pandas_udf
 
     long = melt(df, columns)
-    masked_col = (
-        mask_pandas_udf(grain)(F.col("raw")) if impl == "arrow"
-        else mask_col(F.col("raw"), grain)
-    )
+    masked_col = mask_pandas_udf(grain)(F.col("raw"))
     # M5 (main.rs:34-36): values under a ``.Rules.`` path are rule outputs —
     # identity mask, so enhanced output can be re-profiled without
     # double-masking
@@ -110,12 +96,11 @@ def dq_report(
     columns: list[str] | None = None,
     grain: str = "LU",
     top_k: int | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Report-ordered frequency table: columns in schema order, masks by
     count desc (main.rs:1087-1099), with per-column rank; optional top-k."""
     cols = columns or df.columns
-    freq = mask_frequency(df, cols, grain, impl=impl)
+    freq = mask_frequency(df, cols, grain)
     idx = F.create_map(
         *[x for i, c in enumerate(cols) for x in (F.lit(c), F.lit(i))]
     )

@@ -136,15 +136,6 @@ def scrub_series_naive(texts: pd.Series) -> pd.Series:
     return out
 
 
-def scrub_flags(texts: pd.Series) -> pd.DataFrame:
-    """Per-rule hit counts (for metrics / drop reasons)."""
-    t = texts.fillna("")
-    return pd.DataFrame(
-        {name: t.str.count(pat) for name, pat, _ in SCRUB_RULES},
-        index=texts.index,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Encoding repair (K2): Windows-1252 mojibake -> proper UTF-8
 # ---------------------------------------------------------------------------

@@ -17,6 +17,8 @@ import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints here
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import bucket_pairs
+
 
 def _dot(a, b) -> F.Column:
     return F.aggregate(
@@ -40,7 +42,9 @@ def cosine_topk(
     df: DataFrame, query_vec: list[float], k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
 ) -> DataFrame:
-    """Brute-force cosine top-k against a literal query vector."""
+    """Cosine top-k against a literal query vector: the brute-force scan
+    over ``df``, and the exact rescoring tail every ANN search (IVF, LSH)
+    applies to its candidate set."""
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     scored = df.select(
         F.col(id_col),
@@ -70,23 +74,6 @@ def pairwise_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
-
-
-def hyperplane_signature_col(vec_col: str, planes: np.ndarray) -> F.Column:
-    """Sign-bit signature of a vector against fixed random hyperplanes —
-    native expressions (each plane = a literal array; dot product via
-    zip_with).  ``planes``: (n_planes, dim) from a seeded RNG."""
-    bits = []
-    for i, p in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(
-            F.when(_dot(F.col(vec_col), lit) >= 0,
-                   F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
 
 
 def make_planes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
@@ -119,14 +106,15 @@ def hyperplane_signature_udf(planes: np.ndarray):
 
 
 def hyperplane_signature_seq_udf(planes: np.ndarray):
-    """Arrow hyperplane signature, BIT-IDENTICAL to the native expression
-    (``hyperplane_signature_col``): the JVM evaluates each plane dot product
-    as a strict left fold of IEEE doubles — ``((0.0 + x₀·p₀) + x₁·p₁) + …``
-    — so accumulating one dimension at a time in float64 performs the exact
-    same sequence of IEEE operations and reproduces every sign bit,
-    including dots within rounding of zero (where a blocked matmul could
-    round the other way).  NULL/ragged vectors yield signature 0, matching
-    the native NULL-condition ``when().otherwise(0)`` fold.
+    """Arrow hyperplane signature, BIT-IDENTICAL to the native literal-tree
+    expression (a differential reference kept with the tests): the JVM
+    evaluates each plane dot product as a strict left fold of IEEE doubles
+    — ``((0.0 + x₀·p₀) + x₁·p₁) + …`` — so accumulating one dimension at a
+    time in float64 performs the exact same sequence of IEEE operations and
+    reproduces every sign bit, including dots within rounding of zero
+    (where a blocked matmul could round the other way).  NULL/ragged
+    vectors yield signature 0, matching the native NULL-condition
+    ``when().otherwise(0)`` fold.
 
     Why it exists (r8): the native expression tree is n_planes × dim literal
     nodes evaluated through interpreted higher-order functions — measured
@@ -194,26 +182,21 @@ def seq_dot_udf(dim: int):
 
 def hyperplane_signatures(
     df: DataFrame, planes: np.ndarray,
-    vec_col: str = "embedding", out_col: str = "_sig", impl: str = "auto",
+    vec_col: str = "embedding", out_col: str = "_sig",
 ) -> DataFrame:
-    """Signature column with implementation routing: the sequential-fold
-    Arrow kernel (bit-identical to the native expression — see
-    ``hyperplane_signature_seq_udf``) for small plane×dim products, Arrow
-    matmul above ``LSH_NATIVE_MAX_TERMS``.  ``impl="native"`` keeps the
-    pure-expression surface (differential-test reference).  The one routing
-    caveat is a dot product within float rounding of zero, where the
-    sequential fold and BLAS blocked summation could round to opposite
-    signs — for a FIXED config the routing (and thus the summation order)
-    is deterministic, so an index never mixes the two paths."""
-    if impl == "auto":
-        impl = "arrow_seq" if planes.size <= LSH_NATIVE_MAX_TERMS else "arrow"
-    if impl == "native":
-        col = hyperplane_signature_col(vec_col, planes)
-    elif impl == "arrow_seq":
-        col = hyperplane_signature_seq_udf(planes)(F.col(vec_col))
+    """Signature column, routed by the plane×dim product: the
+    sequential-fold Arrow kernel (bit-identical to the native expression —
+    see ``hyperplane_signature_seq_udf``) up to ``LSH_NATIVE_MAX_TERMS``,
+    the Arrow matmul above.  The one routing caveat is a dot product within
+    float rounding of zero, where the sequential fold and BLAS blocked
+    summation could round to opposite signs — for a FIXED config the
+    routing (and thus the summation order) is deterministic, so an index
+    never mixes the two paths."""
+    if planes.size <= LSH_NATIVE_MAX_TERMS:
+        sig = hyperplane_signature_seq_udf(planes)
     else:
-        col = hyperplane_signature_udf(planes)(F.col(vec_col))
-    return df.withColumn(out_col, col)
+        sig = hyperplane_signature_udf(planes)
+    return df.withColumn(out_col, sig(F.col(vec_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -318,12 +301,7 @@ def ivf_topk_partitioned(
     touches ~0.4% of the data instead of all of it."""
     probes = ivf_query_clusters(centroids, query_vec, n_probe)
     cands = spark.read.parquet(path).filter(F.col("ivf_cluster").isin(probes))
-    qlit = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = cands.select(
-        F.col(id_col),
-        F.round(cosine_sim_col(F.col(vec_col), qlit), 6).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return cosine_topk(cands, query_vec, k, vec_col, id_col)
 
 
 def ivf_topk(
@@ -346,22 +324,24 @@ def ivf_topk(
 
     assigned = ivf_assignments(df, centroids, vec_col)
     cands = assigned.filter(F.col("ivf_cluster").isin(probes))
-    qlit = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = cands.select(
-        F.col(id_col),
-        F.round(cosine_sim_col(F.col(vec_col), qlit), 6).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return cosine_topk(cands, query_vec, k, vec_col, id_col)
 
 
-def _band_split(sigs: DataFrame, id_col: str, n_planes: int, bands: int) -> DataFrame:
-    """Split a ``_sig`` column into ``bands`` bit-bands (shared by
-    ``embedding_banded_signatures`` and the near-dup self-join, so the
-    banding applied to a cached signature table is the same expression the
-    staged oracle table was built with)."""
+def embedding_banded_signatures(
+    df: DataFrame, planes: np.ndarray,
+    vec_col: str = "embedding", id_col: str = "vec_id",
+    bands: int = 4,
+) -> DataFrame:
+    """``(id, band, band_sig)``: the hyperplane signature split into
+    ``bands`` bit-bands (cosine-LSH banding: near-identical vectors agree on
+    at least one full band with high probability).  The near-dup search
+    bands through this function too, so the table staged for the DuckDB
+    replay oracle is the same expression."""
+    n_planes = planes.shape[0]
     assert n_planes % bands == 0
     width = n_planes // bands
     mask = (1 << width) - 1
+    sigs = hyperplane_signatures(df, planes, vec_col, "_sig")
     return sigs.select(
         F.col(id_col),
         F.posexplode(
@@ -373,24 +353,11 @@ def _band_split(sigs: DataFrame, id_col: str, n_planes: int, bands: int) -> Data
     )
 
 
-def embedding_banded_signatures(
-    df: DataFrame, planes: np.ndarray,
-    vec_col: str = "embedding", id_col: str = "vec_id",
-    bands: int = 4, impl: str = "auto",
-) -> DataFrame:
-    """``(id, band, band_sig)``: the hyperplane signature split into
-    ``bands`` bit-bands (cosine-LSH banding: near-identical vectors agree on
-    at least one full band with high probability).  Exposed so the driver
-    contract can stage it for the DuckDB replay oracle."""
-    sigs = hyperplane_signatures(df, planes, vec_col, "_sig", impl)
-    return _band_split(sigs, id_col, planes.shape[0], bands)
-
-
 def embedding_near_dup_pairs(
     df: DataFrame, threshold: float = 0.99,
     vec_col: str = "embedding", id_col: str = "vec_id",
     n_planes: int = 16, bands: int = 4, seed: int = 42,
-    max_bucket: int | None = 256, impl: str = "auto",
+    max_bucket: int | None = 256,
     dim: int | None = None,
 ) -> DataFrame:
     """Corpus-wide embedding-cosine near-dup pairs — the dedup-shaped ANN:
@@ -412,40 +379,10 @@ def embedding_near_dup_pairs(
             )
         dim = len(head[0][0])
     planes = make_planes(dim, n_planes, seed)
-    # cache the CAPPED banded table (id + two small ints per row — the
-    # narrow proxy; same idea as minhash_near_dups' signature cache): it is
-    # consumed twice (self-join left and right), and without the cache each
-    # side re-runs the signature kernel over the full vector column plus
-    # the banding explode and the cap window's shuffle (r8: the plan showed
-    # the whole subtree duplicated per join side)
-    sigs = hyperplane_signatures(df, planes, vec_col, "_sig", impl).select(
-        F.col(id_col), "_sig"
-    )
-    banded = _band_split(sigs, id_col, n_planes, bands)
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "band_sig")
-        banded = (
-            banded.withColumn("_n", F.count("*").over(w))
-            .filter(F.col("_n") <= max_bucket)
-            .drop("_n")
-        )
-    banded.cache()
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    # bucket_pairs caches the capped banded table, so the signature kernel
+    # runs once over the vector column, not once per self-join side
+    banded = embedding_banded_signatures(df, planes, vec_col, id_col, bands)
+    cands = bucket_pairs(banded, id_col, "band_sig", max_bucket)
     # norms ride on the per-VECTOR side tables (one sqrt(dot(v,v)) per vector)
     # instead of inside the per-PAIR cosine (two per candidate pair) — the
     # same expressions, factored to evaluate n times instead of 2·|pairs|
@@ -497,7 +434,6 @@ def ann_lsh_topk(
     df: DataFrame, query_vec: list[float], k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
     n_planes: int = 8, probe_radius: int = 2, seed: int = 42,
-    impl: str = "auto",
 ) -> DataFrame:
     """ANN: restrict the exact rescoring to vectors near the query's bucket.
 
@@ -511,11 +447,6 @@ def ann_lsh_topk(
     """
     planes = make_planes(len(query_vec), n_planes, seed)
     probe_sigs = lsh_probe_signatures(planes, query_vec, probe_radius)
-    with_sig = hyperplane_signatures(df, planes, vec_col, "_sig", impl)
+    with_sig = hyperplane_signatures(df, planes, vec_col, "_sig")
     cands = with_sig.filter(F.col("_sig").isin(probe_sigs))
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = cands.select(
-        F.col(id_col),
-        F.round(cosine_sim_col(F.col(vec_col), q), 6).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return cosine_topk(cands, query_vec, k, vec_col, id_col)

@@ -10,11 +10,15 @@ differential-test references for the production path in
 * ``with_prev_turn`` — the duplicate flag as a self-join on
   ``(conv_id, turn_idx - 1)``, which needs no conversation layout;
 * ``with_decision_udf`` — the keep/drop decision through the ``decide()``
-  kernel in a pandas UDF, vs the native ``decision_cols`` expressions.
+  kernel in a pandas UDF, vs the native ``decision_cols`` expressions;
+* ``hyperplane_signature_col`` — the hyperplane-LSH signature as a native
+  literal-tree expression, vs the Arrow kernels behind
+  ``similarity.hyperplane_signatures``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -22,6 +26,7 @@ from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 from bytefreq_spark.masks import mask_col
 from bytefreq_spark.quality import LU_KEY_LEN, LU_KEY_SRC_CHARS, decide
+from bytefreq_spark.similarity import _dot
 
 DECISION_SCHEMA = StructType([
     StructField("keep", BooleanType()),
@@ -94,3 +99,20 @@ def with_decision_udf(df: DataFrame) -> DataFrame:
         F.col("lu_total"), F.col("is_dup"), F.col("role"),
     )
     return df.withColumn("_d", dec).select("*", "_d.*").drop("_d")
+
+
+def hyperplane_signature_col(vec_col: str, planes: np.ndarray) -> F.Column:
+    """Sign-bit signature of a vector against fixed random hyperplanes as
+    native expressions: each plane is a literal array and each dot product a
+    ``zip_with``/``aggregate`` fold (n_planes × dim literal nodes)."""
+    bits = []
+    for i, p in enumerate(planes):
+        lit = F.array(*[F.lit(float(x)) for x in p])
+        bits.append(
+            F.when(_dot(F.col(vec_col), lit) >= 0,
+                   F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
+        )
+    out = bits[0]
+    for b in bits[1:]:
+        out = out.bitwiseOR(b)
+    return out

@@ -128,34 +128,66 @@ def test_simhash_exact_and_near_dups(spark, docs):
     assert close >= 0.8, close
 
 
-def test_lsh_hot_bucket_cap(spark):
-    """A planted boilerplate cluster must not produce quadratic pairs; the
-    dropped buckets surface in the lsh_hot_buckets side table; genuine small
-    near-dup groups still pair up."""
+def _flood_frame(spark, family):
+    """A 200-member boilerplate flood (ids 0-199, one identical item), a
+    planted near-dup pair (1000, 1001) and 20 unrelated items."""
+    import numpy as np
+
+    if family == "embedding":
+        rng = np.random.RandomState(17)
+        flood = rng.standard_normal(16)
+        base = rng.standard_normal(16)
+        rows = [(i, flood) for i in range(200)]
+        rows += [(1000, base), (1001, base + rng.standard_normal(16) * 0.01)]
+        rows += [(2000 + i, rng.standard_normal(16)) for i in range(20)]
+        return spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in rows],
+            "vec_id long, embedding array<float>")
+    base = " ".join(f"token{i}" for i in range(40))
+    rows = [(i, "click here to unsubscribe from this mailing list today")
+            for i in range(200)]
+    rows += [(1000, base), (1001, base.replace("token7", "changed"))]
+    rows += [(2000 + i, f"wholly unrelated document number {i} with words "
+                        f"alpha{i} beta{i} gamma{i}") for i in range(20)]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def _family_pairs(df, family, max_bucket):
+    """Candidate (minhash) or verified (simhash, embedding) pairs of one
+    near-dup family; all three go through ``dedup.bucket_pairs``."""
+    from bytefreq_spark.dedup import simhash_near_dup_pairs
+    from bytefreq_spark.similarity import embedding_near_dup_pairs
+
+    if family == "minhash":
+        return lsh_candidate_pairs(minhash_signatures(df), max_bucket=max_bucket)
+    if family == "simhash":
+        return simhash_near_dup_pairs(df, max_hamming=12, bands=16,
+                                      max_bucket=max_bucket)
+    return embedding_near_dup_pairs(df, threshold=0.99, max_bucket=max_bucket)
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "embedding"])
+def test_lsh_hot_bucket_cap(spark, family):
+    """A planted boilerplate cluster must not produce quadratic pairs in any
+    near-dup family; genuine small near-dup groups still pair up; for
+    minhash the dropped buckets surface in the lsh_hot_buckets side table."""
     from bytefreq_spark.dedup import lsh_hot_buckets
 
-    boiler = [(i, "click here to unsubscribe from this mailing list today")
-              for i in range(200)]
-    pair = [(1000, "the quick brown fox jumps over the lazy sleeping dog"),
-            (1001, "the quick brown fox jumps over the lazy sleeping dog dup")]
-    distinct = [(2000 + i, f"wholly unrelated document number {i} with words "
-                           f"alpha{i} beta{i} gamma{i}") for i in range(20)]
-    df = spark.createDataFrame(boiler + pair + distinct, ["doc_id", "text"])
-    sigs = minhash_signatures(df).cache()
-
-    capped = lsh_candidate_pairs(sigs, max_bucket=64).collect()
+    df = _flood_frame(spark, family)
+    capped = _family_pairs(df, family, 64).collect()
     capped_pairs = {(r["id_a"], r["id_b"]) for r in capped}
     # no pair from the 200-member boilerplate class (would be 19,900 pairs)
     assert not any(a < 200 and b < 200 for a, b in capped_pairs), len(capped_pairs)
     # the genuine near-dup pair survives the cap
     assert (1000, 1001) in capped_pairs
 
-    uncapped = lsh_candidate_pairs(sigs, max_bucket=None)
-    assert uncapped.count() > 19000  # what the cap is protecting against
+    uncapped = _family_pairs(df, family, None)
+    assert uncapped.count() >= 19900  # what the cap is protecting against
 
-    hot = lsh_hot_buckets(sigs, max_bucket=64).collect()
-    assert hot and all(r["n"] == 200 for r in hot)
-    assert all(r["rep_id"] < 200 for r in hot)
+    if family == "minhash":
+        hot = lsh_hot_buckets(minhash_signatures(df), max_bucket=64).collect()
+        assert hot and all(r["n"] == 200 for r in hot)
+        assert all(r["rep_id"] < 200 for r in hot)
 
 
 def test_simhash_hamming_near_dup_pairs(spark):
@@ -397,18 +429,20 @@ def test_ivf_partitioned_pruning(spark, tmp_path):
 
 
 def test_lsh_signature_native_equals_arrow(spark):
-    """All three signature implementations must agree at every dim: the
-    Arrow matmul (production dims), the Arrow sequential-fold kernel (small
-    dims — required BIT-identical to the native expression, its left-fold
-    IEEE order reproduced exactly), and the native expression reference.
-    Auto-routing never plans the native literal tree anymore (r8: it was a
-    ~5k-node interpreted expression re-evaluated per consumer) — small dims
-    take the seq kernel, large dims the matmul; both are ArrowEvalPython."""
+    """All three signature kernels must agree at every dim: the Arrow
+    matmul (production dims), the Arrow sequential-fold kernel (small dims —
+    required BIT-identical to the native expression, its left-fold IEEE
+    order reproduced exactly), and the native literal-tree reference.
+    Routing never plans the literal tree (r8: it was a ~5k-node interpreted
+    expression re-evaluated per consumer) — small dims take the seq kernel,
+    large dims the matmul; both are ArrowEvalPython."""
     import numpy as np
 
     from bytefreq_spark.similarity import (
-        LSH_NATIVE_MAX_TERMS, hyperplane_signatures, make_planes,
+        LSH_NATIVE_MAX_TERMS, hyperplane_signature_seq_udf,
+        hyperplane_signature_udf, hyperplane_signatures, make_planes,
     )
+    from tests.reference_paths import hyperplane_signature_col
 
     rng = np.random.RandomState(11)
     for dim, n_planes in ((16, 8), (768, 12)):
@@ -416,20 +450,22 @@ def test_lsh_signature_native_equals_arrow(spark):
                 for i in range(30)]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         planes = make_planes(dim, n_planes, seed=5)
-        nat = {r["vec_id"]: r["_sig"] for r in
-               hyperplane_signatures(df, planes, impl="native").collect()}
-        arw = {r["vec_id"]: r["_sig"] for r in
-               hyperplane_signatures(df, planes, impl="arrow").collect()}
-        seq = {r["vec_id"]: r["_sig"] for r in
-               hyperplane_signatures(df, planes, impl="arrow_seq").collect()}
-        assert nat == arw, (dim, n_planes)
-        assert nat == seq, (dim, n_planes)
-        # auto routes by plane×dim product: seq kernel below the term cap,
+        sigs = df.select(
+            "vec_id",
+            hyperplane_signature_col("embedding", planes).alias("nat"),
+            hyperplane_signature_udf(planes)("embedding").alias("arw"),
+            hyperplane_signature_seq_udf(planes)("embedding").alias("seq"),
+        ).collect()
+        nat = {r["vec_id"]: r["nat"] for r in sigs}
+        assert nat == {r["vec_id"]: r["arw"] for r in sigs}, (dim, n_planes)
+        assert nat == {r["vec_id"]: r["seq"] for r in sigs}, (dim, n_planes)
+        # routing by plane×dim product: seq kernel below the term cap,
         # matmul above — both are Arrow stages (never the literal tree)
-        auto = hyperplane_signatures(df, planes, impl="auto")
-        plan = auto._jdf.queryExecution().executedPlan().toString()
+        routed = hyperplane_signatures(df, planes)
+        plan = routed._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" in plan
-        assert LSH_NATIVE_MAX_TERMS > 0  # routing constant still exported
+        assert {r["vec_id"]: r["_sig"] for r in routed.collect()} == nat
+        assert (planes.size <= LSH_NATIVE_MAX_TERMS) == (dim == 16)
 
 
 def test_seq_dot_udf_equals_expression(spark):
@@ -562,6 +598,55 @@ def test_embedding_near_dup_pairs(spark):
     assert all(c >= 0.99 for c in got.values())
     # random 16-dim pairs essentially never hit 0.99 → no junk pairs
     assert len(set(got) - planted) <= 2
+
+
+def _plan_nodes(node, seen_caches):
+    """Every node of an executed physical plan, each cached plan walked once
+    (however many scans read it) and reused exchanges not re-walked."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan(), seen_caches)
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan(), seen_caches)
+        return
+    yield node
+    if name == "InMemoryTableScanExec":
+        cache = node.relation().cacheBuilder()
+        if not any(cache.equals(c) for c in seen_caches):
+            seen_caches.append(cache)
+            yield from _plan_nodes(node.relation().cachedPlan(), seen_caches)
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i), seen_caches)
+
+
+def test_embedding_near_dup_signature_kernel_runs_once(spark):
+    """The self-join reads the banded table twice; the signature kernel
+    over the vector column must still be planned once, not once per join
+    side — which is what bucket_pairs' cache of the capped banded table
+    buys.  Exchange reuse is switched off for the query: on a small input
+    AQE would otherwise reuse the band shuffle and hide a missing cache."""
+    import numpy as np
+
+    from bytefreq_spark.similarity import embedding_near_dup_pairs
+
+    rng = np.random.RandomState(5)
+    rows = [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(60)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    reuse = spark.conf.get("spark.sql.exchange.reuse")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        out = embedding_near_dup_pairs(df, threshold=0.0, dim=16)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", reuse)
+    nodes = list(_plan_nodes(plan, []))
+    arrow = [n.simpleString(10) for n in nodes
+             if n.getClass().getSimpleName() == "ArrowEvalPythonExec"]
+    assert sum("[sig(" in a for a in arrow) == 1, arrow
+    assert any("[dot(" in a for a in arrow), arrow  # the rescore kernel
 
 
 def test_paragraph_dedup(spark):

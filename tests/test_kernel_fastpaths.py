@@ -456,21 +456,6 @@ def test_minhash_empty_batch():
     assert _minhash_batch(pd.Series([], dtype=object), a, b, 5) == []
 
 
-def test_fasttext_gate_is_honest():
-    """The named-engine path raises a clear NotImplementedError when the
-    library is absent (this container), mirroring the Excel/codec gates."""
-    import importlib.util
-
-    import pytest
-
-    from bytefreq_spark.langid import detect_language_fasttext
-
-    if importlib.util.find_spec("fasttext") is not None:
-        pytest.skip("fasttext present; gate not exercisable")
-    with pytest.raises(NotImplementedError):
-        detect_language_fasttext(pd.Series(["hello"]), "/nonexistent/lid.bin")
-
-
 def test_gen_golden_hashes():
     """r8 optimized the generator's hot path (the per-turn kind draw now
     precomputes the cdf RandomState.choice rebuilt per call, and sentence
