@@ -62,36 +62,12 @@ def _hash_params(n_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
 _POLY_BASE = np.int64(1099511628211)
 
 
-def _minhash_batch_naive(
-    texts: pd.Series, a_params: np.ndarray, b_params: np.ndarray, shingle: int,
-) -> list[np.ndarray]:
-    """Row-at-a-time reference kernel — the differential-test oracle for
-    ``_minhash_batch`` (same hash family, straightforward formulation)."""
-    out = []
-    for t in texts.fillna(""):
-        if len(t) < shingle:
-            codes = np.frombuffer((t or "\x00").encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-            sh = np.array([codes.sum()], dtype=np.int64)
-        else:
-            codes = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-            # rolling polynomial hash over windows of length `shingle`
-            win = np.lib.stride_tricks.sliding_window_view(codes, shingle)
-            pows = np.power(_POLY_BASE, np.arange(shingle, dtype=np.int64),
-                            dtype=np.int64)  # wraps mod 2^64: fine, deterministic
-            sh = (win * pows).sum(axis=1)
-        x = sh[None, :].astype(np.uint64)
-        av = a_params[:, None].astype(np.uint64)
-        bv = b_params[:, None].astype(np.uint64)
-        hv = av * x + bv  # multiply-shift family: wraps mod 2^64
-        out.append(hv.min(axis=1).view(np.int64).copy())
-    return out
-
-
 def _minhash_batch(
     texts: pd.Series, a_params: np.ndarray, b_params: np.ndarray, shingle: int,
 ) -> list[np.ndarray]:
-    """Batch-flattened minhash kernel — bit-identical to the naive loop
-    (test_kernel_fastpaths differential), no per-row Python in the hot path.
+    """Batch-flattened minhash kernel — bit-identical to the row-at-a-time
+    ``_minhash_batch_naive`` (tests/reference_paths.py; test_kernel_fastpaths
+    differential), no per-row Python in the hot path.
 
     One utf-32 buffer for the whole batch (masks.flat_codes pattern): the
     shingle polynomial hash is ``shingle`` shifted adds over the flat buffer,

@@ -26,9 +26,15 @@ operations are C-level pandas/numpy):
 
 Returns ISO-639-1 codes; ``und`` for empty/non-linguistic text.
 
-``detect_language_naive`` implements the same spec per-row with re.findall
-and set membership; the differential test asserts fast == naive so the
-vectorized kernel can never drift.
+The decision is one cascade over a per-row feature dict (``_features``):
+the script tier, then the Latin argmax.  ``detect_language`` runs it on
+the arrays directly; ``decide_from_features`` runs it over the columns of
+``langid_feature_frame``, the staged input the ``langid_docs`` oracle
+replays in DuckDB.  Marker scores are computed only for the rows the script
+tier leaves undecided.  ``detect_language_naive`` in
+``tests/reference_paths.py`` implements the same spec per-row with
+re.findall and set membership; the differential tests assert fast == naive
+so the vectorized kernel can never drift.
 
 This mirrors bytefreq's mask philosophy: cheap character-class evidence first
 (the HU mask already *is* a script detector), expensive modelling never.
@@ -319,46 +325,70 @@ def _latin_scores(sub: pd.Series) -> np.ndarray:
     return scores
 
 
+def _script_tier(f: dict[str, np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """Min-chars gate, then the script thresholds in ``SCRIPT_RANGES`` order
+    (first script over its threshold wins) → (labels, decided)."""
+    n_chars = f["n_chars"]
+    out = np.full(len(n_chars), "und", dtype=object)
+    decided = n_chars < MIN_CHARS
+    nonascii = ~f["is_ascii"]
+    for lang in SCRIPT_RANGES:
+        num, den = script_threshold(lang)
+        cnt = f[f"{lang}_cnt"]
+        fire = (~decided) & nonascii & (cnt * den >= n_chars * num)
+        out[fire] = lang
+        decided |= fire
+    return out, decided
+
+
+def _latin_argmax(f: dict[str, np.ndarray], out: np.ndarray,
+                  decided: np.ndarray) -> np.ndarray:
+    """Integer-normalized marker argmax for the undecided rows (first max
+    wins → LATIN_ORDER tie-break); rows with no marker hit stay ``und``."""
+    scores = np.stack([f[f"{lang}_score"] for lang in LATIN_ORDER])
+    norm = scores // np.maximum(f["n_chars"], 1)
+    best = np.argmax(norm, axis=0)
+    latin = (~decided) & (norm[best, np.arange(len(out))] > 0)
+    out[latin] = np.array(LATIN_ORDER, dtype=object)[best[latin]]
+    return out
+
+
+def _decide(f: dict[str, np.ndarray]) -> np.ndarray:
+    return _latin_argmax(f, *_script_tier(f))
+
+
+def _features(texts: pd.Series) -> dict[str, np.ndarray]:
+    """The ``LANGID_FEATURE_COLS`` arrays of a batch: capped char count,
+    ascii flag, per-script char counts (0 for pure-ASCII rows — script
+    characters are non-ASCII by construction) and raw ×1000 Latin marker
+    scores, computed only for the rows the script tier leaves undecided
+    (0 elsewhere)."""
+    t = texts.fillna("").str.slice(0, CAP_CHARS)
+    n = len(t)
+    f: dict[str, np.ndarray] = {
+        "n_chars": t.str.len().to_numpy(dtype=np.int64),
+        "is_ascii": t.map(str.isascii).to_numpy(dtype=bool),
+    }
+    nonascii_idx = np.flatnonzero(~f["is_ascii"])
+    for lang, sub in _script_counts(t.iloc[nonascii_idx]).items():
+        cnt = np.zeros(n, dtype=np.int64)
+        cnt[nonascii_idx] = sub
+        f[f"{lang}_cnt"] = cnt
+    und_idx = np.flatnonzero(~_script_tier(f)[1])
+    scores = np.zeros((len(LATIN_ORDER), n), dtype=np.int64)
+    scores[:, und_idx] = _latin_scores(t.iloc[und_idx])
+    for i, lang in enumerate(LATIN_ORDER):
+        f[f"{lang}_score"] = scores[i]
+    return f
+
+
 def detect_language(texts: pd.Series) -> pd.Series:
     """Series[str] → Series[str] of language codes. Fully vectorized.
 
     Only the first CAP_CHARS characters are examined (frozen contract shared
     with the reference pipeline)."""
-    t = texts.fillna("").str.slice(0, CAP_CHARS)
-    n = len(t)
-    n_chars = t.str.len().to_numpy(dtype=np.int64)
-
-    out = np.full(n, "und", dtype=object)
-    decided = n_chars < MIN_CHARS
-
-    # Script tier, non-ASCII rows only — first script over threshold wins
-    ascii_mask = t.map(str.isascii).to_numpy(dtype=bool)
-    nonascii_idx = np.flatnonzero(~ascii_mask)
-    if len(nonascii_idx):
-        sub = t.iloc[nonascii_idx]
-        sub_chars = n_chars[nonascii_idx]
-        sub_decided = decided[nonascii_idx]
-        counts = _script_counts(sub)
-        for lang in SCRIPT_RANGES:
-            num, den = script_threshold(lang)
-            cnt = counts[lang]
-            fire = (~sub_decided) & (cnt * den >= sub_chars * num)
-            out[nonascii_idx[fire]] = lang
-            sub_decided |= fire
-        decided[nonascii_idx] = sub_decided
-
-    # Latin tier — marker hits per 1k chars, argmax, only undecided rows
-    und_idx = np.flatnonzero(~decided)
-    if len(und_idx):
-        sub = t.iloc[und_idx]
-        norm = _latin_scores(sub) // np.maximum(n_chars[und_idx], 1)
-        best = np.argmax(norm, axis=0)  # first max wins → LATIN_ORDER tie-break
-        best_score = norm[best, np.arange(len(und_idx))]
-        latin = best_score > 0
-        out[und_idx[latin]] = np.array(LATIN_ORDER, dtype=object)[best[latin]]
-
-    # texts with letters but no markers: keep 'und'
-    return pd.Series(out, index=texts.index, dtype=object)
+    return pd.Series(_decide(_features(texts)), index=texts.index,
+                     dtype=object)
 
 
 LANGID_FEATURE_COLS = (
@@ -371,111 +401,23 @@ LANGID_FEATURE_COLS = (
 def langid_feature_frame(texts: pd.Series) -> pd.DataFrame:
     """Per-row feature matrix from which the langid decision is a pure
     replay: capped char count, ascii flag, per-script char counts (0 for
-    pure-ASCII rows — script characters are non-ASCII by construction),
-    raw ×1000 Latin marker scores for every row.
+    pure-ASCII rows) and raw ×1000 Latin marker scores.  Scores are
+    computed only for rows the script tier leaves undecided: a row decided
+    by the min-chars gate or by a script threshold carries ``*_score = 0``
+    (the decision, here and in the SQL replay, never reads them).
 
     ``decide_from_features(langid_feature_frame(t)) == detect_language(t)``
     is differential-tested; the split exists so the decision layer can be
     replayed by an independent SQL engine over staged features (the
     ``langid_docs`` oracle)."""
-    t = texts.fillna("").str.slice(0, CAP_CHARS)
-    n = len(t)
-    n_chars = t.str.len().to_numpy(dtype=np.int64)
-    ascii_mask = (
-        t.map(str.isascii).to_numpy(dtype=bool)
-        if n else np.zeros(0, dtype=bool)
-    )
-    feats: dict[str, np.ndarray] = {"n_chars": n_chars, "is_ascii": ascii_mask}
-    nonascii_idx = np.flatnonzero(~ascii_mask)
-    sub_counts = (
-        _script_counts(t.iloc[nonascii_idx]) if len(nonascii_idx) else None
-    )
-    for lang in SCRIPT_RANGES:
-        cnt = np.zeros(n, dtype=np.int64)
-        if sub_counts is not None:
-            cnt[nonascii_idx] = sub_counts[lang]
-        feats[f"{lang}_cnt"] = cnt
-    scores = (
-        _latin_scores(t) if n
-        else np.zeros((len(LATIN_ORDER), 0), dtype=np.int64)
-    )
-    for i, lang in enumerate(LATIN_ORDER):
-        feats[f"{lang}_score"] = scores[i]
-    return pd.DataFrame(feats, index=texts.index)[LANGID_FEATURE_COLS]
+    return pd.DataFrame(_features(texts), index=texts.index,
+                        columns=LANGID_FEATURE_COLS)
 
 
 def decide_from_features(feats: pd.DataFrame) -> pd.Series:
     """The langid decision layer alone, over a ``langid_feature_frame``:
-    min-chars gate → script-threshold cascade in tier order → integer-
-    normalized marker argmax (first max wins = LATIN_ORDER tie-break).
-    Matches ``detect_language`` exactly (differential-tested); the SQL
-    oracle replays this same cascade in DuckDB."""
-    n = len(feats)
-    n_chars = feats["n_chars"].to_numpy(dtype=np.int64)
-    out = np.full(n, "und", dtype=object)
-    decided = n_chars < MIN_CHARS
-    nonascii = ~feats["is_ascii"].to_numpy(dtype=bool)
-    for lang in SCRIPT_PATTERNS:
-        num, den = script_threshold(lang)
-        cnt = feats[f"{lang}_cnt"].to_numpy(dtype=np.int64)
-        fire = (~decided) & nonascii & (cnt * den >= n_chars * num)
-        out[fire] = lang
-        decided |= fire
-    scores = np.stack(
-        [feats[f"{lang}_score"].to_numpy(dtype=np.int64)
-         for lang in LATIN_ORDER]
-    ) if n else np.zeros((len(LATIN_ORDER), 0), dtype=np.int64)
-    norm = scores // np.maximum(n_chars, 1)
-    best = np.argmax(norm, axis=0)
-    best_score = norm[best, np.arange(n)]
-    latin = (~decided) & (best_score > 0)
-    out[latin] = np.array(LATIN_ORDER, dtype=object)[best[latin]]
-    return pd.Series(out, index=feats.index, dtype=object)
-
-
-def detect_language_naive(texts: pd.Series) -> pd.Series:
-    """Naive per-row formulation of the SAME spec as ``detect_language``
-    (regex script counts + findall-tokenize + per-token ``str.lower()`` set
-    membership).  Kept as the differential-test reference so the vectorized
-    kernel can never drift.
-
-    History: the original naive used ``(?i)\\b<word>\\b`` alternation counts
-    and the original fast lowered the text BEFORE tokenizing; the two agreed
-    everywhere except around U+0130 ('İ'), where regex case folding ('İ'
-    (?i)-matches 'i') and lower-then-split each invent different tokens.
-    r6 froze the token spec (tokenize original, compare token.lower()) and
-    aligned both implementations to it — see the spec note above
-    ``MIN_CHARS`` and test_langid_dotted_I_spec."""
-    import re
-
-    t = texts.fillna("").str.slice(0, CAP_CHARS)
-    n = len(t)
-    n_chars = t.str.len().to_numpy(dtype=np.int64)
-
-    out = np.full(n, "und", dtype=object)
-    decided = n_chars < MIN_CHARS
-
-    for lang, pat in SCRIPT_PATTERNS.items():
-        num, den = script_threshold(lang)
-        cnt = t.str.count(pat).to_numpy(dtype=np.int64)
-        fire = (~decided) & (cnt * den >= n_chars * num)
-        out[fire] = lang
-        decided |= fire
-
-    word_re = re.compile(r"\w+")
-    marker_sets = {
-        lang: set(words) for lang, words in LATIN_MARKER_WORDS.items()
-    }
-    scores = np.zeros((len(LATIN_ORDER), n), dtype=np.int64)
-    for r, row in enumerate(t):
-        lows = [tok.lower() for tok in word_re.findall(row)]
-        for i, lang in enumerate(LATIN_ORDER):
-            mset = marker_sets[lang]
-            scores[i, r] = sum(1 for w_ in lows if w_ in mset) * 1000
-    norm = scores // np.maximum(n_chars, 1)
-    best = np.argmax(norm, axis=0)
-    best_score = norm[best, np.arange(n)]
-    latin = (~decided) & (best_score > 0)
-    out[latin] = np.array(LATIN_ORDER, dtype=object)[best[latin]]
-
-    return pd.Series(out, index=texts.index, dtype=object)
+    the same ``_script_tier`` → ``_latin_argmax`` cascade ``detect_language``
+    runs.  The SQL oracle replays this cascade in DuckDB."""
+    f = {c: feats[c].to_numpy(dtype=bool if c == "is_ascii" else np.int64)
+         for c in LANGID_FEATURE_COLS}
+    return pd.Series(_decide(f), index=feats.index, dtype=object)

@@ -245,16 +245,55 @@ def flat_codes(s: pd.Series):
     """(codes, starts, lens) flat-codepoint view of a string Series.
 
     One buffer for the whole batch: utf-32-le encode gives exactly one
-    uint32 per Python char (astral included, no surrogates), so per-row
-    char-class work becomes numpy slicing with ``starts``/``lens``."""
+    uint32 per Python char (astral included), so per-row char-class work
+    becomes numpy slicing with ``starts``/``lens``.  ``surrogatepass`` keeps
+    a lone surrogate (legal in a Python ``str``) as its own code unit
+    instead of raising; ``_collapse_runs`` decodes with the same handler."""
     import numpy as np
 
     joined = "".join(s)
-    codes = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
+    codes = np.frombuffer(
+        joined.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
     lens = s.str.len().to_numpy(np.int64)
     starts = np.zeros(len(s), np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
     return codes, starts, lens
+
+
+def _collapse_runs(codes, starts, lens, index, key_len=None) -> pd.Series:
+    """Run-length collapse of every row of a flat code buffer, decoded back
+    to one string per row (empty → ``_``); with ``key_len``, only the first
+    ``key_len`` surviving codes of each row are decoded."""
+    import numpy as np
+
+    n = len(starts)
+    if len(codes) == 0:
+        return pd.Series(["_"] * n, index=index, dtype=object)
+    keep = np.empty(len(codes), dtype=bool)
+    keep[0] = True
+    np.not_equal(codes[1:], codes[:-1], out=keep[1:])
+    keep[starts[starts < len(codes)]] = True  # row starts always survive
+    cum = np.concatenate(([0], np.cumsum(keep)))
+    row_kept = cum[starts + lens] - cum[starts]
+    if key_len is None:
+        sel_len = row_kept
+        out_codes = codes[keep]
+    else:
+        sel_len = np.minimum(row_kept, key_len)
+        total = int(sel_len.sum())
+        kpos = np.flatnonzero(keep)
+        # segmented arange: the first sel_len[r] kept positions of each row
+        out_starts = np.zeros(n, np.int64)
+        np.cumsum(sel_len[:-1], out=out_starts[1:])
+        seg_off = (np.arange(total, dtype=np.int64)
+                   - np.repeat(out_starts, sel_len))
+        out_codes = codes[kpos[np.repeat(cum[starts], sel_len) + seg_off]]
+    raw = out_codes.astype("<u4", copy=False).tobytes()
+    big = raw.decode("utf-32-le", "surrogatepass")
+    ends = np.cumsum(sel_len)
+    begins = ends - sel_len
+    out = [big[a:b] if b > a else "_" for a, b in zip(begins, ends)]
+    return pd.Series(out, index=index, dtype=object)
 
 
 def collapse_runs_series(s: pd.Series) -> pd.Series:
@@ -262,22 +301,7 @@ def collapse_runs_series(s: pd.Series) -> pd.Series:
     empty → ``_`` — the L-grain collapse as positional numpy (no
     backreference regex; ~7× on long batches).  Differentially tested
     against the regex formulation (test_masks)."""
-    import numpy as np
-
-    codes, starts, lens = flat_codes(s)
-    if len(codes) == 0:
-        return pd.Series(["_"] * len(s), index=s.index, dtype=object)
-    keep = np.empty(len(codes), dtype=bool)
-    keep[0] = True
-    np.not_equal(codes[1:], codes[:-1], out=keep[1:])
-    keep[starts[starts < len(codes)]] = True  # row starts always survive
-    cum = np.concatenate(([0], np.cumsum(keep)))
-    new_lens = cum[starts + lens] - cum[starts]
-    big = codes[keep].tobytes().decode("utf-32-le")
-    ends = np.cumsum(new_lens)
-    begins = ends - new_lens
-    out = [big[a:b] if b > a else "_" for a, b in zip(begins, ends)]
-    return pd.Series(out, index=s.index, dtype=object)
+    return _collapse_runs(*flat_codes(s), s.index)
 
 
 _HU_MASK_LUT: "np.ndarray | None" = None
@@ -328,34 +352,10 @@ def lu_mask_key_series(s: pd.Series, src_chars: int, key_len: int) -> pd.Series:
     (no intermediate translated strings + second flatten), and only the
     ≤ key_len surviving chars per row are decoded back to Python strings.
     Differential-tested against the unfused formulation (test_masks)."""
-    import numpy as np
-
     t = s.fillna("").str.slice(0, src_chars)
-    n = len(t)
     codes, starts, lens = flat_codes(t)
-    if len(codes) == 0:
-        return pd.Series(["_"] * n, index=s.index, dtype=object)
-    mapped = _hu_mask_codes(codes)
-    keep = np.empty(len(mapped), dtype=bool)
-    keep[0] = True
-    np.not_equal(mapped[1:], mapped[:-1], out=keep[1:])
-    keep[starts[starts < len(mapped)]] = True  # row starts always survive
-    cum = np.concatenate(([0], np.cumsum(keep)))
-    row_kept = cum[starts + lens] - cum[starts]
-    sel_len = np.minimum(row_kept, key_len)
-    total = int(sel_len.sum())
-    kpos = np.flatnonzero(keep)
-    # segmented arange: the first sel_len[r] kept positions of each row
-    cumk = cum[starts]
-    out_starts = np.zeros(n, np.int64)
-    np.cumsum(sel_len[:-1], out=out_starts[1:])
-    seg_off = np.arange(total, dtype=np.int64) - np.repeat(out_starts, sel_len)
-    out_codes = mapped[kpos[np.repeat(cumk, sel_len) + seg_off]]
-    big = out_codes.astype("<u4").tobytes().decode("utf-32-le")
-    ends = np.cumsum(sel_len)
-    begins = ends - sel_len
-    out = [big[a:b] if b > a else "_" for a, b in zip(begins, ends)]
-    return pd.Series(out, index=s.index, dtype=object)
+    return _collapse_runs(_hu_mask_codes(codes), starts, lens, s.index,
+                          key_len)
 
 
 def mask_series(s: pd.Series, grain: str = "LU") -> pd.Series:

@@ -2,10 +2,10 @@
 
 A character-bigram language model with add-one smoothing, trained at import
 time on a small embedded seed corpus (deterministic — no I/O, no randomness).
-Scoring is fully vectorized: the whole Arrow batch is joined into one
-codepoint array, per-pair log-probs are gathered from the 129×129 table, and
-per-row means come from ``np.add.reduceat`` over row offsets — zero per-row
-Python.
+Scoring is fully vectorized: the whole Arrow batch becomes one codepoint
+array (``masks.flat_codes``), per-pair log-probs are gathered from the
+129×129 table, and per-row means come from the shared segmented reduce
+(``quality._rowwise_sum``) over row offsets — zero per-row Python.
 
 Perplexity = exp(−mean log₂... we use natural log: exp(−mean ln p)).  Gibberish
 (uniform byte soup) scores ≫ natural language; the quality filter thresholds
@@ -62,40 +62,25 @@ def perplexity(texts: pd.Series) -> pd.Series:
 
     Only the first CAP_CHARS characters are scored (frozen contract shared
     with the reference pipeline)."""
+    from .masks import flat_codes
+    from .quality import _rowwise_sum
+
     t = texts.fillna("").str.slice(0, CAP_CHARS).str.lower()
-    lengths = t.str.len().to_numpy(dtype=np.int64)
-    joined = "".join(t.tolist())
-    if len(joined) == 0:
-        return pd.Series(np.zeros(len(t)), index=texts.index)
-    codes = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
+    codes, starts, lens = flat_codes(t)
     codes = np.minimum(codes, _VOCAB).astype(np.int64)
-
-    pair_lp = np.zeros(max(len(codes) - 1, 0), dtype=np.float64)
-    if len(codes) > 1:
-        pair_lp = _LOGP[codes[:-1], codes[1:]]
-
-    # row boundaries in the joined array
-    ends = np.cumsum(lengths)
-    starts = ends - lengths
-    # zero out pairs that straddle row boundaries (pair i = codes[i],codes[i+1])
-    boundary = ends[:-1] - 1  # last pair-index inside each row except final row
-    valid = np.ones_like(pair_lp, dtype=bool)
-    b = boundary[(boundary >= 0) & (boundary < len(pair_lp))]
-    valid[b] = False
-
-    lp = np.where(valid, pair_lp, 0.0)
-    # per-row sum over pair indices [starts[i], ends[i]-1)
-    n_pairs = np.maximum(lengths - 1, 0)
+    # pair i = (codes[i], codes[i+1]); zero the one pair per row that
+    # straddles into the next row
+    lp = _LOGP[codes[:-1], codes[1:]]
+    ends = starts + lens
+    lp[ends[(lens > 0) & (ends <= len(lp))] - 1] = 0.0
+    n_pairs = np.maximum(lens - 1, 0)
+    # cut only at rows that own a pair: a 1-char row's zeroed straddle pair
+    # then stays in the previous row's segment, which keeps numpy's pairwise
+    # summation order — and so every value — bit-identical to the frozen
+    # scorer (tests/test_goldens.py pins the digest)
+    nz = n_pairs > 0
     sums = np.zeros(len(t), dtype=np.float64)
-    nonzero = n_pairs > 0
-    if nonzero.any():
-        idx = starts[nonzero]
-        # reduceat needs monotonically increasing cut points within range
-        cuts = np.clip(idx, 0, max(len(lp) - 1, 0))
-        seg = np.add.reduceat(lp, cuts) if len(lp) else np.zeros(len(cuts))
-        # reduceat sums to the next cut; rows are contiguous so segment ==
-        # row-pairs plus the zeroed straddle pair — correct by construction
-        sums[nonzero] = seg
-    mean_lp = np.where(n_pairs > 0, sums / np.maximum(n_pairs, 1), 0.0)
-    ppl = np.where(n_pairs > 0, np.exp(-mean_lp), 0.0)
+    sums[nz] = _rowwise_sum(lp, starts[nz], n_pairs[nz])
+    mean_lp = np.where(nz, sums / np.maximum(n_pairs, 1), 0.0)
+    ppl = np.where(nz, np.exp(-mean_lp), 0.0)
     return pd.Series(ppl, index=texts.index)

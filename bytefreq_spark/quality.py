@@ -19,8 +19,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .masks import mask_series
-
 # Decision thresholds (frozen contract)
 MAX_CHARS = 20_000
 WEIRD_NUM, WEIRD_DEN = 1, 5          # drop if weird_count * 5 > n_chars  (>20%)
@@ -35,9 +33,6 @@ ALLOWED_LANGS = ("en", "fr", "de", "es", "ja", "zh", "ru", "el", "hi",
                  "ko", "th", "he", "ur", "fa", "ar")
 LU_KEY_LEN = 64                      # mask-dictionary key = LU mask truncated
 LU_KEY_SRC_CHARS = 512               # ...computed from this text prefix only
-
-# HU mask char classes for entropy: lower, upper, digit, space, other
-_CLASS_PATTERNS = ["a", "A", "9", " "]
 
 # whitespace LUT matching regex \s EXACTLY (verified: \s ≡ str.isspace over
 # the BMP; no astral whitespace exists) — max whitespace cp is U+3000
@@ -102,32 +97,22 @@ def _rowwise_count(mask: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np
 
 
 
-def text_features(texts: pd.Series, with_lu_key: bool = True) -> pd.DataFrame:
+def text_features(texts: pd.Series) -> pd.DataFrame:
     """Vectorized per-turn features from the HU mask + raw text.
 
     ONE flat codepoint buffer per batch (utf-32 view), classified per-cp
     directly (``hu_class_codes``) — the HU mask string is never
     materialized, and class counts come from boundary-subtracted cumsums
     instead of a positions-repeat + bincount (the repeat alone allocated
-    8 bytes/char).  Identical results to ``text_features_naive`` by the
-    kernel differential test.
-
-    ``with_lu_key=False`` skips the LU mask entirely (drops the ``lu_key``
-    column) for callers that obtain the key elsewhere — it is 76% of the
-    whole kernel on 200-char turns (the run-collapse is work the other
-    features don't need).  The pipeline keeps it ON: the Python kernel is
-    ~7× cheaper per turn than the JVM ``mask_col`` expression, so featurize
-    emits lu_key from here (docs/PLANS.md §lu_key_mask_cost)."""
-    from .masks import flat_codes, hu_class_codes
-
-    from .masks import lu_mask_key_series
+    8 bytes/char).  Identical results to ``text_features_naive``
+    (tests/reference_paths.py) by the kernel differential test."""
+    from .masks import flat_codes, hu_class_codes, lu_mask_key_series
 
     t = texts.fillna("")
     # fused flat-buffer LU key (≡ mask_series(prefix).str.slice(0, key_len);
     # differential-tested) — one flatten + LUT gather instead of per-char
     # dict translate + re-flatten, decoding only the surviving key chars
-    lu = (lu_mask_key_series(t, LU_KEY_SRC_CHARS, LU_KEY_LEN)
-          if with_lu_key else None)
+    lu = lu_mask_key_series(t, LU_KEY_SRC_CHARS, LU_KEY_LEN)
 
     rcodes, rstarts, rlens = flat_codes(t)
     n_chars = rlens.astype(np.int64)
@@ -224,48 +209,14 @@ def text_features(texts: pd.Series, with_lu_key: bool = True) -> pd.DataFrame:
     with np.errstate(divide="ignore", invalid="ignore"):
         ent = -np.nansum(np.where(p > 0, p * np.log(p), 0.0), axis=0)
 
-    data = {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "digit_count": digits,
-        "weird_count": weird,
-        "mask_entropy": ent,
-    }
-    if lu is not None:
-        data["lu_key"] = lu  # already truncated by the fused kernel
-    return pd.DataFrame(data, index=texts.index)
-
-
-def text_features_naive(texts: pd.Series) -> pd.DataFrame:
-    """Original per-class ``str.count`` formulation — differential-test
-    reference for ``text_features``."""
-    t = texts.fillna("")
-    hu = mask_series(t, "HU")
-    lu = mask_series(t.str.slice(0, LU_KEY_SRC_CHARS), "LU")
-
-    n_chars = t.str.len().to_numpy(np.int64)
-    counts = np.stack(
-        [hu.str.count(c).to_numpy(np.int64) for c in _CLASS_PATTERNS]
-    )
-    known = counts.sum(axis=0)
-    other = np.maximum(n_chars - known, 0)
-    weird = hu.str.count("_").to_numpy(np.int64)
-    digits = counts[2]
-
-    full = np.vstack([counts, other[None, :]]).astype(np.float64)
-    total = np.maximum(full.sum(axis=0), 1.0)
-    p = full / total
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ent = -np.nansum(np.where(p > 0, p * np.log(p), 0.0), axis=0)
-
     return pd.DataFrame(
         {
             "n_chars": n_chars,
-            "n_tokens": t.str.count(r"\S+").to_numpy(np.int64),
+            "n_tokens": n_tokens,
             "digit_count": digits,
             "weird_count": weird,
             "mask_entropy": ent,
-            "lu_key": lu.str.slice(0, LU_KEY_LEN),
+            "lu_key": lu,  # already truncated by the fused kernel
         },
         index=texts.index,
     )

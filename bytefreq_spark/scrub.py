@@ -50,18 +50,11 @@ def _scrub_candidates(t: pd.Series) -> pd.Series:
 
 
 def scrub_series(texts: pd.Series) -> pd.Series:
-    """Apply the frozen rule table in order. NaN-safe, byte-deterministic.
-    Prefiltered: the rule chain runs only on rows that can possibly match."""
-    out = texts.fillna("")
-    m = _scrub_candidates(out)
-    if not m.any():
-        return out
-    sub = out[m]
-    for _name, pat, rep in SCRUB_RULES:
-        sub = sub.str.replace(pat, rep, regex=True)
-    out = out.copy()
-    out[m] = sub
-    return out
+    """Apply the frozen rule table in order. NaN-safe, byte-deterministic:
+    ``scrub_series_sparse`` with the rows it leaves unchanged (None) filled
+    back from the input."""
+    sparse = scrub_series_sparse(texts)
+    return sparse.where(sparse.notna(), texts.fillna(""))
 
 
 # Java-dialect sources for the native (JVM regexp_replace) fast path.
@@ -125,14 +118,6 @@ def scrub_series_sparse(texts: pd.Series) -> pd.Series:
         changed = pd.Series(
             sub.to_numpy() != orig.to_numpy(), index=sub.index)
         out[m] = sub.where(changed, None)
-    return out
-
-
-def scrub_series_naive(texts: pd.Series) -> pd.Series:
-    """Unfiltered original formulation — differential-test reference."""
-    out = texts.fillna("")
-    for _name, pat, rep in SCRUB_RULES:
-        out = out.str.replace(pat, rep, regex=True)
     return out
 
 

@@ -177,7 +177,11 @@ def seq_dot_udf(dim: int):
             out[ok] = acc
         return pd.Series(out)
 
-    return dot
+    # marked nondeterministic so the optimizer cannot copy it: a
+    # deterministic UDF under ``cosine >= threshold`` is duplicated into the
+    # pushed-down filter, planning a second ArrowEvalPython that re-scores
+    # every surviving pair
+    return dot.asNondeterministic()
 
 
 def hyperplane_signatures(

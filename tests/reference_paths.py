@@ -13,7 +13,15 @@ differential-test references for the production path in
   kernel in a pandas UDF, vs the native ``decision_cols`` expressions;
 * ``hyperplane_signature_col`` — the hyperplane-LSH signature as a native
   literal-tree expression, vs the Arrow kernels behind
-  ``similarity.hyperplane_signatures``.
+  ``similarity.hyperplane_signatures``;
+* ``text_features_naive`` — per-class ``str.count`` over the HU mask string
+  and a per-row regex LU key, vs the flat-buffer ``quality.text_features``;
+* ``detect_language_naive`` — regex script counts and per-token
+  ``str.lower()`` set membership, vs the vectorized ``langid`` cascade;
+* ``scrub_series_naive`` — the rule table over every row, vs the
+  prefiltered ``scrub.scrub_series`` / ``scrub_series_sparse``;
+* ``_minhash_batch_naive`` — one row at a time, vs the batch-flattened
+  ``dedup._minhash_batch``.
 """
 
 from __future__ import annotations
@@ -24,8 +32,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
-from bytefreq_spark.masks import mask_col
+from bytefreq_spark.dedup import _POLY_BASE
+from bytefreq_spark.langid import (
+    CAP_CHARS as LANGID_CAP_CHARS,
+    LATIN_MARKER_WORDS,
+    LATIN_ORDER,
+    MIN_CHARS,
+    SCRIPT_PATTERNS,
+    script_threshold,
+)
+from bytefreq_spark.masks import mask_col, mask_series, mask_str
 from bytefreq_spark.quality import LU_KEY_LEN, LU_KEY_SRC_CHARS, decide
+from bytefreq_spark.scrub import SCRUB_RULES
 from bytefreq_spark.similarity import _dot
 
 DECISION_SCHEMA = StructType([
@@ -115,4 +133,127 @@ def hyperplane_signature_col(vec_col: str, planes: np.ndarray) -> F.Column:
     out = bits[0]
     for b in bits[1:]:
         out = out.bitwiseOR(b)
+    return out
+
+
+# HU mask char classes for entropy: lower, upper, digit, space (other is the
+# remainder)
+_CLASS_PATTERNS = ["a", "A", "9", " "]
+
+
+def text_features_naive(texts: pd.Series) -> pd.DataFrame:
+    """Per-class ``str.count`` over the HU mask string, and the LU key from
+    the per-value regex mask ``mask_str``."""
+    t = texts.fillna("")
+    hu = mask_series(t, "HU")
+    lu = t.str.slice(0, LU_KEY_SRC_CHARS).map(lambda v: mask_str(v, "LU"))
+
+    n_chars = t.str.len().to_numpy(np.int64)
+    counts = np.stack(
+        [hu.str.count(c).to_numpy(np.int64) for c in _CLASS_PATTERNS]
+    )
+    known = counts.sum(axis=0)
+    other = np.maximum(n_chars - known, 0)
+    weird = hu.str.count("_").to_numpy(np.int64)
+    digits = counts[2]
+
+    full = np.vstack([counts, other[None, :]]).astype(np.float64)
+    total = np.maximum(full.sum(axis=0), 1.0)
+    p = full / total
+    with np.errstate(divide="ignore", invalid="ignore"):
+        ent = -np.nansum(np.where(p > 0, p * np.log(p), 0.0), axis=0)
+
+    return pd.DataFrame(
+        {
+            "n_chars": n_chars,
+            "n_tokens": t.str.count(r"\S+").to_numpy(np.int64),
+            "digit_count": digits,
+            "weird_count": weird,
+            "mask_entropy": ent,
+            "lu_key": lu.str.slice(0, LU_KEY_LEN).astype(object),
+        },
+        index=texts.index,
+    )
+
+
+def detect_language_naive(texts: pd.Series) -> pd.Series:
+    """Per-row formulation of the ``langid.detect_language`` spec: regex
+    script counts, findall-tokenize, per-token ``str.lower()`` set
+    membership.
+
+    History: the original naive used ``(?i)\\b<word>\\b`` alternation counts
+    and the original fast path lowered the text BEFORE tokenizing; the two
+    agreed everywhere except around U+0130 ('İ'), where regex case folding
+    ('İ' (?i)-matches 'i') and lower-then-split each invent different
+    tokens.  r6 froze the token spec (tokenize the original, compare
+    token.lower()) and aligned both implementations to it — see the spec
+    note above ``langid.MIN_CHARS`` and test_langid_dotted_I_spec."""
+    import re
+
+    t = texts.fillna("").str.slice(0, LANGID_CAP_CHARS)
+    n = len(t)
+    n_chars = t.str.len().to_numpy(dtype=np.int64)
+
+    out = np.full(n, "und", dtype=object)
+    decided = n_chars < MIN_CHARS
+
+    for lang, pat in SCRIPT_PATTERNS.items():
+        num, den = script_threshold(lang)
+        cnt = t.str.count(pat).to_numpy(dtype=np.int64)
+        fire = (~decided) & (cnt * den >= n_chars * num)
+        out[fire] = lang
+        decided |= fire
+
+    word_re = re.compile(r"\w+")
+    marker_sets = {
+        lang: set(words) for lang, words in LATIN_MARKER_WORDS.items()
+    }
+    scores = np.zeros((len(LATIN_ORDER), n), dtype=np.int64)
+    for r, row in enumerate(t):
+        lows = [tok.lower() for tok in word_re.findall(row)]
+        for i, lang in enumerate(LATIN_ORDER):
+            mset = marker_sets[lang]
+            scores[i, r] = sum(1 for w_ in lows if w_ in mset) * 1000
+    norm = scores // np.maximum(n_chars, 1)
+    best = np.argmax(norm, axis=0)
+    best_score = norm[best, np.arange(n)]
+    latin = (~decided) & (best_score > 0)
+    out[latin] = np.array(LATIN_ORDER, dtype=object)[best[latin]]
+
+    return pd.Series(out, index=texts.index, dtype=object)
+
+
+def scrub_series_naive(texts: pd.Series) -> pd.Series:
+    """The rule table over every row, with no prefilter."""
+    out = texts.fillna("")
+    for _name, pat, rep in SCRUB_RULES:
+        out = out.str.replace(pat, rep, regex=True)
+    return out
+
+
+def _minhash_batch_naive(
+    texts: pd.Series, a_params: np.ndarray, b_params: np.ndarray, shingle: int,
+) -> list[np.ndarray]:
+    """Row-at-a-time minhash (same hash family, straightforward
+    formulation)."""
+    def codes_of(t: str) -> np.ndarray:
+        raw = t.encode("utf-32-le", "surrogatepass")
+        return np.frombuffer(raw, dtype=np.uint32).astype(np.int64)
+
+    out = []
+    for t in texts.fillna(""):
+        if len(t) < shingle:
+            sh = np.array([codes_of(t or "\x00").sum()], dtype=np.int64)
+        else:
+            codes = codes_of(t)
+            # rolling polynomial hash over windows of length `shingle`
+            win = np.lib.stride_tricks.sliding_window_view(codes, shingle)
+            pows = np.power(_POLY_BASE, np.arange(shingle, dtype=np.int64),
+                            dtype=np.int64)  # wraps mod 2^64: deterministic
+            sh = (win * pows).sum(axis=1)
+        x = sh[None, :].astype(np.uint64)
+        av = a_params[:, None].astype(np.uint64)
+        bv = b_params[:, None].astype(np.uint64)
+        hv = av * x + bv  # multiply-shift family: wraps mod 2^64
+        out.append(hv.min(axis=1).view(np.int64).copy())
     return out

@@ -95,3 +95,26 @@ def test_checkpoint_labels_match_golden(spark, tmp_path):
         got.reset_index(drop=True), want.reset_index(drop=True),
         check_dtype=False,
     )
+
+
+def test_perplexity_matches_golden_digest():
+    """``ppl`` values pinned bit for bit (the other goldens hold only the
+    keep/drop decisions they feed): sha256 of the float64 buffer over a
+    seeded multilingual sample plus empty, NULL, over-cap, 1-char (right
+    after a long row), dotted-I (lowers to two chars) and astral rows."""
+    import hashlib
+
+    from bytefreq_spark.perplexity import CAP_CHARS, perplexity
+    from bytefreq_spark.synth import MULTILANG_KINDS, gen_transcripts_pandas
+
+    edge = ["", None, "the quick brown fox " * 300, "x", "İ",
+            "😀 astral 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 text"]
+    assert len(edge[2]) > CAP_CHARS
+    s = pd.concat([
+        gen_transcripts_pandas(200, kinds=MULTILANG_KINDS)["text"],
+        pd.Series(edge, dtype=object),
+    ], ignore_index=True)
+    ppl = perplexity(s)
+    assert len(ppl) == 3843
+    assert hashlib.sha256(ppl.to_numpy().tobytes()).hexdigest() == (
+        "a143523b44c2fffb3b3d75d9bacc51bd4a2f51ea462e2d59f4be61d8ca2b8a0d")

@@ -10,15 +10,20 @@ from __future__ import annotations
 
 import pandas as pd
 
-from bytefreq_spark.langid import detect_language, detect_language_naive
+from bytefreq_spark.langid import detect_language
 from bytefreq_spark.scrub import (
     MOJIBAKE_MAP,
     SCRUB_RULES,
     repair_encoding_series,
     scrub_series,
-    scrub_series_naive,
 )
 from bytefreq_spark.synth import gen_transcripts_pandas
+from tests.reference_paths import (
+    _minhash_batch_naive,
+    detect_language_naive,
+    scrub_series_naive,
+    text_features_naive,
+)
 
 ADVERSARIAL = [
     "",
@@ -53,6 +58,10 @@ ADVERSARIAL = [
     "x" * 3000,                     # over CAP_CHARS
     "the_end the1 the,end the end", # \b vs \w+ token boundary edges
     "UNE une Une uNe",              # case-insensitive optional-e marker
+    "\ud800",                       # lone surrogates: legal in a Python str
+    "the \udfff and \ud83d of it",  # ...inside Latin marker text
+    "\ud800\ud800\ud800 123-45-6789",  # ...as a run, next to a scrub hit
+    "これは\udc00テストです",          # ...inside the script tier
 ]
 
 
@@ -204,13 +213,22 @@ def test_langid_feature_replay_equals_detect():
     oracle replay only the decision layer (from staged features) in DuckDB
     while the feature kernel stays pytest-covered."""
     from bytefreq_spark.langid import (
-        LANGID_FEATURE_COLS, decide_from_features, langid_feature_frame,
+        LANGID_FEATURE_COLS, MIN_CHARS, SCRIPT_RANGES, decide_from_features,
+        langid_feature_frame,
     )
 
     s = _series()
     feats = langid_feature_frame(s)
     assert list(feats.columns) == LANGID_FEATURE_COLS
     assert decide_from_features(feats).equals(detect_language(s))
+    # marker scores exist only for rows the script tier leaves undecided
+    # (the decision never reads them on the others)
+    lang = detect_language(s)
+    score_cols = [c for c in LANGID_FEATURE_COLS if c.endswith("_score")]
+    by_script = lang.isin(list(SCRIPT_RANGES)) | (feats["n_chars"] < MIN_CHARS)
+    assert by_script.any() and (~by_script).any()
+    assert (feats.loc[by_script, score_cols] == 0).all().all()
+    assert (feats.loc[~by_script, score_cols] > 0).any().any()
     # empty-series shape safety (a mapInPandas batch can be empty)
     empty = pd.Series([], dtype=object)
     ef = langid_feature_frame(empty)
@@ -305,24 +323,11 @@ def test_repair_encoding_prefilter():
 
 
 def test_text_features_fast_equals_naive():
-    from bytefreq_spark.quality import text_features, text_features_naive
+    from bytefreq_spark.quality import text_features
 
     s = _series()
     a, b = text_features(s), text_features_naive(s)
     pd.testing.assert_frame_equal(a, b)
-
-
-def test_text_features_without_lu_key():
-    """The with_lu_key=False fast path (used by the pipeline, whose lu_key
-    is a JVM projection) must return exactly the same frame minus the
-    lu_key column — nothing else may shift."""
-    from bytefreq_spark.quality import text_features
-
-    s = _series()
-    full = text_features(s)
-    slim = text_features(s, with_lu_key=False)
-    assert "lu_key" not in slim.columns
-    pd.testing.assert_frame_equal(slim, full.drop(columns=["lu_key"]))
 
 
 def test_text_features_pack_tiers_equal_naive():
@@ -332,7 +337,7 @@ def test_text_features_pack_tiers_equal_naive():
     with rows straddling the boundaries, including a space-heavy row that
     sets bit 63 of the 16-bit pack's top field (the benign-wraparound
     case), and require bit-identity with the naive per-class counts."""
-    from bytefreq_spark.quality import text_features, text_features_naive
+    from bytefreq_spark.quality import text_features
 
     mixed = "aA9 ,é1234 zz "  # all five classes + punct
     boundary_rows = [
@@ -385,7 +390,7 @@ def test_text_features_empty_row_placement():
     → reduceat returns a stray element; TRAILING empty → start == buffer
     length, which reduceat rejects outright).  Pin both, plus all-empty and
     NaN batches."""
-    from bytefreq_spark.quality import text_features, text_features_naive
+    from bytefreq_spark.quality import text_features
 
     cases = [
         ["", "abc 12", ""],             # leading + trailing empty
@@ -414,7 +419,7 @@ def test_collapse_runs_equals_regex():
     vals = [
         "", "x", "aaa", "aAAbb99  --", "a\n\n\nb", "ab  cd",
         "😀😀😀x😀", "  lead", "trail  ", "\t\t", "a" * 5000,
-        "интервал    пробел", None,
+        "интервал    пробел", "\ud800\ud800x\udfff", None,
     ]
     s = pd.Series(vals, dtype=object)
     pat = re.compile(r"(.)\1+", re.DOTALL)
@@ -426,14 +431,13 @@ def test_collapse_runs_equals_regex():
 def test_minhash_fast_equals_naive():
     import numpy as np
 
-    from bytefreq_spark.dedup import (
-        _hash_params, _minhash_batch, _minhash_batch_naive,
-    )
+    from bytefreq_spark.dedup import _hash_params, _minhash_batch
 
     a, b = _hash_params(64, 42)
     extra = pd.Series(
         ["", None, "ab", "abcd", "abcde", "abcdef", "aaaaaaaaaa",
-         "😀😁😂🤣😃😄", "é" * 4, "é" * 5, "\x00" * 6, " ", "xyz" * 300],
+         "😀😁😂🤣😃😄", "é" * 4, "é" * 5, "\x00" * 6, " ", "xyz" * 300,
+         "\ud800", "ab\udfffcd\ud800ef"],
         dtype=object,
     )
     s = pd.concat([_series(), extra], ignore_index=True)
@@ -447,6 +451,43 @@ def test_minhash_fast_equals_naive():
         for f, nv in zip(_minhash_batch(s, a, b, sh),
                          _minhash_batch_naive(s, a, b, sh)):
             assert np.array_equal(f, nv)
+
+
+def test_lone_surrogates_get_a_value_everywhere():
+    """A lone surrogate is a legal Python ``str`` (it reaches the kernels
+    from driver-side frames); every kernel and the reference pipeline must
+    return a value for every row instead of raising UnicodeEncodeError."""
+    import numpy as np
+
+    from bytefreq_spark.masks import lu_mask_key_series
+    from bytefreq_spark.perplexity import perplexity
+    from bytefreq_spark.quality import (
+        LU_KEY_LEN, LU_KEY_SRC_CHARS, text_features,
+    )
+    from bytefreq_spark.reference import run_reference
+    from bytefreq_spark.scrub import scrub_series_sparse
+
+    rows = ["\ud800", "ok \udfff text", None, "", "plain prose here",
+            "\ud83d\ude00 split pair", "x\ud800"]
+    s = pd.Series(rows, dtype=object)
+    n = len(rows)
+    feats = text_features(s)
+    assert len(feats) == n and feats["lu_key"].notna().all()
+    assert detect_language(s).notna().all() and len(detect_language(s)) == n
+    ppl = perplexity(s)
+    assert len(ppl) == n and np.isfinite(ppl.to_numpy()).all()
+    key = lu_mask_key_series(s, LU_KEY_SRC_CHARS, LU_KEY_LEN)
+    assert len(key) == n and key.notna().all()
+    assert len(scrub_series_sparse(s)) == n
+    tr = pd.DataFrame({
+        "conv_id": ["c"] * n, "turn_idx": range(n), "role": ["user"] * n,
+        "text": rows, "tool": [None] * n,
+        "ts": pd.Timestamp("2024-01-01"),
+    })
+    out = run_reference(tr)
+    assert len(out) == n
+    assert out["keep"].notna().all() and out["lang"].notna().all()
+    assert (out["keep"] | out["drop_reason"].notna()).all()
 
 
 def test_minhash_empty_batch():

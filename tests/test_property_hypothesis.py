@@ -61,7 +61,8 @@ def test_awk_series_equals_awk_str(vals):
 @settings(max_examples=100, deadline=None)
 @given(BATCH)
 def test_scrub_fast_equals_naive_property(vals):
-    from bytefreq_spark.scrub import scrub_series, scrub_series_naive
+    from bytefreq_spark.scrub import scrub_series
+    from tests.reference_paths import scrub_series_naive
 
     s = pd.Series(vals, dtype=object)
     assert scrub_series(s).tolist() == scrub_series_naive(s).tolist()
@@ -87,7 +88,8 @@ def test_scrub_sparse_composition_property(vals):
 @settings(max_examples=60, deadline=None)
 @given(BATCH)
 def test_langid_fast_equals_naive_property(vals):
-    from bytefreq_spark.langid import detect_language, detect_language_naive
+    from bytefreq_spark.langid import detect_language
+    from tests.reference_paths import detect_language_naive
 
     s = pd.Series(vals, dtype=object)
     assert detect_language(s).tolist() == detect_language_naive(s).tolist()
@@ -96,7 +98,8 @@ def test_langid_fast_equals_naive_property(vals):
 @settings(max_examples=80, deadline=None)
 @given(BATCH)
 def test_text_features_fast_equals_naive_property(vals):
-    from bytefreq_spark.quality import text_features, text_features_naive
+    from bytefreq_spark.quality import text_features
+    from tests.reference_paths import text_features_naive
 
     s = pd.Series(vals, dtype=object)
     pd.testing.assert_frame_equal(text_features(s), text_features_naive(s))
