@@ -132,7 +132,10 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     import __spark_entry__ as entry
 
     from bytefreq_spark.dedup import minhash_near_dups, paragraph_dedup
-    from bytefreq_spark.pipeline import quality_filter
+    from bytefreq_spark.pipeline import (
+        featurize, label_turns, mask_frequency_dict, quality_filter,
+        with_mask_key_arrow,
+    )
     from bytefreq_spark.profile import char_histogram, dq_report
 
     timings: dict[str, float] = {}
@@ -323,14 +326,15 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
         clear_cache=True, restore=_restore_flagship)
 
     # measured salt-skip (VERDICT_r6 #1): the flagship corpus is balanced
-    # (32 even generator partitions), so the default auto_salt probe skips
-    # the featurize round-robin in the flagship row; this row forces the
-    # salt — ONE MORE full-data exchange (plan audit §quality_filter vs
-    # §quality_filter_nosalt) — so the delta is the measured price of the
-    # salt on an input that doesn't need it
+    # (32 even generator partitions), so quality_filter's layout probe skips
+    # the featurize round-robin in the flagship row; this row composes the
+    # same parts with the salt forced — ONE MORE full-data exchange (plan
+    # audit §quality_filter vs §quality_filter_nosalt) — so the delta is the
+    # measured price of the salt on an input that doesn't need it
     run("quality_filter_forcesalt",
-        lambda: _materialize(quality_filter(
-            state["tr"], salt_partitions=CPUS * 2, auto_salt=False)),
+        lambda: _materialize(label_turns(
+            featurize(state["tr"], CPUS * 2),
+            mask_frequency_dict(with_mask_key_arrow(state["tr"])))),
         clear_cache=True, restore=_restore_flagship)
     state["tr"].unpersist()
 
@@ -423,8 +427,8 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     timings["_droptext_sf1_turns_per_sec"] = round(
         n1 / timings["quality_filter_droptext_sf1"], 1)
 
-    # the FULL at-scale config — auto_salt AND drop_text together, the two
-    # measured r7 levers and exactly what the scaling exhibit runs
+    # the FULL at-scale config — the salt probe AND drop_text together, the
+    # two measured r7 levers and exactly what the scaling exhibit runs
     # (docs/SCALE.md): the layout probe (in the timing) skips the featurize
     # round-robin on this balanced input and raw text stays off the
     # conversation exchange.  This is the headline "what a 10^12-turn job
@@ -432,8 +436,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     # two exchanges separately (droptext row) and combined (this row)
     run("quality_filter_atscale_sf1",
         lambda: _materialize(quality_filter(
-            s1["df"], salt_partitions=CPUS * 2, auto_salt=True,
-            drop_text=True)),
+            s1["df"], salt_partitions=CPUS * 2, drop_text=True)),
         clear_cache=True, restore=_restore_sf1)
     timings["_atscale_sf1_turns_per_sec"] = round(
         n1 / timings["quality_filter_atscale_sf1"], 1)
@@ -585,9 +588,9 @@ def run_scaling() -> dict:
         tr = gen_transcripts_spark(spark, n_convs, partitions=cores * 2).cache()
         n_turns = tr.count()
         # the job under test is the AT-SCALE production config
-        # (docs/SCALE.md): auto_salt probes the input layout — and skips the
-        # round-robin exchange on this balanced generated corpus, probe cost
-        # included in the timing — and drop_text keeps raw text off the
+        # (docs/SCALE.md): the salt probe reads the input layout — and skips
+        # the round-robin exchange on this balanced generated corpus, probe
+        # cost included in the timing — and drop_text keeps raw text off the
         # conversation shuffle.  Both legs resolve to the identical no-salt
         # plan (the probe passes at any parallelism on balanced input).  The
         # default salted config carries one extra full-data exchange that is
@@ -597,7 +600,7 @@ def run_scaling() -> dict:
         # exchange scales with per-node DRAM + NICs instead.
         def _job(frame, c=cores):
             return quality_filter(frame, salt_partitions=c * 2,
-                                  auto_salt=True, drop_text=True)
+                                  drop_text=True)
 
         # warm-up (JIT, Arrow init, python-worker pool) then measured run.
         # clearCache between them: CacheManager would otherwise serve the
@@ -686,7 +689,7 @@ def run_scaling() -> dict:
             "Same quality-filter job, identical input, two parallelism levels\n"
             "(no real cluster in sandbox; this evidences the north rule's\n"
             "N-vs-4N criterion).  The job is the at-scale production config\n"
-            "(docs/SCALE.md): `auto_salt` (layout probe included in the\n"
+            "(docs/SCALE.md): the salt probe (layout probe included in the\n"
             "timing; both legs resolve to the identical no-salt plan on this\n"
             "balanced corpus) + `drop_text` (raw text stays off the\n"
             "conversation shuffle).  The default salted config adds one\n"

@@ -24,15 +24,10 @@ def main(argv: list[str] | None = None) -> int:
     qf = sub.add_parser("quality-filter", help="transcript quality-filter pipeline")
     qf.add_argument("--input", required=True, help="parquet dir / table of transcripts")
     qf.add_argument("--output", required=True)
-    qf.add_argument("--salt-partitions", type=int, default=None)
-    qf.add_argument("--auto-salt", action=argparse.BooleanOptionalAction,
-                    default=True,
-                    help="probe the input layout and skip the featurize "
-                         "salt exchange when partitions are already "
-                         "balanced (see pipeline.input_salt_decision). "
-                         "ON by default since r8 (measured 22-28%% faster "
-                         "on balanced input, keeps the salt on skew); "
-                         "--no-auto-salt restores the unconditional salt")
+    qf.add_argument("--salt-partitions", type=int, default=None,
+                    help="width of the featurize salt, when the input "
+                         "layout probe keeps it (default: 2x the default "
+                         "parallelism)")
     qf.add_argument("--drop-text", action="store_true",
                     help="drop raw text/tool from the output (the at-scale "
                          "config: scrubbed text is the deliverable, and the "
@@ -135,12 +130,10 @@ def main(argv: list[str] | None = None) -> int:
                 spark, df, args.checkpoint_dir,
                 salt_partitions=args.salt_partitions,
                 drop_text=args.drop_text,
-                auto_salt=args.auto_salt,
             )
         else:
             out = quality_filter(df, salt_partitions=args.salt_partitions,
-                                 drop_text=args.drop_text,
-                                 auto_salt=args.auto_salt)
+                                 drop_text=args.drop_text)
         writer = out.write.mode("overwrite")
         if args.format == "iceberg":
             writer.format("iceberg").save(args.output)

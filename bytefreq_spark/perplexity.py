@@ -4,8 +4,9 @@ A character-bigram language model with add-one smoothing, trained at import
 time on a small embedded seed corpus (deterministic — no I/O, no randomness).
 Scoring is fully vectorized: the whole Arrow batch becomes one codepoint
 array (``masks.flat_codes``), per-pair log-probs are gathered from the
-129×129 table, and per-row means come from the shared segmented reduce
-(``quality._rowwise_sum``) over row offsets — zero per-row Python.
+129×129 table, and per-row means come from one segmented ``reduceat`` over
+each row's own pairs — zero per-row Python, and a row scores the same
+alone as in any batch.
 
 Perplexity = exp(−mean log₂... we use natural log: exp(−mean ln p)).  Gibberish
 (uniform byte soup) scores ≫ natural language; the quality filter thresholds
@@ -63,24 +64,25 @@ def perplexity(texts: pd.Series) -> pd.Series:
     Only the first CAP_CHARS characters are scored (frozen contract shared
     with the reference pipeline)."""
     from .masks import flat_codes
-    from .quality import _rowwise_sum
 
     t = texts.fillna("").str.slice(0, CAP_CHARS).str.lower()
     codes, starts, lens = flat_codes(t)
     codes = np.minimum(codes, _VOCAB).astype(np.int64)
-    # pair i = (codes[i], codes[i+1]); zero the one pair per row that
-    # straddles into the next row
+    # pair i = (codes[i], codes[i+1]); row r owns pairs [start, start + n)
     lp = _LOGP[codes[:-1], codes[1:]]
-    ends = starts + lens
-    lp[ends[(lens > 0) & (ends <= len(lp))] - 1] = 0.0
     n_pairs = np.maximum(lens - 1, 0)
-    # cut only at rows that own a pair: a 1-char row's zeroed straddle pair
-    # then stays in the previous row's segment, which keeps numpy's pairwise
-    # summation order — and so every value — bit-identical to the frozen
-    # scorer (tests/test_goldens.py pins the digest)
     nz = n_pairs > 0
     sums = np.zeros(len(t), dtype=np.float64)
-    sums[nz] = _rowwise_sum(lp, starts[nz], n_pairs[nz])
-    mean_lp = np.where(nz, sums / np.maximum(n_pairs, 1), 0.0)
+    if nz.any():
+        # sum each row over exactly its own pairs: reduceat over interleaved
+        # [start, end) bounds, keeping the even slots, so a row's value never
+        # depends on its neighbours (numpy's pairwise summation regroups a
+        # longer segment).  A row ending at the buffer's end has no closing
+        # bound — its segment runs to the end anyway.
+        bounds = np.stack([starts[nz], starts[nz] + n_pairs[nz]], 1).ravel()
+        if bounds[-1] == len(lp):
+            bounds = bounds[:-1]
+        sums[nz] = np.add.reduceat(lp, bounds)[::2]
+    mean_lp = sums / np.maximum(n_pairs, 1)
     ppl = np.where(nz, np.exp(-mean_lp), 0.0)
     return pd.Series(ppl, index=texts.index)

@@ -416,12 +416,13 @@ def label_turns(
 
 
 def _probe_salt(df: DataFrame, salt_partitions: int | None) -> int | None:
-    """Resolve the featurize salt by probing the input layout.  Without an
-    explicit ``salt_partitions`` the probe still runs, against a
-    cluster-sized default target — otherwise ``auto_salt=True`` alone (the
-    CLI default) would silently never protect a skewed input (r7 review).
-    Looks ``input_salt_decision`` up at call time, so a wrapper installed on
-    this module (the traced benchmark's probe timer) sees every call."""
+    """The one salt rule: probe the input layout and keep the featurize
+    round-robin only where the probe finds too few or skewed partitions
+    (``input_salt_decision``).  ``salt_partitions`` only sizes the salt the
+    probe keeps; without it the probe targets 2× the session's default
+    parallelism.  Looks ``input_salt_decision`` up at call time, so a
+    wrapper installed on this module (the traced benchmark's probe timer)
+    sees every call."""
     target = salt_partitions or (
         df.sparkSession.sparkContext.defaultParallelism * 2)
     return input_salt_decision(df, target)
@@ -431,7 +432,6 @@ def quality_filter(
     df: DataFrame,
     salt_partitions: int | None = None,
     drop_text: bool = False,
-    auto_salt: bool = True,
 ) -> DataFrame:
     """Full pipeline: transcripts → labeled/scrubbed turns.
 
@@ -451,25 +451,20 @@ def quality_filter(
     always conversation-contiguous sorted (it falls out of the one shuffle;
     see :func:`label_turns`).
 
-    ``auto_salt`` makes the featurize salt a MEASURED decision
-    (``input_salt_decision``): the round-robin exchange is kept only when
-    the input layout probe finds too few or skewed partitions; a balanced
-    input (bucketed Iceberg, a freshly-written parquet corpus) skips it,
-    removing one full-data exchange from the plan (docs/PLANS.md
-    §quality_filter_nosalt proves the shape; the whale corpus measurably
-    keeps the salt — test_auto_salt_decision).  With no explicit
-    ``salt_partitions`` the probe targets 2× the session's default
-    parallelism, so ``auto_salt=True`` alone is a complete config.
-    **Default since r8** (VERDICT_r7 #2): measured 22-28% faster on balanced
-    input, provably keeps the salt on skew, and the probe costs one cheap
+    The featurize salt is a MEASURED decision (:func:`_probe_salt`): the
+    round-robin exchange is kept only when the input layout probe finds too
+    few or skewed partitions; a balanced input (bucketed Iceberg, a
+    freshly-written parquet corpus) skips it, removing one full-data
+    exchange from the plan (docs/PLANS.md §quality_filter_nosalt proves the
+    shape; the whale corpus measurably keeps the salt, see the salt-decision
+    tests in tests/test_pipeline.py).  The probe costs one cheap
     column-pruned job (0.1 s at sf0.1, ~0.5 s at sf1; free on real Iceberg
-    via file metadata).  ``auto_salt=False`` restores the unconditional
-    salt; an explicit ``salt_partitions`` still sizes whichever salt the
-    probe keeps.
+    via file metadata).  ``salt_partitions`` only sizes the salt the probe
+    keeps.  To pin a plan shape instead, compose the parts:
+    ``label_turns(featurize(df, n), mask_frequency_dict(
+    with_mask_key_arrow(df)))`` with ``n`` partitions or ``None``.
     """
-    if auto_salt:
-        salt_partitions = _probe_salt(df, salt_partitions)
-    feat = featurize(df, salt_partitions)
+    feat = featurize(df, _probe_salt(df, salt_partitions))
     return label_turns(
         feat, mask_frequency_dict(with_mask_key_arrow(df)), drop_text)
 
@@ -503,27 +498,25 @@ def run_incremental(
     rewrites old+new as v(N+1) (the sandbox parquet stand-in); on Iceberg
     this is a fast append of the new files to the table snapshot.
 
+    ``salt_partitions`` is the new batch's unconditional featurize salt (no
+    probe); it only places rows, so the config is ``{**config, version: 2}``.
+
     Returns ``(labels_df, n_new_turns)``.
     """
-    config = dict(config or {}, version=1, salt=salt_partitions)
-    labels_v0 = snapshot_versions(out_dir, "labels")
-    if labels_v0:
+    config = dict(config or {}, version=2)
+    labels_v = snapshot_versions(out_dir, "labels")
+    if labels_v:
         old_labels = read_snapshot(spark, out_dir, "labels")
-        # the anti-join's right side is the THIN conv_index snapshot (one
-        # distinct conv_id column) when a valid one exists — at 10^12 turns
-        # the labels table is wide and huge, and re-scanning + distinct-ing
-        # it on EVERY arriving batch is the dominant ingest cost; the index
-        # is ~avg_turns_per_conv × narrower.  Like the freq dict, it is a
-        # pure CACHE validity-keyed to the labels version it was derived
-        # from: stale or missing → rebuilt from labels, so a crash between
-        # the two commits can never lose or duplicate conversations.  AQE
-        # turns the anti-join into a broadcast join at runtime whenever the
-        # index is small enough.
-        idx_cfg = dict(config, labels_version=labels_v0[-1])
-        if snapshot_valid(out_dir, "conv_index", idx_cfg):
-            existing = read_snapshot(spark, out_dir, "conv_index")
-        else:
-            existing = old_labels.select("conv_id").distinct()
+        derived = dict(config, labels_version=labels_v[-1])
+        # the anti-join's right side is the THIN conv_index cache (one
+        # distinct conv_id column, ~avg_turns_per_conv × narrower than the
+        # wide labels table a per-batch distinct would rescan); like freq it
+        # is keyed to the labels version, so a crash between the commits can
+        # never lose or duplicate conversations.  AQE turns the anti-join
+        # into a broadcast join whenever the index is small enough.
+        existing = _materialize(
+            spark, out_dir, "conv_index", derived,
+            lambda: old_labels.select("conv_id").distinct())
         new = transcripts.join(existing, "conv_id", "left_anti")
     else:
         old_labels, new = None, transcripts
@@ -531,29 +524,15 @@ def run_incremental(
     if n_new == 0 and old_labels is not None:
         return old_labels, 0
 
-    # THE single source of truth is the labels table (it retains lu_key), so
-    # the dictionary has exactly ONE commit point: the labels commit.  The
-    # freq snapshot is a pure cache of tally(labels.lu_key), validity-keyed
-    # to the labels version it was derived from — a crash between the two
-    # commits can never double- or under-count (the cache is simply
-    # recomputed from labels when its key doesn't match).
-    labels_v = snapshot_versions(out_dir, "labels")
-    cur_labels_v = labels_v[-1] if labels_v else 0
-    freq_cfg = dict(config, labels_version=cur_labels_v)
-    if old_labels is None:
-        freq_old = None
-    elif snapshot_valid(out_dir, "freq", freq_cfg):
-        freq_old = read_snapshot(spark, out_dir, "freq")
-    else:  # stale or missing cache → rebuild from the committed labels
-        freq_old = mask_frequency_dict(old_labels)
-    # same Arrow mask kernel as the one-shot rescan (r8) — the delta tally
-    # must agree with featurize's lu_key, which this makes structural
-    delta = mask_frequency_dict(with_mask_key_arrow(new))
-    freq = (
-        delta if freq_old is None
-        else freq_old.unionByName(delta).groupBy("lu_key").agg(
+    # the delta tally runs the rescan's Arrow mask kernel, so it agrees
+    # with featurize's lu_key by construction
+    freq = mask_frequency_dict(with_mask_key_arrow(new))
+    if old_labels is not None:
+        freq_old = _materialize(
+            spark, out_dir, "freq", derived,
+            lambda: mask_frequency_dict(old_labels))
+        freq = freq_old.unionByName(freq).groupBy("lu_key").agg(
             F.sum("lu_count").alias("lu_count"))
-    )
 
     labeled_new = label_turns(featurize(new, salt_partitions), freq)
     combined = (
@@ -563,15 +542,11 @@ def run_incremental(
     write_snapshot(combined, out_dir, "labels", config)  # THE commit point
     labels = read_snapshot(spark, out_dir, "labels")
     # refresh the derived caches, keyed to the version just committed
-    new_v = snapshot_versions(out_dir, "labels")[-1]
+    derived = dict(
+        config, labels_version=snapshot_versions(out_dir, "labels")[-1])
+    write_snapshot(mask_frequency_dict(labels), out_dir, "freq", derived)
     write_snapshot(
-        mask_frequency_dict(labels),
-        out_dir, "freq", dict(config, labels_version=new_v),
-    )
-    write_snapshot(
-        labels.select("conv_id").distinct(),
-        out_dir, "conv_index", dict(config, labels_version=new_v),
-    )
+        labels.select("conv_id").distinct(), out_dir, "conv_index", derived)
     return labels, n_new
 
 
@@ -630,6 +605,15 @@ def _load_manifest(out_dir: str, name: str) -> dict | None:
         return json.load(f)
 
 
+def _commit_manifest(out_dir: str, name: str, man: dict) -> None:
+    """Atomically replace the manifest of ``name`` — THE commit point of
+    every snapshot write and expiry (tmp file + ``os.replace``)."""
+    mf = _manifest_path(out_dir, name)
+    with open(mf + ".tmp", "w") as f:
+        json.dump(man, f, sort_keys=True)
+    os.replace(mf + ".tmp", mf)
+
+
 def write_snapshot(df: DataFrame, out_dir: str, name: str, config: dict) -> str:
     """Iceberg-style versioned snapshot commit.
 
@@ -650,10 +634,7 @@ def write_snapshot(df: DataFrame, out_dir: str, name: str, config: dict) -> str:
         "schema": df.schema.simpleString(),
     }
     man["current"] = version
-    tmp = _manifest_path(out_dir, name) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_dir, name))  # atomic commit point
+    _commit_manifest(out_dir, name, man)
     return path
 
 
@@ -698,10 +679,7 @@ def expire_snapshots(out_dir: str, name: str, keep_last: int = 1) -> list[int]:
     # time travel on every surviving reader.
     for v in expire:
         man["versions"].pop(str(v), None)
-    tmp = _manifest_path(out_dir, name) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_dir, name))
+    _commit_manifest(out_dir, name, man)
     for v in expire:
         shutil.rmtree(os.path.join(out_dir, name, f"v{v}"), ignore_errors=True)
     # orphan sweep — the recovery half of manifest-first ordering: any v{N}
@@ -733,6 +711,19 @@ def snapshot_valid(out_dir: str, name: str, config: dict) -> bool:
     return cur.get("config") == config
 
 
+def _materialize(
+    spark: SparkSession, out_dir: str, name: str, config: dict, build,
+) -> DataFrame:
+    """The one snapshot step of the checkpointed and incremental runs:
+    commit ``build()`` as ``name`` unless its current version was made under
+    ``config``, then read the committed table back.  ``build`` runs only
+    when the snapshot is stale, so whatever it depends on (the salt probe,
+    an upstream snapshot) is skipped on a valid resume."""
+    if not snapshot_valid(out_dir, name, config):
+        write_snapshot(build(), out_dir, name, config)
+    return read_snapshot(spark, out_dir, name)
+
+
 def _file_lineage(df: DataFrame) -> DataFrame:
     """Per source-file row counts (`input_file_name`).  Non-file inputs
     (generators, cached frames) yield a single ''-keyed row; the many-file
@@ -750,87 +741,52 @@ def run_with_checkpoints(
     config: dict | None = None,
     salt_partitions: int | None = None,
     drop_text: bool = False,
-    auto_salt: bool = True,
 ) -> DataFrame:
     """Resumable run: each stage materializes a snapshot; a restart reloads
     completed stages (manifest + config fingerprint match) instead of
     recomputing — the sandbox stand-in for Iceberg snapshot checkpoints.
 
-    ``drop_text`` / ``auto_salt`` mirror :func:`quality_filter` (r7 review:
-    the CLI accepted both flags but this path silently ignored them): the
-    salt decision is resolved BEFORE the config fingerprint, so a resume
-    whose input layout now probes differently recomputes instead of
-    silently reusing a snapshot built under the other plan, and with
-    ``drop_text`` the labels snapshot carries scrubbed text only (raw
-    text/tool never cross the conversation exchange).  The labels come from
-    the same :func:`label_turns` tail as quality_filter; only the
-    dictionary's source differs — it is tallied from the featurized
+    The probe decides the salt as in :func:`quality_filter`
+    (``salt_partitions`` only sizes it), and with ``drop_text`` the labels
+    snapshot carries scrubbed text only.  The labels come from the same
+    :func:`label_turns` tail; the dictionary is tallied from the featurized
     snapshot's ``lu_key`` instead of a rescan of the input.
 
-    r8 (ADVICE_r7 #1): the probe's full input scan is skipped on RESUME —
-    when the current labels snapshot was committed with the same config
-    apart from the salt, its recorded salt decision is adopted instead of
-    re-scanning the input just to recompute the fingerprint.  This is a
-    perf-only shortcut: re-running against a *changed* input under the same
-    out_dir keeps the old (possibly suboptimal) salt but never affects
-    values — the salt only places rows.  Point a new input at a new out_dir
-    (or pass auto_salt=False / an explicit salt) to force a fresh decision."""
+    The config is ``{**config, version: 2, drop_text}``: the salt only
+    places rows and is not part of it, so the probe runs inside the
+    featurized build and a resume with valid labels neither probes nor
+    reads ``featurized``.  A resume serves the committed labels whatever
+    the input now holds — point a new input at a new ``out_dir``.  The
+    metrics and lineage tables are keyed to the labels version and each is
+    committed only when stale, so a crash between their commits leaves a
+    resumable gap."""
     os.makedirs(out_dir, exist_ok=True)
-    if auto_salt:
-        base_cfg = dict(config or {}, version=1, drop_text=drop_text)
-        man = _load_manifest(out_dir, "labels")
-        cur = (man or {}).get("versions", {}).get(
-            str((man or {}).get("current", 0)), {})
-        prev_cfg = cur.get("config")
-        if prev_cfg is not None and {
-            k: v for k, v in prev_cfg.items() if k != "salt"
-        } == base_cfg:
-            salt_partitions = prev_cfg.get("salt")  # resume: reuse decision
-        else:
-            salt_partitions = _probe_salt(transcripts, salt_partitions)
-    config = dict(config or {}, version=1, salt=salt_partitions,
-                  drop_text=drop_text)
+    config = dict(config or {}, version=2, drop_text=drop_text)
 
-    if snapshot_valid(out_dir, "featurized", config):
-        feat = read_snapshot(spark, out_dir, "featurized")
-    else:
-        feat = featurize(transcripts, salt_partitions)
-        write_snapshot(feat, out_dir, "featurized", config)
-        feat = read_snapshot(spark, out_dir, "featurized")
+    def build_labels() -> DataFrame:
+        feat = _materialize(
+            spark, out_dir, "featurized", config,
+            lambda: featurize(
+                transcripts, _probe_salt(transcripts, salt_partitions)))
+        return label_turns(feat, mask_frequency_dict(feat), drop_text)
 
-    if snapshot_valid(out_dir, "labels", config):
-        labels = read_snapshot(spark, out_dir, "labels")
-        labels_resumed = True
-    else:
-        labels = label_turns(feat, mask_frequency_dict(feat), drop_text)
-        write_snapshot(labels, out_dir, "labels", config)
-        labels = read_snapshot(spark, out_dir, "labels")
-        labels_resumed = False
-
-    # metrics + lineage tables alongside the labels snapshot — derived
-    # output, so a fully-resumed run skips rewriting them (otherwise every
-    # resume would append another identical snapshot version).  Each is
-    # validity-checked INDIVIDUALLY (r7 review): a crash between the
-    # metrics commit and the lineage commits must leave a resumable gap,
-    # not a permanently missing table.
-    if not labels_resumed or not snapshot_valid(out_dir, "metrics", config):
-        metrics = (
-            labels.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("keep").cast("int")).alias("kept"),
-                F.approx_count_distinct("conv_id").alias("convs"),
-            )
-        )
-        write_snapshot(metrics, out_dir, "metrics", config)
-    if not labels_resumed or not snapshot_valid(out_dir, "lineage", config):
-        write_snapshot(_file_lineage(labels), out_dir, "lineage", config)
-    # INPUT-file lineage: per source-file row counts over the transcripts
-    # frame itself — at 100 TB the input is thousands of parquet files and
-    # audits need "which file contributed which rows" against the real
-    # file boundaries, not just the labels snapshot's own layout.
-    if not labels_resumed or not snapshot_valid(
-            out_dir, "input_lineage", config):
-        write_snapshot(
-            _file_lineage(transcripts), out_dir, "input_lineage", config)
+    labels = _materialize(spark, out_dir, "labels", config, build_labels)
+    derived = dict(
+        config, labels_version=snapshot_versions(out_dir, "labels")[-1])
+    # input_lineage counts rows per source file of the transcripts: at
+    # 100 TB audits need the real file boundaries, not the labels' layout
+    tables = {
+        "metrics": lambda: labels.groupBy(
+            F.spark_partition_id().alias("partition_id")
+        ).agg(
+            F.count("*").alias("rows"),
+            F.sum(F.col("keep").cast("int")).alias("kept"),
+            F.approx_count_distinct("conv_id").alias("convs"),
+        ),
+        "lineage": lambda: _file_lineage(labels),
+        "input_lineage": lambda: _file_lineage(transcripts),
+    }
+    for name, build in tables.items():
+        if not snapshot_valid(out_dir, name, derived):
+            write_snapshot(build(), out_dir, name, derived)
     return labels

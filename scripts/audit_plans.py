@@ -67,7 +67,9 @@ def main():
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry
-    from bytefreq_spark.pipeline import quality_filter
+    from bytefreq_spark.pipeline import (
+        featurize, label_turns, mask_frequency_dict, with_mask_key_arrow,
+    )
     from bytefreq_spark.session import get_spark
     from bytefreq_spark.synth import gen_transcripts_spark
 
@@ -121,11 +123,16 @@ def main():
     # 4. quality filter: two lean Arrow stages (featurize + the rescan
     # dictionary key — r8 routed the dict mask through the Python kernel,
     # which ships ONLY a 512-char prefix in and a ≤64-char key out),
-    # broadcast freq join.  auto_salt=False pins the salted exhibit shape
-    # (the probe-driven default resolves to the nosalt plan below on
-    # balanced input).
+    # broadcast freq join.  quality_filter's own parts, composed with the
+    # featurize salt pinned, give the salted exhibit shape (the probe in
+    # quality_filter resolves to the nosalt plan below on balanced input).
+    def composed(tr, salt, drop_text=False):
+        return label_turns(featurize(tr, salt),
+                           mask_frequency_dict(with_mask_key_arrow(tr)),
+                           drop_text)
+
     tr = gen_transcripts_spark(spark, 50)
-    qf = quality_filter(tr, salt_partitions=8, auto_salt=False)
+    qf = composed(tr, 8)
     audit("quality_filter", qf, [
         ("exactly 2 arrow UDF stages (featurize + dict key; decision native)",
          lambda p: len(re.findall(r"^\(\d+\) ArrowEvalPython", p, re.M)) == 2),
@@ -153,8 +160,7 @@ def main():
             r"Arguments: hashpartitioning\(conv_id", p)
         return m.group(1) if m else ""
 
-    qf_drop = quality_filter(tr, salt_partitions=8, drop_text=True,
-                             auto_salt=False)
+    qf_drop = composed(tr, 8, drop_text=True)
     audit("quality_filter_drop_text", qf_drop, [
         ("layout exchange carries NO raw text column",
          lambda p: _layout_exchange_cols(p) != ""
@@ -164,14 +170,13 @@ def main():
          and "_text_h#" in _layout_exchange_cols(p)),
     ])
 
-    # 4c. auto-salt skip (r7; the DEFAULT since r8): on a balanced input the
-    # probe returns None and the plan must lose the featurize round-robin
-    # exchange entirely — ONE full-data exchange (the conversation layout)
-    # instead of two.  Audited via salt_partitions=None + auto_salt=False,
-    # which is bit-identically the plan the probe-driven default produces
-    # after a skip decision (the probe job itself is separate and leaves no
-    # trace in this plan).
-    qf_nosalt = quality_filter(tr, salt_partitions=None, auto_salt=False)
+    # 4c. salt skip: on a balanced input quality_filter's probe returns
+    # None and the plan must lose the featurize round-robin exchange
+    # entirely — ONE full-data exchange (the conversation layout) instead
+    # of two.  Audited via featurize(tr, None), which is bit-identically the
+    # plan quality_filter produces after a skip decision (the probe job
+    # itself is separate and leaves no trace in this plan).
+    qf_nosalt = composed(tr, None)
     audit("quality_filter_nosalt", qf_nosalt, [
         ("no round-robin salt exchange",
          lambda p: "RoundRobinPartitioning" not in p),

@@ -97,24 +97,47 @@ def test_checkpoint_labels_match_golden(spark, tmp_path):
     )
 
 
-def test_perplexity_matches_golden_digest():
-    """``ppl`` values pinned bit for bit (the other goldens hold only the
-    keep/drop decisions they feed): sha256 of the float64 buffer over a
-    seeded multilingual sample plus empty, NULL, over-cap, 1-char (right
-    after a long row), dotted-I (lowers to two chars) and astral rows."""
-    import hashlib
-
-    from bytefreq_spark.perplexity import CAP_CHARS, perplexity
+def _perplexity_sample() -> pd.Series:
+    """A seeded multilingual sample plus empty, NULL, over-cap, 1-char
+    (right after a long row), dotted-I (lowers to two chars) and astral
+    rows."""
+    from bytefreq_spark.perplexity import CAP_CHARS
     from bytefreq_spark.synth import MULTILANG_KINDS, gen_transcripts_pandas
 
     edge = ["", None, "the quick brown fox " * 300, "x", "İ",
             "😀 astral 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 text"]
     assert len(edge[2]) > CAP_CHARS
-    s = pd.concat([
+    return pd.concat([
         gen_transcripts_pandas(200, kinds=MULTILANG_KINDS)["text"],
         pd.Series(edge, dtype=object),
     ], ignore_index=True)
-    ppl = perplexity(s)
+
+
+def test_perplexity_matches_golden_digest():
+    """``ppl`` values pinned bit for bit (the other goldens hold only the
+    keep/drop decisions they feed): sha256 of the float64 buffer over
+    :func:`_perplexity_sample`.  The digest is also that of every row
+    scored alone."""
+    import hashlib
+
+    from bytefreq_spark.perplexity import perplexity
+
+    ppl = perplexity(_perplexity_sample())
     assert len(ppl) == 3843
     assert hashlib.sha256(ppl.to_numpy().tobytes()).hexdigest() == (
-        "a143523b44c2fffb3b3d75d9bacc51bd4a2f51ea462e2d59f4be61d8ca2b8a0d")
+        "6adb3a94ed58214a9eeff05bead26acb88fcb51fe4591e30413fd569fce12feb")
+
+
+def test_perplexity_batch_equals_row_alone():
+    """A row's ``ppl`` does not depend on its neighbours: scoring the
+    sample as one batch equals scoring each row alone, bit for bit (Spark's
+    Arrow batches and the reference's single batch cut rows differently)."""
+    import numpy as np
+
+    from bytefreq_spark.perplexity import perplexity
+
+    s = _perplexity_sample()
+    batch = perplexity(s).to_numpy()
+    alone = np.array([perplexity(s.iloc[i:i + 1]).iloc[0]
+                      for i in range(len(s))])
+    assert batch.tobytes() == alone.tobytes()

@@ -17,7 +17,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from bytefreq_spark.pipeline import quality_filter, run_with_checkpoints
+from bytefreq_spark.pipeline import (
+    featurize, label_turns, mask_frequency_dict, quality_filter,
+    run_with_checkpoints, with_mask_key_arrow,
+)
 from bytefreq_spark.reference import run_reference
 from bytefreq_spark.synth import gen_transcripts_pandas, gen_transcripts_spark
 from tests.reference_paths import (
@@ -26,6 +29,13 @@ from tests.reference_paths import (
 
 N_CONVS = 400  # ≈ several thousand turns incl. one skewed whale (serial 399? no: 997-1 not hit; use skew_every=200)
 SKEW = dict(skew_every=200, skew_len=400)
+
+
+def forced_salt(df, n):
+    """``quality_filter`` with the featurize salt pinned to ``n`` partitions
+    instead of the probe's decision, composed from its parts."""
+    return label_turns(featurize(df, n),
+                       mask_frequency_dict(with_mask_key_arrow(df)))
 
 
 @pytest.fixture(scope="module")
@@ -722,7 +732,7 @@ def test_drop_text_equals_default_projection(spark, corpus_pdf):
 def test_auto_salt_decision(spark):
     """The r7 measured salt-skip (VERDICT_r6 #1): a balanced layout skips
     the featurize round-robin exchange, a whale-skewed layout keeps it, and
-    auto_salt=True output is identical to the always-salted run."""
+    the probed output is identical to the always-salted run."""
     from bytefreq_spark.pipeline import input_salt_decision
     from bytefreq_spark.synth import gen_transcripts_pandas as gen
 
@@ -735,18 +745,18 @@ def test_auto_salt_decision(spark):
     assert input_salt_decision(wdf, 8) == 8    # one fat partition → salt
 
     key = ["conv_id", "turn_idx"]
-    out_a = (quality_filter(df, salt_partitions=8, auto_salt=True)
+    out_a = (quality_filter(df, salt_partitions=8)
              .toPandas().sort_values(key).reset_index(drop=True))
-    out_b = (quality_filter(df, salt_partitions=8, auto_salt=False)
+    out_b = (forced_salt(df, 8)
              .toPandas().sort_values(key).reset_index(drop=True))
     pd.testing.assert_frame_equal(out_a, out_b)
 
 
 def test_auto_salt_is_default(spark):
-    """r8 (VERDICT_r7 #2): auto_salt defaults ON — a plain
-    ``quality_filter(df, salt_partitions=N)`` call probes the layout and
-    drops the round-robin exchange on balanced input, while
-    ``auto_salt=False`` restores the unconditional salt."""
+    """r8 (VERDICT_r7 #2): a plain ``quality_filter(df, salt_partitions=N)``
+    call probes the layout and drops the round-robin exchange on balanced
+    input, while the composed pipeline with ``featurize(df, N)`` salts
+    unconditionally."""
     from bytefreq_spark.synth import gen_transcripts_pandas as gen
 
     df = spark.createDataFrame(gen(120)).repartition(8)
@@ -757,15 +767,15 @@ def test_auto_salt_is_default(spark):
         return frame._jdf.queryExecution().executedPlan().toString()
 
     probed = quality_filter(df, salt_partitions=12)
-    forced = quality_filter(df, salt_partitions=12, auto_salt=False)
+    forced = forced_salt(df, 12)
     assert "RoundRobinPartitioning(12)" not in plan_of(probed)  # skipped
-    assert "RoundRobinPartitioning(12)" in plan_of(forced)      # opt-out salts
+    assert "RoundRobinPartitioning(12)" in plan_of(forced)      # pinned salt
 
 
 def test_checkpoint_resume_skips_salt_probe(spark, tmp_path, monkeypatch):
-    """ADVICE_r7 #1: a fully-resumed run must NOT re-scan the input just to
-    recompute the salt fingerprint — the committed labels config carries the
-    resolved decision, and the resume adopts it."""
+    """ADVICE_r7 #1: a fully-resumed run must NOT re-scan the input — the
+    salt only places rows, so it is not in the snapshot fingerprint and the
+    probe runs only when the featurized snapshot is rebuilt."""
     import bytefreq_spark.pipeline as P
 
     df = gen_transcripts_spark(spark, 40, partitions=4)
@@ -784,7 +794,11 @@ def test_checkpoint_resume_skips_salt_probe(spark, tmp_path, monkeypatch):
     labels = P.run_with_checkpoints(spark, df, out, salt_partitions=8)
     assert calls["n"] == 0, "resume re-ran the input salt probe"
     assert labels.count() == n_first
-    # a different config (drop_text) must NOT adopt the recorded salt
+    # another salt width is not another config: no probe, no new labels
+    P.run_with_checkpoints(spark, df, out, salt_partitions=16)
+    assert calls["n"] == 0
+    assert P.snapshot_versions(out, "labels") == [1]
+    # a fresh directory (here also another config) probes once
     out2 = str(tmp_path / "ckpt_probe_skip2")
     P.run_with_checkpoints(spark, df, out2, salt_partitions=8,
                            drop_text=True)
@@ -839,22 +853,22 @@ def test_input_salt_decision_byte_skew(spark):
 
 
 def test_auto_salt_default_target(spark):
-    """r7 review: auto_salt=True with no salt_partitions must still probe
-    (against a parallelism-derived target) and produce identical output —
-    previously it was a silent no-op."""
+    """r7 review: with no salt_partitions the probe still runs (against a
+    parallelism-derived target) and produces identical output — previously
+    it was a silent no-op."""
     pdf = gen_transcripts_pandas(100)
     df = spark.createDataFrame(pdf).repartition(8)
     key = ["conv_id", "turn_idx"]
-    out_a = (quality_filter(df, auto_salt=True)
+    out_a = (quality_filter(df)
              .toPandas().sort_values(key).reset_index(drop=True))
-    out_b = (quality_filter(df, salt_partitions=8, auto_salt=False)
+    out_b = (forced_salt(df, 8)
              .toPandas().sort_values(key).reset_index(drop=True))
     pd.testing.assert_frame_equal(out_a, out_b)
 
 
 @pytest.mark.parametrize("drop_text", [False, True])
 def test_checkpoint_drop_text_and_auto_salt(spark, corpus_pdf, drop_text):
-    """r7 review: the CLI forwards --drop-text/--auto-salt to the
+    """r7 review: the CLI forwards --drop-text and the probed salt to the
     checkpointed path — it must behave like quality_filter in the same
     config, column for column, not silently ignore the flags."""
     import tempfile as _tf
@@ -864,7 +878,7 @@ def test_checkpoint_drop_text_and_auto_salt(spark, corpus_pdf, drop_text):
     try:
         labels = run_with_checkpoints(
             spark, df, tmp, salt_partitions=8,
-            drop_text=drop_text, auto_salt=True,
+            drop_text=drop_text,
         ).toPandas()
         for gone in ("text", "tool", "lu_key"):
             assert (gone in labels.columns) is not drop_text
@@ -889,9 +903,7 @@ def test_checkpoint_lineage_resume_gap(spark, tmp_path):
 
     df = gen_transcripts_spark(spark, 40, partitions=4)
     out = str(tmp_path / "ckpt_gap")
-    # auto_salt=False: this test pins the config fingerprint (salt=8) to
-    # assert resume identity; the probe-resolved salt is covered elsewhere
-    run_with_checkpoints(spark, df, out, salt_partitions=8, auto_salt=False)
+    run_with_checkpoints(spark, df, out, salt_partitions=8)
 
     import json as _json
 
@@ -904,9 +916,8 @@ def test_checkpoint_lineage_resume_gap(spark, tmp_path):
     # is exactly "metrics committed, input_lineage never did"
     _os.remove(_os.path.join(out, "input_lineage.manifest.json"))
 
-    labels = run_with_checkpoints(spark, df, out, salt_partitions=8,
-                                  auto_salt=False)
-    cfg = {"version": 1, "salt": 8, "drop_text": False}
+    labels = run_with_checkpoints(spark, df, out, salt_partitions=8)
+    cfg = {"version": 2, "drop_text": False, "labels_version": 1}
     assert snapshot_valid(out, "input_lineage", cfg)
     lin = read_snapshot(spark, out, "input_lineage").toPandas()
     assert int(lin["rows"].sum()) == labels.count()
