@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bytefreq_spark.masks import duckdb_mask_sql, mask_col  # noqa: E402
+from bytefreq_spark.masks import duckdb_mask_sql  # noqa: E402
 from bytefreq_spark.profile import (  # noqa: E402
     char_histogram,
     dq_report,

@@ -416,24 +416,13 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     timings["_sf1_turns"] = n1
     timings["_sf1_turns_per_sec"] = round(n1 / timings["quality_filter_sf1"], 1)
 
-    # the at-scale config at the scale that shows it (VERDICT_r6 #2): at
-    # sf0.1 the 60 MB shuffle hides the drop_text pruning; on the 10×
-    # corpus the wide conversation exchange is big enough that shipping
-    # hash-only (no raw text/tool) must come in at or below the default wall
-    run("quality_filter_droptext_sf1",
-        lambda: _materialize(quality_filter(
-            s1["df"], salt_partitions=CPUS * 2, drop_text=True)),
-        clear_cache=True, restore=_restore_sf1)
-    timings["_droptext_sf1_turns_per_sec"] = round(
-        n1 / timings["quality_filter_droptext_sf1"], 1)
-
     # the FULL at-scale config — the salt probe AND drop_text together, the
     # two measured r7 levers and exactly what the scaling exhibit runs
     # (docs/SCALE.md): the layout probe (in the timing) skips the featurize
     # round-robin on this balanced input and raw text stays off the
     # conversation exchange.  This is the headline "what a 10^12-turn job
-    # would actually run" row; the deltas vs quality_filter_sf1 price the
-    # two exchanges separately (droptext row) and combined (this row)
+    # would actually run" row; its delta vs quality_filter_sf1 prices the
+    # two exchanges combined
     run("quality_filter_atscale_sf1",
         lambda: _materialize(quality_filter(
             s1["df"], salt_partitions=CPUS * 2, drop_text=True)),
@@ -528,7 +517,6 @@ def run_bench() -> dict:
         "turns_per_sec": timings.get("_turns_per_sec"),
         "multilang_turns": timings.get("_multilang_turns"),
         "multilang_turns_per_sec": timings.get("_multilang_turns_per_sec"),
-        "droptext_sf1_turns_per_sec": timings.get("_droptext_sf1_turns_per_sec"),
         "sf1_files256_turns_per_sec": timings.get("_sf1_files256_turns_per_sec"),
         "sf1_turns": timings.get("_sf1_turns"),
         "sf1_turns_per_sec": timings.get("_sf1_turns_per_sec"),

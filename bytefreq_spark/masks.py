@@ -1,17 +1,22 @@
 """Pattern masks — the heart of the engine.
 
 Re-implements the reference's four mask grains (see SURVEY.md §2.2; reference
-/root/reference/src/main.rs:34-114) as *three synchronized surfaces*:
+/root/reference/src/main.rs:34-114) as one Spark engine plus its oracle:
 
-1. ``mask_col(col, grain)``   — native Spark Column expressions (JVM regexp chain,
-   whole-stage-codegen friendly; the fast distributed path).
-2. ``mask_series(s, grain)``  — vectorized pandas implementation (codepoint
-   translate table built from ``unicodedata``; byte-exact to the reference's
-   per-char Rust semantics). Used inside pandas-UDF pipeline stages and as the
-   single-node reference implementation.
-3. ``duckdb_mask_sql(expr, grain)`` — ANSI/DuckDB SQL string for the driver's
+1. ``mask_pandas_udf(grain)`` — the Arrow-batched pandas UDF every profiling
+   surface masks through (``profile.pattern_col``).  It runs
+   ``mask_series`` (vectorized pandas: codepoint translate table built from
+   ``unicodedata`` + numpy run-collapse; byte-exact to the reference's
+   per-char Rust semantics) or, for the AWK grains, ``awk_mask_series``, and
+   keeps NULL as NULL.
+2. ``duckdb_mask_sql(expr, grain)`` — ANSI/DuckDB SQL string for the driver's
    correctness oracle (RE2 has no backreferences, so the run-length collapse is
    a list-lambda instead).
+
+``mask_str`` (pure Python) and the JVM regexp chain in
+``tests/reference_paths.py`` are differential-test references only.  The
+featurize and dictionary kernels (``flat_codes``, ``lu_mask_key_series``)
+share the HU table with ``mask_series``.
 
 Grain semantics (verified char-for-char against the reference goldens,
 README.md:276-314 — see FIXTURES.md §7):
@@ -34,60 +39,11 @@ import unicodedata
 from functools import lru_cache
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 GRAINS = ("H", "L", "HU", "LU")
 
-# ---------------------------------------------------------------------------
-# Shared regex spec (Java regex / Spark).  Order matters: ASCII rules first,
-# then whitespace, then Unicode categories, then the catch-all.
-# ---------------------------------------------------------------------------
-
+# ASCII rules shared by the DuckDB oracle SQL and the test-side JVM chain
 _H_STEPS = [("[a-z]", "a"), ("[A-Z]", "A"), ("[0-9]", "9")]
-
-# Rust char::is_whitespace == Unicode White_Space == these Cc chars + Zs+Zl+Zp.
-_HU_STEPS = _H_STEPS + [
-    ("[\\t\\n\\x0B\\f\\r\\x85\\p{Zs}\\p{Zl}\\p{Zp}]", " "),
-    ("[\\p{Lu}\\p{Lt}]", "A"),
-    ("[\\p{Ll}\\p{Lo}\\p{Lm}]", "a"),
-    ("[\\p{Nd}\\p{Nl}\\p{No}]", "9"),
-    ('[^Aa9 ",.\\-]', "_"),
-]
-
-# (?s) DOTALL so runs of line terminators collapse too — the reference's
-# Rust char loop (main.rs:79-95) and the DuckDB list-lambda both collapse
-# every repeated char including \n; without DOTALL Java/Python `.` skips them.
-_COLLAPSE_JAVA = ("(?s)(.)\\1+", "$1")
-
-
-_ASCII_SRC = (
-    "abcdefghijklmnopqrstuvwxyz" "ABCDEFGHIJKLMNOPQRSTUVWXYZ" "0123456789"
-)
-_ASCII_DST = "a" * 26 + "A" * 26 + "9" * 10
-
-# HU steps after the ASCII translate (whitespace, categories, catch-all)
-_HU_TAIL = _HU_STEPS[3:]
-
-
-def mask_col(col: Column | str, grain: str = "LU") -> Column:
-    """Native-Column mask expression (stays inside whole-stage codegen).
-
-    The ASCII a-z/A-Z/0-9 mapping is a single ``translate`` (char table, no
-    regex engine); only the Unicode-category rules need regexp passes."""
-    c = F.col(col) if isinstance(col, str) else col
-    if grain in ("AWK_H", "AWK_L"):  # M7 legacy grains route to the AWK mask
-        return awk_mask_col(c, grain[-1])
-    if grain not in GRAINS:
-        grain = "HU"  # reference: unknown grain falls through to HU (main.rs:104)
-    out = F.translate(c, _ASCII_SRC, _ASCII_DST)
-    if grain in ("HU", "LU"):
-        for pat, rep in _HU_TAIL:
-            out = F.regexp_replace(out, pat, rep)
-    if grain in ("L", "LU"):
-        out = F.regexp_replace(out, *_COLLAPSE_JAVA)
-        out = F.when(out == "", F.lit("_")).otherwise(out)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -391,15 +347,6 @@ _AWK_H_STEPS = [("[a-z]", "a"), ("[A-Z]", "A"), ("[0-9]", "9"), ("\\t", "T")]
 _AWK_L_STEPS = [("[a-z]+", "a"), ("[A-Z]+", "A"), ("[0-9]+", "9"), ("\\t", "T")]
 
 
-def awk_mask_col(col: Column | str, grain: str = "L") -> Column:
-    """Native-Column AWK-mode mask (legacy H/L grain deltas, M7)."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = c
-    for pat, rep in (_AWK_H_STEPS if grain == "H" else _AWK_L_STEPS):
-        out = F.regexp_replace(out, pat, rep)
-    return F.when(out == "", F.lit(AWK_NULL)).otherwise(out)
-
-
 def awk_mask_str(value: str, grain: str = "L") -> str:
     """Pure-Python AWK-mode mask (differential-test reference surface)."""
     out = value
@@ -425,7 +372,8 @@ def duckdb_awk_mask_sql(expr: str, grain: str = "L") -> str:
 
 
 def mask_pandas_udf(grain: str = "LU"):
-    """Series→Series pandas UDF for the given grain (Arrow-batched).
+    """Series→Series pandas UDF for the given grain (Arrow-batched); NULL in,
+    NULL out on every grain (the ``duckdb_mask_sql`` rule).
 
     2.2× faster than the JVM regexp chain on the profiling aggregation
     (measured sf0.1: 0.74 s vs 1.61 s for a 3-column melt+mask+agg) — the
@@ -434,17 +382,14 @@ def mask_pandas_udf(grain: str = "LU"):
     awk mask."""
     from pyspark.sql.functions import pandas_udf
 
+    kernel = mask_series
     if grain in ("AWK_H", "AWK_L"):
-        awk_grain = grain[-1]
-
-        @pandas_udf("string")
-        def _mask_awk(s: pd.Series) -> pd.Series:
-            return awk_mask_series(s, awk_grain)
-
-        return _mask_awk
+        kernel, grain = awk_mask_series, grain[-1]
 
     @pandas_udf("string")
     def _mask(s: pd.Series) -> pd.Series:
-        return mask_series(s, grain)
+        out = kernel(s, grain)
+        out[s.isna()] = None
+        return out
 
     return _mask

@@ -103,7 +103,8 @@ def _lu_key_udf():
 
     This is the same kernel featurize emits ``lu_key`` from, so dictionary
     keys and featurize keys agree STRUCTURALLY (one engine), on top of the
-    char-for-char JVM≡Python parity test_masks pins.  NULL text yields NULL
+    char-for-char parity test_masks pins against the JVM chain (kept in
+    tests/reference_paths.py).  NULL text yields NULL
     key, as in featurize (explicit ``.loc[text.isna()] = None``)."""
     from .masks import lu_mask_key_series
     from .quality import LU_KEY_LEN, LU_KEY_SRC_CHARS
@@ -216,7 +217,8 @@ def featurize(df: DataFrame, salt_partitions: int | None = None) -> DataFrame:
         df = df.repartition(salt_partitions)  # round-robin: breaks any skew
     # n_chars stays a JVM projection (one length() call); lu_key moved INTO
     # the featurize UDF (r6): the Python run-collapse kernel computes it ~7×
-    # cheaper per turn than mask_col's regexp chain, and both engines run
+    # cheaper per turn than the JVM regexp chain (kept as the test-side
+    # reference in tests/reference_paths.py), and both engines run
     # serially on the same task thread, so the cheaper one shortens the
     # stage (measured 0.5 s JVM vs 0.07 s Python wall on the 184k-turn
     # flagship; audit in docs/PLANS.md §lu_key_mask_cost).  The rescan

@@ -5,12 +5,18 @@ plus one example map per column behind a global mutex (main.rs:834-838,
 1008-1021; AWK ``allcolumns[field,pattern]++`` bytefreq_v1.05.awk:394-401) —
 dissolves into a single shuffled hash aggregation:
 
-    melt(all columns) → mask → groupBy(column, pattern) → (count, example)
+    melt(all columns) → pattern_col → groupBy(column, pattern) → (count, example)
 
 Catalyst plans this as partial+final HashAggregate with map-side combine, so
 the lock-serialized tallies of the reference become shuffle-free partial
 aggregation + one exchange on (column, pattern) — the key architectural win
 (SURVEY.md §4.1).
+
+One mask step and one tally serve every profiling surface: ``pattern_col``
+masks through the Arrow kernel ``masks.mask_pandas_udf`` (NULL stays NULL)
+and keeps ``.Rules.`` values verbatim (M5); ``tally`` counts per (column,
+pattern) — ``mask_frequency``, ``reservoir_examples`` and
+``sources.json_flatten.profile_json`` differ only in their example aggregate.
 
 Examples: the reference keeps one *random* example per (column, mask) via
 Algorithm-R reservoir (main.rs:185-189).  Default here is the deterministic
@@ -20,10 +26,10 @@ matchable; ``reservoir_examples`` provides the faithful variant.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .masks import mask_col
+from .masks import mask_pandas_udf
 
 # ---------------------------------------------------------------------------
 # Melt / unpivot (R1) — the load-bearing reshape
@@ -50,45 +56,44 @@ def melt(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def pattern_col(column: Column, raw: Column, grain: str = "LU") -> Column:
+    """The mask of ``raw`` for a value of profiled ``column``: the Arrow
+    kernel (NULL → NULL), except under a ``.Rules.`` path, whose values are
+    rule outputs and keep their raw value as the mask (M5, main.rs:34-36) so
+    enhanced output can be re-profiled without double-masking."""
+    return F.when(column.contains(".Rules."), raw).otherwise(
+        mask_pandas_udf(grain)(raw))
+
+
+def tally(long: DataFrame, grain: str, example: Column) -> DataFrame:
+    """``(column, pattern, count, example)`` over a long ``(column, raw)``
+    frame — the one mask-frequency tally (A1); ``example`` is the per-group
+    example aggregate over ``raw`` (A2)."""
+    masked = long.select(
+        "column", pattern_col(F.col("column"), F.col("raw"), grain)
+        .alias("pattern"), "raw")
+    return masked.groupBy("column", "pattern").agg(
+        F.count("*").alias("count"), example.alias("example"))
+
+
 def mask_frequency(
     df: DataFrame,
     columns: list[str] | None = None,
     grain: str = "LU",
-    examples: bool = True,
 ) -> DataFrame:
-    """``(column, pattern, count[, example])`` — one row per (column, mask).
+    """``(column, pattern, count, example)`` — one row per (column, mask),
+    example ``min(raw)``; NULL cells tally under a NULL pattern.
 
     The Spark analogue of the AWK associative-array tallies named in the
-    north star; the output is small (low-cardinality masks) and is what gets
-    broadcast as the mask-frequency dictionary downstream (J4).
-
-    Values are masked by the vectorized pandas UDF — measured 2.2× faster
-    than the JVM regexp chain ``mask_col`` at sf0.1 (translate table + numpy
-    collapse vs 8 regex passes); both surfaces are equivalence-tested
-    char-for-char (test_masks).  The pipeline's frequency dictionary masks
-    through the same kind of Arrow kernel (see pipeline.with_mask_key_arrow).
+    north star; the output is small (low-cardinality masks).
 
     Scale note: ``min(raw)`` on a string has an immutable aggregation buffer,
     which forces Catalyst to a **SortAggregate** (per-partition sort of the
-    melted data).  ``examples=False`` keeps the plan a pure partial+final
-    HashAggregate — use it wherever the example column isn't needed (e.g.
-    the pipeline's frequency dictionary).
+    melted data); the counts-only dictionary on the hot path,
+    ``pipeline.mask_frequency_dict``, stays a pure partial+final
+    HashAggregate.
     """
-    from .masks import mask_pandas_udf
-
-    long = melt(df, columns)
-    masked_col = mask_pandas_udf(grain)(F.col("raw"))
-    # M5 (main.rs:34-36): values under a ``.Rules.`` path are rule outputs —
-    # identity mask, so enhanced output can be re-profiled without
-    # double-masking
-    pattern = F.when(
-        F.col("column").contains(".Rules."), F.col("raw")
-    ).otherwise(masked_col)
-    masked = long.select("column", pattern.alias("pattern"), "raw")
-    aggs = [F.count("*").alias("count")]
-    if examples:
-        aggs.append(F.min("raw").alias("example"))
-    return masked.groupBy("column", "pattern").agg(*aggs)
+    return tally(melt(df, columns), grain, F.min("raw"))
 
 
 def dq_report(
@@ -129,14 +134,8 @@ def reservoir_examples(
     md5 (not xxhash64) so DuckDB can replicate the tiebreak exactly:
     ``arg_min(raw, md5(raw || seed))`` — the driver entry is fully oracled.
     """
-    long = melt(df, columns)
-    masked = long.select(
-        "column", mask_col(F.col("raw"), grain).alias("pattern"), "raw"
-    )
-    return masked.groupBy("column", "pattern").agg(
-        F.count("*").alias("count"),
-        F.min_by("raw", F.md5(F.concat("raw", F.lit(str(seed))))).alias("example"),
-    )
+    return tally(melt(df, columns), grain,
+                 F.min_by("raw", F.md5(F.concat("raw", F.lit(str(seed))))))
 
 
 # ---------------------------------------------------------------------------
@@ -369,8 +368,10 @@ def doubled_columns(df: DataFrame, columns: list[str] | None = None,
                     grain: str = "LU") -> DataFrame:
     """R2 (AWK report=2): each column followed by its DQ_<col> mask."""
     cols = columns or df.columns
-    out = df.select([F.col(c).cast("string").alias(c) for c in cols])
-    return out.withColumns({f"DQ_{c}": mask_col(F.col(c), grain) for c in cols})
+    out = df.select([F.col(f"`{c}`").cast("string").alias(c) for c in cols])
+    return out.withColumns({
+        f"DQ_{c}": pattern_col(F.lit(c), F.col(f"`{c}`"), grain) for c in cols
+    })
 
 
 def truncate_string(value: str, max_length: int = 20) -> str:
@@ -390,6 +391,11 @@ def truncate_string(value: str, max_length: int = 20) -> str:
     return result
 
 
+# How ``render_dq_report`` prints the pattern of NULL cells, apart from HU's
+# empty-value mask ``''``; no grain's mask can spell it.
+NULL_PATTERN = "<null>"
+
+
 def render_dq_report(
     report: DataFrame,
     examined_rows: int | None = None,
@@ -405,7 +411,8 @@ def render_dq_report(
     a tab-separated table ``col_{idx:05}_{name}  count  pattern  example``
     with {:<32}/{:<8} padding, columns in schema order, masks by count desc.
     ``examined_rows`` defaults to the report's count sum of the first column
-    (mirrors A4's tabular-only counter quirk when passed 0).
+    (mirrors A4's tabular-only counter quirk when passed 0).  A NULL pattern
+    prints as ``NULL_PATTERN``.
     """
     rows = report.orderBy("col_idx", F.desc("count"), "pattern").collect()
     if examined_rows is None:
@@ -423,9 +430,10 @@ def render_dq_report(
     out.append(f"{'':-<32}\t{'':-<8}\t{'':-<8}\t{'':-<32}")
     for r in rows:
         example = truncate_string(r["example"] or "", max_len)
+        pattern = NULL_PATTERN if r["pattern"] is None else r["pattern"]
         out.append(
             f"col_{r['col_idx']:05d}_{r['column']}\t{r['count']:<8}\t"
-            f"{r['pattern']:<8}\t{example:<32}"
+            f"{pattern:<8}\t{example:<32}"
         )
     return "\n".join(out)
 

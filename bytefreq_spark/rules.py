@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .masks import mask_col
+from .masks import mask_pandas_udf
 
 # Date formats in reference priority order (assertions.rs:84-91); single-letter
 # Java patterns accept 1-2 digit day/month like chrono's %d/%m.
@@ -344,8 +344,8 @@ def enhanced(
     out = []
     for c in cols:
         raw = F.col(c).cast("string")
-        hu = mask_col(raw, "HU")
-        lu = mask_col(raw, "LU")
+        hu = mask_pandas_udf("HU")(raw)
+        lu = mask_pandas_udf("LU")(raw)
         out.append(
             F.struct(
                 raw.alias("raw"),

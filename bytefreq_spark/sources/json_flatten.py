@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, StringType, StructType
 
+from ..profile import tally
+
 
 def json_quote_col(c: Column, dtype) -> Column:
     """M6: stringify a leaf like serde_json ``Value::to_string()`` —
@@ -130,18 +132,12 @@ def flatten_json(
 
 
 def profile_json(df: DataFrame, grain: str = "LU", collapse_arrays: bool = False) -> DataFrame:
-    """Full JSON DQ profile: flatten → mask (M6 quoting) → frequency table."""
-    from ..masks import mask_col
-
+    """Full JSON DQ profile: flatten → mask (M6 quoting) → frequency table
+    (``profile.tally`` over ``(path, value)``, example ``min(value)``)."""
     long = flatten_json(df, collapse_arrays=collapse_arrays, json_quote=True)
-    masked = long.select(
-        F.col("path").alias("column"),
-        mask_col(F.col("value"), grain).alias("pattern"),
-        F.col("value").alias("raw"),
-    )
-    return masked.groupBy("column", "pattern").agg(
-        F.count("*").alias("count"), F.min("raw").alias("example")
-    )
+    return tally(long.select(F.col("path").alias("column"),
+                             F.col("value").alias("raw")),
+                 grain, F.min("raw"))
 
 
 # ---------------------------------------------------------------------------

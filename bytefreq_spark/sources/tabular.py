@@ -110,12 +110,20 @@ def read_csv_rfc4180(
     semantics JVM-side (splittable, pushdown-friendly — the big-data path);
     header names get the same trim + spaces→``_`` normalization as
     ``read_delimited``.  All-string schema: profiling-on-read.
+
+    Spark reads an unquoted empty field (and a field missing from a short
+    row) as NULL; the csv crate gives ``""``.  NULLs are filled with ``""``
+    so an empty cell profiles as the empty-value mask (LU ``_``, AWK
+    ``<<null>>``), not as a NULL pattern.
     """
     df = spark.read.csv(
         path, sep=delimiter, header=header, quote='"', escape='"',
         mode="PERMISSIVE", inferSchema=False,
     )
-    return df.toDF(*[normalize_header(c) for c in df.columns])
+    return df.select([
+        F.coalesce(F.col(f"`{c}`"), F.lit("")).alias(normalize_header(c))
+        for c in df.columns
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -355,16 +363,6 @@ def read_excel_files(
                 yield pd.DataFrame(rows[header_row:], columns=header)
 
     return bins.select("content").mapInPandas(gen, schema=schema)
-
-
-def field_count_report(df_lines: DataFrame, column: str = "value",
-                       delimiter: str = "|") -> DataFrame:
-    """A5 over a raw line frame: rows per field-arity."""
-    sep = _sep_regex(delimiter)
-    return (
-        df_lines.select(F.size(F.split(F.col(column), sep)).alias("n_fields"))
-        .groupBy("n_fields").agg(F.count("*").alias("rows")).orderBy("n_fields")
-    )
 
 
 def make_xlsx(sheets: dict[str, list[list]], shared: bool = True) -> bytes:

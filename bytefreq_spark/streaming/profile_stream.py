@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..masks import mask_col
+from ..profile import pattern_col
 
 
 def streaming_mask_frequency(
@@ -27,11 +27,13 @@ def streaming_mask_frequency(
     watermark: str = "30 minutes",
 ) -> DataFrame:
     """Windowed streaming mask-frequency table: the A1 tally with late-data
-    handling. Output mode: update/append via the caller's writeStream."""
+    handling, masked by the batch surfaces' ``profile.pattern_col``.
+    Output mode: update/append via the caller's writeStream."""
     masked = stream.select(
         F.col(ts_col),
         F.lit(column).alias("column"),
-        mask_col(F.col(column).cast("string"), grain).alias("pattern"),
+        pattern_col(F.lit(column), F.col(f"`{column}`").cast("string"),
+                    grain).alias("pattern"),
     )
     return (
         masked.withWatermark(ts_col, watermark)

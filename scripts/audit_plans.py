@@ -94,16 +94,13 @@ def main():
         ("wholestage codegen", lambda p: "codegen id" in p),
     ])
 
-    # 2a. mask-frequency dictionary (counts only): partial+final hash agg
-    from bytefreq_spark.profile import mask_frequency
-
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    dict_q = mask_frequency(orders, ["o_orderpriority"], "LU", examples=False)
+    # 2a. mask-frequency dictionary (counts only): partial+final hash agg —
+    # the dictionary the pipeline builds, over the Arrow lu_key kernel
+    tr = gen_transcripts_spark(spark, 50)
+    dict_q = mask_frequency_dict(with_mask_key_arrow(tr))
     audit("mask_frequency_dict", dict_q, [
         ("partial+final HashAggregate", lambda p: len(re.findall(r"^\(\d+\) HashAggregate", p, re.M)) >= 2),
         ("single shuffle on group keys", lambda p: len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1),
-        # note: the 8-deep regexp_replace mask chain exceeds codegen method
-        # size limits -> interpreted projection; still JVM-side, no check
     ])
 
     # 2b. report variant with min(raw) examples: min(string) has an immutable
@@ -131,7 +128,6 @@ def main():
                            mask_frequency_dict(with_mask_key_arrow(tr)),
                            drop_text)
 
-    tr = gen_transcripts_spark(spark, 50)
     qf = composed(tr, 8)
     audit("quality_filter", qf, [
         ("exactly 2 arrow UDF stages (featurize + dict key; decision native)",

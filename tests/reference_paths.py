@@ -2,9 +2,11 @@
 differential-test references for the production path in
 ``bytefreq_spark.pipeline``:
 
-* ``with_mask_key`` — the JVM mask chain (translate + regexp passes +
-  backreference collapse) for the dictionary key, vs the Arrow kernel in
-  ``featurize`` / ``with_mask_key_arrow``;
+* ``mask_col`` — the JVM mask chain (translate + regexp passes +
+  backreference collapse) as native Column expressions, vs the Arrow kernel
+  ``masks.mask_pandas_udf`` and the pure-Python ``masks.mask_str``;
+* ``with_mask_key`` — the JVM mask chain for the dictionary key, vs the
+  Arrow kernel in ``featurize`` / ``with_mask_key_arrow``;
 * ``with_dup_flag`` — the duplicate flag as a lag over the raw text, vs the
   pre-shuffle 64-bit hash lag in ``with_dup_flag_hashed``;
 * ``with_prev_turn`` — the duplicate flag as a self-join on
@@ -41,7 +43,7 @@ from bytefreq_spark.langid import (
     SCRIPT_PATTERNS,
     script_threshold,
 )
-from bytefreq_spark.masks import mask_col, mask_series, mask_str
+from bytefreq_spark.masks import GRAINS, _H_STEPS, mask_series, mask_str
 from bytefreq_spark.quality import LU_KEY_LEN, LU_KEY_SRC_CHARS, decide
 from bytefreq_spark.scrub import SCRUB_RULES
 from bytefreq_spark.similarity import _dot
@@ -50,6 +52,50 @@ DECISION_SCHEMA = StructType([
     StructField("keep", BooleanType()),
     StructField("drop_reason", StringType()),
 ])
+
+
+# Java-regex HU rules.  Rust char::is_whitespace == Unicode White_Space ==
+# these Cc chars + Zs+Zl+Zp.  Order matters: ASCII rules first, then
+# whitespace, then Unicode categories, then the catch-all.
+_HU_STEPS = _H_STEPS + [
+    ("[\\t\\n\\x0B\\f\\r\\x85\\p{Zs}\\p{Zl}\\p{Zp}]", " "),
+    ("[\\p{Lu}\\p{Lt}]", "A"),
+    ("[\\p{Ll}\\p{Lo}\\p{Lm}]", "a"),
+    ("[\\p{Nd}\\p{Nl}\\p{No}]", "9"),
+    ('[^Aa9 ",.\\-]', "_"),
+]
+
+# (?s) DOTALL so runs of line terminators collapse too — the reference's
+# Rust char loop (main.rs:79-95) and the DuckDB list-lambda both collapse
+# every repeated char including \n; without DOTALL Java/Python `.` skips them.
+_COLLAPSE_JAVA = ("(?s)(.)\\1+", "$1")
+
+_ASCII_SRC = (
+    "abcdefghijklmnopqrstuvwxyz" "ABCDEFGHIJKLMNOPQRSTUVWXYZ" "0123456789"
+)
+_ASCII_DST = "a" * 26 + "A" * 26 + "9" * 10
+
+# HU steps after the ASCII translate (whitespace, categories, catch-all)
+_HU_TAIL = _HU_STEPS[3:]
+
+
+def mask_col(col: F.Column | str, grain: str = "LU") -> F.Column:
+    """Native-Column mask expression (JVM, whole-stage codegen friendly).
+
+    The ASCII a-z/A-Z/0-9 mapping is a single ``translate`` (char table, no
+    regex engine); only the Unicode-category rules need regexp passes.
+    NULL in, NULL out."""
+    c = F.col(col) if isinstance(col, str) else col
+    if grain not in GRAINS:
+        grain = "HU"  # reference: unknown grain falls through to HU (main.rs:104)
+    out = F.translate(c, _ASCII_SRC, _ASCII_DST)
+    if grain in ("HU", "LU"):
+        for pat, rep in _HU_TAIL:
+            out = F.regexp_replace(out, pat, rep)
+    if grain in ("L", "LU"):
+        out = F.regexp_replace(out, *_COLLAPSE_JAVA)
+        out = F.when(out == "", F.lit("_")).otherwise(out)
+    return out
 
 
 def with_mask_key(df: DataFrame) -> DataFrame:

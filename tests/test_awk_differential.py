@@ -16,11 +16,9 @@ import shutil
 import subprocess
 
 import pytest
-from pyspark.sql import functions as F
 
 from bytefreq_spark.masks import (
     AWK_NULL,
-    awk_mask_col,
     awk_mask_series,
     awk_mask_str,
     duckdb_awk_mask_sql,
@@ -117,14 +115,6 @@ def test_awk_grain_deltas_vs_rust():
     # tab becomes T in AWK mode, stays verbatim in Rust H
     assert awk_mask_str("a\tb", "H") == "aTa"
     assert mask_str("a\tb", "H") == "a\ta"
-
-
-def test_awk_mask_col_matches_python(spark):
-    df = spark.createDataFrame([(v,) for v in VALUES], ["raw"])
-    for grain in ("H", "L"):
-        rows = df.select("raw", awk_mask_col(F.col("raw"), grain).alias("m")).collect()
-        for r in rows:
-            assert r["m"] == awk_mask_str(r["raw"], grain), (repr(r["raw"]), grain)
 
 
 def test_awk_grain_via_mask_frequency(spark):

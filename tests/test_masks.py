@@ -1,6 +1,6 @@
 """Mask golden tests (FIXTURES.md §7, verified against reference README goldens)
-across all three surfaces: pure-Python, pandas, native Spark Column, plus the
-DuckDB oracle SQL generator."""
+across every surface: pure-Python, pandas, the Arrow UDF, the test-side JVM
+chain (tests/reference_paths.py), plus the DuckDB oracle SQL generator."""
 
 from __future__ import annotations
 
@@ -12,10 +12,10 @@ from pyspark.sql import functions as F
 from bytefreq_spark.masks import (
     GRAINS,
     duckdb_mask_sql,
-    mask_col,
     mask_series,
     mask_str,
 )
+from tests.reference_paths import mask_col
 
 # (raw, H, L, HU, LU) — FIXTURES.md §7 golden vectors
 GOLDEN = [
@@ -92,6 +92,26 @@ def test_mask_col_matches_python(spark):
         by_raw = {r["raw"]: r["m"] for r in rows}
         for g in GOLDEN:
             assert by_raw[g[0]] == g[1 + gi], (g[0], grain, by_raw[g[0]])
+
+
+def test_mask_pandas_udf_matches_python_null_stays_null(spark):
+    """The production Spark engine: goldens on every grain (AWK grains via
+    awk_mask_str), and NULL in → NULL out on every grain — the
+    duckdb_mask_sql rule — while mask_series keeps its NaN → ``_``/``""``."""
+    from bytefreq_spark.masks import awk_mask_str, mask_pandas_udf
+
+    df = spark.createDataFrame([(g[0],) for g in GOLDEN] + [(None,)], "raw string")
+    for grain in GRAINS + ("AWK_H", "AWK_L"):
+        rows = df.select(
+            "raw", mask_pandas_udf(grain)(F.col("raw")).alias("m")).collect()
+        for r in rows:
+            if r["raw"] is None:
+                want = None
+            elif grain.startswith("AWK_"):
+                want = awk_mask_str(r["raw"], grain[-1])
+            else:
+                want = mask_str(r["raw"], grain)
+            assert r["m"] == want, (repr(r["raw"]), grain)
 
 
 def test_duckdb_oracle_matches_python():

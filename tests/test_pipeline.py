@@ -454,6 +454,61 @@ def test_snapshot_time_travel(spark, tmp_path):
     assert read_snapshot(spark, out, "t").count() == 9     # current intact
 
 
+def test_snapshot_modes_set_in_process(spark, tmp_path):
+    """The session's local file system sets modes through java.nio (no chmod
+    process per created file or directory), and a snapshot gets the modes
+    Hadoop's default umask 022 gives: 0755 directories, 0644 files."""
+    import os as _os
+
+    from bytefreq_spark.pipeline import write_snapshot
+    from bytefreq_spark.session import local_fs_classpath
+
+    if local_fs_classpath() is None:
+        pytest.skip("no javac or Hadoop jar: the session keeps Hadoop's own")
+    jvm = spark.sparkContext._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"),
+        spark.sparkContext._jsc.hadoopConfiguration())
+    assert fs.getClass().getName() == "bytefreq.InProcessLocalFileSystem"
+
+    path = write_snapshot(spark.range(50, numPartitions=2), str(tmp_path),
+                          "t", {})
+    modes = {}
+    for root, dirs, files in _os.walk(path):
+        modes[root] = 0o755
+        modes.update({_os.path.join(root, f): 0o644 for f in files})
+    assert sum(f.endswith(".crc") for f in modes) >= 2  # checksums still kept
+    assert {p: _os.stat(p).st_mode & 0o7777 for p in modes} == modes
+
+    # exact bits, and the sticky bit (no java.nio flag) through chmod
+    for mode in ("600", "751", "1777"):
+        fs.setPermission(jvm.org.apache.hadoop.fs.Path(path),
+                         jvm.org.apache.hadoop.fs.permission.FsPermission(mode))
+        assert _os.stat(path).st_mode & 0o7777 == int(mode, 8)
+
+
+def test_get_spark_on_a_running_jvm_keeps_hadoop_fs(tmp_path):
+    """A driver JVM started without the class's directory (plain builder,
+    then stopped) gets no ``fs.file.impl`` it cannot load: get_spark on it
+    still writes and reads local parquet."""
+    import os as _os
+    import subprocess
+    import sys
+
+    script = f"""
+from pyspark.sql import SparkSession
+from bytefreq_spark.session import get_spark
+SparkSession.builder.master("local[2]").getOrCreate().stop()
+s = get_spark("reuse", cores=2)
+s.range(10).write.parquet({str(tmp_path / "p")!r})
+assert s.read.parquet({str(tmp_path / "p")!r}).count() == 10
+s.stop()
+"""
+    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", script], cwd=repo, check=True,
+                   capture_output=True, timeout=600)
+
+
 def test_quality_filter_stream_multibatch_boundary(spark, tmp_path):
     """The stateless stream's dup scope, made falsifiable: with >1
     micro-batch the foreachBatch filter detects only intra-batch duplicate

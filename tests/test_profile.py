@@ -4,6 +4,8 @@ repartition-invariance property (determinism half of the scaling check)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -155,3 +157,84 @@ def test_sessionize_gap_boundary(spark):
         (1, "2025-01-01 02:00:00", 1),
         (2, "2025-01-01 05:00:00", 1),
     ]
+
+
+RULES_COL = "d.Rules.std_date"
+
+
+def _want(column, raw, grain):
+    """Per-cell pattern every profiling surface must give: NULL → NULL, the
+    raw value under a ``.Rules.`` path (M5), else the grain's mask."""
+    from bytefreq_spark.masks import awk_mask_str, mask_str
+
+    if raw is None:
+        return None
+    if ".Rules." in column:
+        return raw
+    if grain.startswith("AWK_"):
+        return awk_mask_str(raw, grain[-1])
+    return mask_str(raw, grain)
+
+
+def _counts(rows):
+    out = Counter()
+    for r in rows:
+        out[(r["column"], r["pattern"])] += r["count"]
+    return dict(out)
+
+
+def test_profiling_surfaces_agree_per_cell(spark, tmp_path):
+    """One mask step and one tally behind every Spark profiling surface: the
+    same pattern per cell from mask_frequency, reservoir_examples,
+    doubled_columns, enhanced (HU/LU), profile_json and the streaming tally
+    — NULL stays NULL and ``.Rules.`` values keep their raw value (M5).
+    profile_json sees the M6 serialization (quoted strings, NULL → ``null``)
+    of the same cells."""
+    from bytefreq_spark.profile import doubled_columns, reservoir_examples
+    from bytefreq_spark.rules import enhanced
+    from bytefreq_spark.sources.json_flatten import profile_json
+    from bytefreq_spark.streaming.profile_stream import streaming_mask_frequency
+
+    cells = {"v": ["ab", None, ""], RULES_COL: ["2019-01-02", None, ""]}
+    df = spark.createDataFrame(
+        list(zip(*cells.values())), f"v string, `{RULES_COL}` string")
+    src = tmp_path / "src"
+    df.withColumn("ts", F.current_timestamp()).write.parquet(str(src))
+    stream_schema = spark.read.parquet(str(src)).schema
+    nested = spark.createDataFrame(
+        [("ab", {"Rules": {"std_date": "2019-01-02"}}),
+         (None, {"Rules": {"std_date": None}}),
+         ("", None)],
+        "v string, d struct<Rules: struct<std_date: string>>")
+    json_cells = {"v": ['"ab"', "null", '""'],
+                  RULES_COL: ['"2019-01-02"', "null", "null"]}
+
+    for grain in ("LU", "HU", "AWK_L"):
+        want = dict(Counter((c, _want(c, raw, grain))
+                            for c, vals in cells.items() for raw in vals))
+        assert _counts(mask_frequency(df, grain=grain).collect()) == want, grain
+        assert _counts(reservoir_examples(df, grain=grain).collect()) == want, grain
+
+        for row in doubled_columns(df, grain=grain).collect():
+            for c in cells:
+                assert row[f"DQ_{c}"] == _want(c, row[c], grain), (c, grain)
+        if grain in ("HU", "LU"):
+            for row in enhanced(df, ["v"]).collect():
+                assert row["v"][grain] == _want("v", row["v"]["raw"], grain)
+
+        json_want = dict(Counter((c, _want(c, raw, grain))
+                                 for c, vals in json_cells.items() for raw in vals))
+        assert _counts(profile_json(nested, grain).collect()) == json_want, grain
+
+        got = {}
+        for i, c in enumerate(cells):
+            name = f"surfaces_{grain}_{i}"
+            stream = spark.readStream.schema(stream_schema).parquet(str(src))
+            q = (streaming_mask_frequency(stream, c, grain, window="1 hour")
+                 .writeStream.format("memory").queryName(name)
+                 .outputMode("complete")
+                 .option("checkpointLocation", str(tmp_path / name))
+                 .trigger(availableNow=True).start())
+            q.awaitTermination(120)
+            got.update(_counts(spark.sql(f"select * from {name}").collect()))
+        assert got == want, grain

@@ -231,6 +231,30 @@ def test_render_dq_report_layout(spark):
     assert lines[11].startswith("col_00001_coord\t")
 
 
+def test_render_dq_report_null_pattern(spark):
+    """A NULL ``.Rules.`` value (the enhanced output of an invalid date)
+    profiles to a NULL pattern; the report renders it as ``<null>``, apart
+    from HU's empty-value mask ``''``."""
+    from bytefreq_spark.profile import NULL_PATTERN, dq_report, render_dq_report
+    from bytefreq_spark.rules import enhanced_flat
+
+    assert NULL_PATTERN == "<null>"
+    df = spark.createDataFrame([("2019-01-02",), ("not a date",)], ["d"])
+    flat = enhanced_flat(df, ["d"])
+    rep = dq_report(flat, ["d.Rules.std_date"], "LU")
+    assert {r["pattern"] for r in rep.collect()} == {"2019-01-02", None}
+    lines = render_dq_report(rep).split("\n")
+    assert lines[2] == "Examined rows: 2"
+    body = [ln.split("\t") for ln in lines[8:]]
+    assert sorted(b[2].strip() for b in body) == ["2019-01-02", "<null>"]
+    assert all(b[0] == "col_00000_d.Rules.std_date" for b in body)
+
+    hu = spark.createDataFrame([("",), (None,), (None,)], "v string")
+    lines = render_dq_report(dq_report(hu, grain="HU")).split("\n")
+    assert [ln.split("\t")[1:3] for ln in lines[8:]] == [
+        ["2       ", "<null>  "], ["1       ", "        "]]
+
+
 def test_char_histogram_named_and_cp_render(spark):
     from bytefreq_spark.profile import char_histogram_named, render_cp_report
 

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bytefreq_spark.sources.json_flatten import flatten_json, profile_json
-from bytefreq_spark.sources.tabular import field_count_report, read_delimited
+from bytefreq_spark.sources.tabular import read_delimited
 
 NDJSON = [
     {"customer": {"address": {"postcode": "SW1 1AA"}},
@@ -102,10 +102,14 @@ def test_read_delimited_ragged(spark, tmp_path_factory):
 
 
 def test_field_count_report(spark, tmp_path_factory):
+    """A5 over a raw line frame read from a pipe-delimited file."""
+    from bytefreq_spark.profile import field_count_histogram
+
     p = tmp_path_factory.mktemp("pip2") / "d.pip"
     p.write_text("a|b|c\n1|2\n1|2|3|4\n")
     lines = spark.read.text(str(p))
-    got = {(r["n_fields"], r["rows"]) for r in field_count_report(lines).collect()}
+    got = {(r["n_fields"], r["rows"])
+           for r in field_count_histogram(lines, "value", "\\|").collect()}
     assert got == {(2, 1), (3, 1), (4, 1)}
 
 
@@ -153,7 +157,10 @@ def test_identity_mask_rules_paths(spark):
 
 
 def test_csv_rfc4180_quoted_fields(spark, tmp_path_factory):
-    """S2 primary path: embedded delimiters and doubled-quote escapes."""
+    """S2 primary path: embedded delimiters and doubled-quote escapes; an
+    empty field reads as ``""`` (the csv crate's value, where Spark gives
+    NULL), so it profiles as the empty-value mask, not a NULL pattern."""
+    from bytefreq_spark.profile import mask_frequency
     from bytefreq_spark.sources.tabular import read_csv_rfc4180
 
     p = tmp_path_factory.mktemp("csv") / "q.csv"
@@ -162,6 +169,7 @@ def test_csv_rfc4180_quoted_fields(spark, tmp_path_factory):
         '1|"contains|pipe"|x\n'
         '2|"said ""hi"" twice"|y\n'
         '3|unquoted|z\n'
+        '4||w\n'
     )
     df = read_csv_rfc4180(spark, str(p), delimiter="|", header=True)
     assert df.columns == ["id", "note_name", "plain"]
@@ -169,6 +177,11 @@ def test_csv_rfc4180_quoted_fields(spark, tmp_path_factory):
     assert rows["1"] == "contains|pipe"
     assert rows["2"] == 'said "hi" twice'
     assert rows["3"] == "unquoted"
+    assert rows["4"] == ""
+    for grain, empty in (("LU", "_"), ("AWK_L", "<<null>>")):
+        freq = {r["pattern"]: r["count"]
+                for r in mask_frequency(df, ["note_name"], grain).collect()}
+        assert freq[empty] == 1 and None not in freq, grain
 
 
 def test_excel_cell_to_string_semantics():
