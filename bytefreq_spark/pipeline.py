@@ -9,7 +9,9 @@ stages):
    few or skewed by rows or bytes.
 2. **featurize** — one pandas-UDF stage computing per-turn features, langid,
    perplexity, the LU mask key and scrubbed text from the shared kernels
-   (single Arrow round-trip; no per-row Python).
+   (single Arrow round-trip; no per-row Python).  Only ``text`` crosses in;
+   every turn is scrubbed by the one Python rule table, the same function
+   ``reference.run_reference`` runs.
 3. **mask-frequency dictionary** — distributed ``groupBy(lu_key).count()``
    (the Spark analogue of bytefreq's associative-array tallies).  Only its
    source differs per entry point: a column-pruned Arrow rescan of the input
@@ -32,7 +34,6 @@ from __future__ import annotations
 import json
 import os
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,39 +60,20 @@ FEATURE_SCHEMA = StructType([
 
 def _featurize_udf():
     @F.pandas_udf(FEATURE_SCHEMA)
-    def feats(text: pd.Series, scrub_flag: pd.Series) -> pd.DataFrame:
-        # lu_key from the PYTHON kernel: the vectorized run-collapse costs
-        # ~13 µs core/turn vs ~87 µs for the JVM regexp chain (docs/PLANS.md
-        # §lu_key_mask_cost) — the featurize stage pays whichever engine
-        # computes it, so the cheap one wins.  NULL text yields NULL lu_key,
-        # exactly as the rescan dictionary's key (with_mask_key_arrow).
+    def feats(text: pd.Series) -> pd.DataFrame:
+        # lu_key from the Python kernel: the vectorized run-collapse costs
+        # ~13 µs core/turn vs ~87 µs for the JVM regexp chain kept in
+        # tests/reference_paths.py (docs/PLANS.md §lu_key_mask_cost).  NULL
+        # text yields NULL lu_key, exactly as the rescan dictionary's key
+        # (with_mask_key_arrow).
         f = text_features(text).drop(columns=["n_chars"])
         f.loc[text.isna(), "lu_key"] = None
         f["lang"] = detect_language(text)
         f["ppl"] = perplexity(text)
-        # three-state scrub protocol (flags set JVM-side in ``featurize``):
-        # 0 = clean ASCII — no rule can match (prefilter), scrub ≡ identity;
-        # 1 = candidate ASCII — the JVM regexp chain scrubs it OUTSIDE the
-        #     UDF (scrub.SCRUB_RULES_JAVA dialect equivalence) and the
-        #     post-UDF projection composites it in: the pre-scrubbed text
-        #     never crosses Arrow in either direction (before r7 it rode
-        #     along as a UDF argument and came straight back out);
-        # 2 = non-ASCII or NULL — the Python kernel decides, and rows the
-        #     rule chain leaves unchanged come back NULL too
-        #     (scrub_series_sparse) — on multilingual prose the candidate
-        #     rate is ~0%, so the unchanged corpus stops re-shipping on the
-        #     Arrow return path just like the ASCII flag-0 rows.
-        # Only genuinely REWRITTEN text (any flag) and the NULL→"" contract
-        # rows return a value here; everything else is NULL and the JVM
-        # restores the identity.  Byte-identical overall, enforced by the
-        # scrub differential tests.
-        flag = scrub_flag.to_numpy()
-        scr = pd.Series(
-            np.full(len(text), None, dtype=object), index=text.index)
-        py = flag == 2
-        if py.any():
-            scr[py] = scrub_series_sparse(text[py])
-        f["scrubbed_text"] = scr
+        # rows the rule table leaves unchanged come back NULL, so unchanged
+        # text never re-crosses Arrow; ``featurize`` coalesces them back to
+        # the input.  NULL text scrubs to "".
+        f["scrubbed_text"] = scrub_series_sparse(text)
         return f[[fld.name for fld in FEATURE_SCHEMA.fields]]
 
     return feats
@@ -209,68 +191,23 @@ def featurize(df: DataFrame, salt_partitions: int | None = None) -> DataFrame:
     ``salt_partitions`` forces an even round-robin repartition before the UDF
     stage so a skewed upstream layout (one huge conversation in one input
     file) cannot starve the scoring stage — per-turn work is
-    order-independent, so this is free correctness-wise.
+    order-independent, so this is free correctness-wise.  The Arrow stage
+    ships only ``text``; every turn is scrubbed by the one Python rule
+    table (``scrub.scrub_series_sparse``), and the rows it leaves unchanged
+    coalesce back to the input JVM-side.
     """
-    from .scrub import _TOX_STEMS, scrub_col
-
     if salt_partitions:
         df = df.repartition(salt_partitions)  # round-robin: breaks any skew
-    # n_chars stays a JVM projection (one length() call); lu_key moved INTO
-    # the featurize UDF (r6): the Python run-collapse kernel computes it ~7×
-    # cheaper per turn than the JVM regexp chain (kept as the test-side
-    # reference in tests/reference_paths.py), and both engines run
-    # serially on the same task thread, so the cheaper one shortens the
-    # stage (measured 0.5 s JVM vs 0.07 s Python wall on the 184k-turn
-    # flagship; audit in docs/PLANS.md §lu_key_mask_cost).  The rescan
-    # dictionary branch runs the same kernel (with_mask_key_arrow).
+    # n_chars stays a JVM projection (one length() call); every other
+    # feature, lu_key included, comes from the UDF's Python kernels.  The
+    # rescan dictionary branch runs the same lu_key kernel
+    # (with_mask_key_arrow).
     df = df.withColumn(
         "n_chars", F.coalesce(F.length("text"), F.lit(0)).cast("long"))
-    # ASCII router for the scrub fast path: char count == UTF-8 byte count
-    # ⇔ pure ASCII ⇔ the JVM regex chain is byte-identical to the Python
-    # kernel (scrub.SCRUB_RULES_JAVA).  The JVM side applies the SAME
-    # conservative prefilter the Python kernel uses (every rule needs a
-    # digit/'@' or a toxicity stem — on ASCII rows [0-9] ≡ Python's \d):
-    # clean rows scrub to THEMSELVES, skipping the 7-regex chain entirely
-    # (without this, the JVM path ran the full chain on every ASCII row and
-    # was slower than the prefiltered Python kernel on clean short-turn
-    # corpora).  Non-ASCII/NULL rows stay NULL here and are scrubbed inside
-    # the UDF.  Runs post-salt, so it feeds the Arrow stage directly with
-    # no extra exchange.
-    ascii_ok = F.length("text") == F.octet_length("text")
-    cand = F.col("text").rlike("[0-9@]")
-    lowered = F.lower(F.col("text"))
-    for stem in _TOX_STEMS:
-        cand = cand | lowered.contains(stem)
-    # 3-state flag; the JVM-scrubbed candidate text stays a JVM-side column
-    # (``_scrub_pre``): ArrowEvalPython ships ONLY the UDF's argument
-    # columns to Python, so keeping it out of the UDF signature means the
-    # pre-scrubbed text never crosses Arrow at all — the post-UDF projection
-    # composites it back in.  (Before r7 it rode through the UDF and back;
-    # and before r6, shipping scrub_pre for ALL ascii rows doubled the
-    # Arrow payload on clean corpora — measured ~10% featurize cost.)
-    scrub_flag = (
-        F.when(ascii_ok & ~cand, F.lit(0))
-        .when(ascii_ok, F.lit(1))
-        .otherwise(F.lit(2))
-    ).cast("int")
-    df = df.withColumns({
-        "_scrub_flag": scrub_flag,
-        "_scrub_pre": F.when(ascii_ok & cand, scrub_col(F.col("text"))),
-    })
     return (
-        df.withColumn(
-            "_f", _featurize_udf()(F.col("text"), F.col("_scrub_flag"))
-        ).select("*", "_f.*").drop("_f")
-        # the UDF returns NULL scrubbed_text for every identity row (clean
-        # ASCII flag-0 AND unchanged non-ASCII flag-2) so the Arrow return
-        # path never carries unchanged corpus text; flag-1 rows take the
-        # JVM-scrubbed column, everything else coalesces back to the input
-        .withColumn(
-            "scrubbed_text",
-            F.when(F.col("_scrub_flag") == 1, F.col("_scrub_pre"))
-            .otherwise(F.coalesce("scrubbed_text", "text")),
-        )
-        .drop("_scrub_flag", "_scrub_pre")
+        df.withColumn("_f", _featurize_udf()(F.col("text")))
+        .select("*", "_f.*").drop("_f")
+        .withColumn("scrubbed_text", F.coalesce("scrubbed_text", "text"))
     )
 
 

@@ -1,10 +1,10 @@
 """Deterministic regex PII/toxicity scrubber.
 
 An ordered, frozen rule table (order matters and is part of the contract —
-SURVEY.md §7.5 risk 1).  Applied with the *Python* ``re`` engine via pandas
-``str.replace`` in both the distributed pandas-UDF stage and the single-node
-reference implementation, so scrubbed text is byte-identical by construction
-(no Java-vs-Python regex semantic drift).
+SURVEY.md §7.5 risk 1).  It has one engine: the *Python* ``re`` engine via
+pandas ``str.replace``, run by both the featurize pandas-UDF stage and the
+single-node reference implementation, so scrubbed text is byte-identical by
+construction (there is no Java dialect of the table to drift).
 
 Ancestry: the reference's encoding-repair pre-pass (win1252_to_utf8.sed — an
 ordered byte-rewrite table applied before profiling) is the same shape:
@@ -36,13 +36,17 @@ SCRUB_RULES: list[tuple[str, re.Pattern, str]] = [
 # (email/card/ip/phone/ssn/postcode) or one of the toxicity stems below —
 # rows failing the cheap checks provably cannot match any rule and skip the
 # 7-regex chain entirely (~7× on mostly-clean corpora; measured 13k→98k
-# rows/s).  test_scrub_fast_equals_naive guards the invariant: if a rule is
-# added whose matches can evade this prefilter, the differential test fails.
+# rows/s).  The toxicity rule is IGNORECASE, and Python's ``re`` folds three
+# non-ASCII code points onto stem letters that ``str.lower()`` leaves apart:
+# U+017F 'ſ' onto s, U+0130 'İ' and U+0131 'ı' onto i — so they join the
+# character class.  test_scrub_fast_equals_naive and
+# test_scrub_case_folds_equal_naive guard the invariant: if a rule is added
+# whose matches can evade this prefilter, the differential tests fail.
 _TOX_STEMS = ("ass", "shit")
 
 
 def _scrub_candidates(t: pd.Series) -> pd.Series:
-    m = t.str.contains(r"[\d@]", regex=True)
+    m = t.str.contains(r"[\d@\u017f\u0130\u0131]", regex=True)
     lo = t.str.lower()
     for stem in _TOX_STEMS:
         m |= lo.str.contains(stem, regex=False)
@@ -55,41 +59,6 @@ def scrub_series(texts: pd.Series) -> pd.Series:
     back from the input."""
     sparse = scrub_series_sparse(texts)
     return sparse.where(sparse.notna(), texts.fillna(""))
-
-
-# Java-dialect sources for the native (JVM regexp_replace) fast path.
-# VALID ONLY FOR PURE-ASCII INPUT: restricted to code points < 128, the two
-# engines' semantics coincide exactly — \d = [0-9], \w = [A-Za-z0-9_] (so \b
-# agrees), (?i) folds only ASCII, lookarounds and greedy backtracking are
-# leftmost-first in both, and replaceAll/re.sub both substitute
-# non-overlapping matches left to right.  Byte-identity on ASCII is enforced
-# by test_scrub_native_matches_python.  Non-ASCII rows DIVERGE and must take
-# the Python kernel: Python's \d/\w/IGNORECASE are Unicode-aware (e.g. \d
-# matches ARABIC-INDIC digits, 'ſ' matches (?i)s) while Java's defaults are
-# ASCII — and Java's (?U) mode is NOT a fix (its \w adds combining marks and
-# join controls that Python's \w excludes).  That audit is why only the
-# ASCII subset is eligible, not why the whole table stays in Python.
-SCRUB_RULES_JAVA: list[tuple[str, str, str]] = [
-    (
-        name,
-        ("(?i)" + pat.pattern) if pat.flags & re.IGNORECASE else pat.pattern,
-        rep,
-    )
-    for name, pat, rep in SCRUB_RULES
-]
-
-
-def scrub_col(c):
-    """Native-Column scrub chain (JVM, whole-stage codegen) — the ASCII fast
-    path.  Callers MUST gate on ``length(c) == octet_length(c)`` (char count
-    == UTF-8 byte count ⇔ every char < U+0080); see SCRUB_RULES_JAVA for why
-    non-ASCII rows must stay on the Python kernel."""
-    from pyspark.sql import functions as F
-
-    out = c
-    for _name, pat, rep in SCRUB_RULES_JAVA:
-        out = F.regexp_replace(out, pat, rep)
-    return out
 
 
 def scrub_series_sparse(texts: pd.Series) -> pd.Series:
@@ -157,28 +126,10 @@ MOJIBAKE_MAP = [
 MOJIBAKE_MAP.sort(key=lambda p: -len(p[0]))
 
 
-# every mojibake sequence starts with one of these lead bytes-as-chars;
-# rows without them cannot need repair (same prefilter shape as scrub)
-_MOJIBAKE_LEADS = "".join(sorted({re.escape(bad[0]) for bad, _ in MOJIBAKE_MAP}))
-
-
-def repair_encoding_series(texts: pd.Series) -> pd.Series:
-    """Vectorized mojibake repair (ordered literal replacements),
-    prefiltered to rows containing a mojibake lead character."""
-    out = texts.fillna("")
-    m = out.str.contains(f"[{_MOJIBAKE_LEADS}]", regex=True)
-    if not m.any():
-        return out
-    sub = out[m]
-    for bad, good in MOJIBAKE_MAP:
-        sub = sub.str.replace(bad, good, regex=False)
-    out = out.copy()
-    out[m] = sub
-    return out
-
-
 def repair_encoding_col(c):
-    """Native-Column variant (chained literal replace, JVM-side)."""
+    """Repair every pair of ``MOJIBAKE_MAP`` in order, as chained literal
+    replaces on the JVM (its pandas twin, ``repair_encoding_series``, is a
+    differential reference in tests/reference_paths.py)."""
     from pyspark.sql import functions as F
 
     out = c

@@ -134,6 +134,10 @@ def main():
          lambda p: len(re.findall(r"^\(\d+\) ArrowEvalPython", p, re.M)) == 2),
         ("dict-key arrow stage ships only the 512-char prefix",
          lambda p: bool(re.search(r"lu_key\(substring\(text", p))),
+        ("featurize arrow stage ships only text",
+         lambda p: bool(re.search(r"\[feats\(text#\d+\)#\d+\]", p))),
+        ("no JVM regex scrub (one scrub engine, in the featurize UDF)",
+         lambda p: "regexp_replace" not in p),
         ("freq dict broadcast-joined", lambda p: "BroadcastHashJoin" in p),
         ("no per-row python (BatchEvalPython)", lambda p: "BatchEvalPython" not in p),
         # exactly 2 FULL-data exchanges in the salted config: the featurize

@@ -23,10 +23,15 @@ differential-test references for the production path in
 * ``scrub_series_naive`` — the rule table over every row, vs the
   prefiltered ``scrub.scrub_series`` / ``scrub_series_sparse``;
 * ``_minhash_batch_naive`` — one row at a time, vs the batch-flattened
-  ``dedup._minhash_batch``.
+  ``dedup._minhash_batch``;
+* ``repair_encoding_series`` — the mojibake table as pandas literal
+  replaces behind a lead-character prefilter, vs the JVM chain
+  ``scrub.repair_encoding_col``.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pandas as pd
@@ -45,7 +50,7 @@ from bytefreq_spark.langid import (
 )
 from bytefreq_spark.masks import GRAINS, _H_STEPS, mask_series, mask_str
 from bytefreq_spark.quality import LU_KEY_LEN, LU_KEY_SRC_CHARS, decide
-from bytefreq_spark.scrub import SCRUB_RULES
+from bytefreq_spark.scrub import MOJIBAKE_MAP, SCRUB_RULES
 from bytefreq_spark.similarity import _dot
 
 DECISION_SCHEMA = StructType([
@@ -274,6 +279,26 @@ def scrub_series_naive(texts: pd.Series) -> pd.Series:
     out = texts.fillna("")
     for _name, pat, rep in SCRUB_RULES:
         out = out.str.replace(pat, rep, regex=True)
+    return out
+
+
+# every mojibake sequence starts with one of these lead bytes-as-chars;
+# rows without them cannot need repair (same prefilter shape as scrub)
+_MOJIBAKE_LEADS = "".join(sorted({re.escape(bad[0]) for bad, _ in MOJIBAKE_MAP}))
+
+
+def repair_encoding_series(texts: pd.Series) -> pd.Series:
+    """Vectorized mojibake repair (ordered literal replacements),
+    prefiltered to rows containing a mojibake lead character."""
+    out = texts.fillna("")
+    m = out.str.contains(f"[{_MOJIBAKE_LEADS}]", regex=True)
+    if not m.any():
+        return out
+    sub = out[m]
+    for bad, good in MOJIBAKE_MAP:
+        sub = sub.str.replace(bad, good, regex=False)
+    out = out.copy()
+    out[m] = sub
     return out
 
 

@@ -8,19 +8,18 @@ or marker that evades a prefilter and they fail.
 
 from __future__ import annotations
 
+import re
+import sys
+
 import pandas as pd
 
 from bytefreq_spark.langid import detect_language
-from bytefreq_spark.scrub import (
-    MOJIBAKE_MAP,
-    SCRUB_RULES,
-    repair_encoding_series,
-    scrub_series,
-)
+from bytefreq_spark.scrub import MOJIBAKE_MAP, SCRUB_RULES, scrub_series
 from bytefreq_spark.synth import gen_transcripts_pandas
 from tests.reference_paths import (
     _minhash_batch_naive,
     detect_language_naive,
+    repair_encoding_series,
     scrub_series_naive,
     text_features_naive,
 )
@@ -90,6 +89,32 @@ def test_scrub_prefilter_is_conservative():
     out = scrub_series(s)
     assert not out.equals(s), "prefilter swallowed a rule's matches"
     assert out.equals(scrub_series_naive(s))
+
+
+def test_scrub_case_folds_equal_naive():
+    """The toxicity rule is IGNORECASE, and Python's ``re`` folds some
+    non-ASCII code points onto ASCII letters (U+017F 'ſ' onto s, U+0130
+    'İ' and U+0131 'ı' onto i, U+212A KELVIN SIGN onto k); the first three
+    escape a ``str.lower()`` stem check.  Substitute every code point that
+    folds onto a letter of a toxicity word into that word and require the
+    prefiltered kernel to rewrite it exactly as the naive table does."""
+    words = ["dumbass", "jackass", "dipshit", "bullshit"]
+    letters = "".join(sorted(set("".join(words))))
+    every = "".join(
+        chr(cp) for cp in range(sys.maxunicode + 1)
+        if not 0xD800 <= cp < 0xE000)
+    folding = set(re.findall(f"[{letters}]", every, re.IGNORECASE))
+    rows = []
+    for ch in sorted(folding):
+        for w in words:
+            for i, c in enumerate(w):
+                if ch != c and re.fullmatch(re.escape(ch), c, re.IGNORECASE):
+                    rows.append(f"you {w[:i]}{ch}{w[i + 1:]}!")
+    assert {"\u017f", "\u0130", "\u0131", "\u212a"} <= folding
+    s = pd.Series(rows, dtype=object)
+    want = scrub_series_naive(s)
+    assert (want.str.count("<TOX>") == 1).all()
+    assert scrub_series(s).tolist() == want.tolist()
 
 
 def test_scrub_sparse_contract():
@@ -236,46 +261,11 @@ def test_langid_feature_replay_equals_detect():
     assert len(decide_from_features(ef)) == 0
 
 
-def test_scrub_native_matches_python(spark):
-    """The JVM regexp_replace scrub chain (scrub_col) must be BYTE-IDENTICAL
-    to the Python kernel on every pure-ASCII input — the dialect-equivalence
-    claim the featurize fast-path router relies on.  Exercises every rule,
-    boundary edges, and the generated corpus' ASCII subset."""
-    from pyspark.sql import functions as F
-
-    from bytefreq_spark.scrub import scrub_col
-
-    s = _series()
-    ascii_rows = [
-        t for t in s.tolist()
-        if t is not None and t == t and t.isascii()
-    ]
-    ascii_rows += [
-        "a@b.co x 4111 1111 1111 1111 10.0.0.1 +12345678901 SW1A 1AA "
-        "123-45-6789 BULLSHIT",
-        "email-in-phone +1 a@b.co 5551234",
-        "card13 4111 1111 1111 1 card17 4111 1111 1111 11111",
-        "word_adjacent_ssn123-45-6789 but spaced 123-45-6789 ok",
-        "(555) 123-4567 ends. 1.2.3.4.5 overlong ip",
-    ]
-    pdf = pd.DataFrame({"text": ascii_rows})
-    sdf = spark.createDataFrame(pdf)
-    got = [
-        r["scrubbed"]
-        for r in sdf.select(scrub_col(F.col("text")).alias("scrubbed"))
-        .collect()
-    ]
-    want = scrub_series(pd.Series(ascii_rows, dtype=object)).tolist()
-    assert got == want
-
-
-def test_scrub_router_sends_unicode_to_python(spark):
-    """Documented dialect divergences (Unicode digits match Python's \\d but
-    not Java's; 'ſ' matches (?i)s in Python only) — such rows MUST fail the
-    ASCII gate so featurize routes them through the Python kernel, keeping
-    end-to-end output byte-identical to scrub_series on EVERY input."""
-    from pyspark.sql import functions as F
-
+def test_featurize_scrub_equals_kernel(spark):
+    """featurize's ``scrubbed_text`` is the Python kernel on every row:
+    Unicode digits and long-s folds, ASCII rule edges, NULL and the
+    generated corpus.  The Arrow stage ships ``text`` alone and no JVM
+    regex scrub runs beside it."""
     from bytefreq_spark.pipeline import featurize
 
     rows = [
@@ -285,28 +275,33 @@ def test_scrub_router_sends_unicode_to_python(spark):
         "mixed café a@b.co",
         None,
         "plain ascii a@b.co",
-    ]
+        "a@b.co x 4111 1111 1111 1111 10.0.0.1 +12345678901 SW1A 1AA "
+        "123-45-6789 BULLSHIT",
+        "email-in-phone +1 a@b.co 5551234",
+        "card13 4111 1111 1111 1 card17 4111 1111 1111 11111",
+        "word_adjacent_ssn123-45-6789 but spaced 123-45-6789 ok",
+        "(555) 123-4567 ends. 1.2.3.4.5 overlong ip",
+    ] + _series().tolist()
     pdf = pd.DataFrame({
         "conv_id": [f"c{i}" for i in range(len(rows))],
         "turn_idx": list(range(len(rows))),
         "role": ["user"] * len(rows),
         "text": rows,
     })
-    sdf = spark.createDataFrame(pdf)
-    # gate check: exactly the non-ASCII rows are NULL at the router
-    gate = sdf.select(
-        "turn_idx",
-        F.when(F.length("text") == F.octet_length("text"), F.lit(1)).alias("g"),
-    ).collect()
-    routed_native = {r["turn_idx"] for r in gate if r["g"] == 1}
-    assert routed_native == {2, 5}
-    # end-to-end: featurize's scrubbed_text ≡ the Python kernel everywhere
-    out = {
-        r["turn_idx"]: r["scrubbed_text"]
-        for r in featurize(sdf).select("turn_idx", "scrubbed_text").collect()
-    }
-    want = scrub_series(pd.Series(rows, dtype=object)).tolist()
-    assert [out[i] for i in range(len(rows))] == want
+    feats = featurize(spark.createDataFrame(pdf))
+    got = feats.select("turn_idx", "text", "scrubbed_text").toPandas()
+    got = got.sort_values("turn_idx", ignore_index=True)
+    # compare against the text as Spark holds it: a lone surrogate of
+    # _series() reaches the JVM as U+FFFD, every other row arrives intact
+    sent = pd.Series(rows, dtype=object)
+    utf8 = sent.map(lambda t: t is None or not re.search("[\ud800-\udfff]", t))
+    assert len(got) == len(rows) and (~utf8).sum() == 4
+    assert got["text"][utf8].tolist() == sent[utf8].tolist()
+    assert got["scrubbed_text"].tolist() == scrub_series(got["text"]).tolist()
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    args = re.findall(r"ArrowEvalPython \[(feats\([^)]*\))", plan)
+    assert len(args) == 1 and re.fullmatch(r"feats\(text#\d+\)", args[0])
+    assert "regexp_replace" not in plan
 
 
 def test_repair_encoding_prefilter():

@@ -12,11 +12,8 @@ from bytefreq_spark.profile import (
     machine_report,
     truncate_example_col,
 )
-from bytefreq_spark.scrub import (
-    MOJIBAKE_MAP,
-    repair_encoding_col,
-    repair_encoding_series,
-)
+from bytefreq_spark.scrub import MOJIBAKE_MAP, repair_encoding_col
+from tests.reference_paths import repair_encoding_series
 
 
 def test_truncate_example(spark):
