@@ -683,7 +683,7 @@ def q_quality_filter_transcripts(spark, sf_dir):
     from bytefreq_spark.synth import gen_transcripts_spark
 
     tr = gen_transcripts_spark(spark, 120, skew_every=50, skew_len=300)
-    out = quality_filter(tr, salt_partitions=8, drop_text=True)
+    out = quality_filter(tr, drop_text=True)
     out.write.mode("overwrite").parquet(QF_STAGE_DIR)
     staged = spark.read.parquet(QF_STAGE_DIR)
     return staged.select(
@@ -708,8 +708,8 @@ def q_checkpoint_resume(spark, sf_dir):
     out_dir = CKPT_RESUME_DIR
     shutil.rmtree(out_dir, ignore_errors=True)
     tr = gen_transcripts_spark(spark, 60)
-    run_with_checkpoints(spark, tr, out_dir, salt_partitions=8)
-    labels = run_with_checkpoints(spark, tr, out_dir, salt_partitions=8)
+    run_with_checkpoints(spark, tr, out_dir)
+    labels = run_with_checkpoints(spark, tr, out_dir)
     return labels.select("conv_id", "turn_idx", "keep", "drop_reason")
 
 

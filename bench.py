@@ -302,14 +302,13 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     # internal persist (plan-identical fragments) — clear + re-cache the
     # input between reps (a cheap parquet re-read now, not a regeneration).
     state = {"tr": _cached(spark, corpora["flagship"]["path"])}
-    _materialize(quality_filter(state["tr"], salt_partitions=CPUS * 2))  # warm-up
+    _materialize(quality_filter(state["tr"]))  # warm-up
 
     def _restore_flagship():
         state["tr"] = _cached(spark, corpora["flagship"]["path"])
 
     run("quality_filter",
-        lambda: _materialize(
-            quality_filter(state["tr"], salt_partitions=CPUS * 2)),
+        lambda: _materialize(quality_filter(state["tr"])),
         reps=5, clear_cache=True, restore=_restore_flagship)
     n_turns = corpora["flagship"]["turns"]
     timings["_turns"] = n_turns
@@ -321,8 +320,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     # asserted).  Same work as the flagship row minus the text payload of
     # THE shuffle — the delta is the measured value of the r6 pruning.
     run("quality_filter_droptext",
-        lambda: _materialize(quality_filter(
-            state["tr"], salt_partitions=CPUS * 2, drop_text=True)),
+        lambda: _materialize(quality_filter(state["tr"], drop_text=True)),
         clear_cache=True, restore=_restore_flagship)
 
     # measured salt-skip (VERDICT_r6 #1): the flagship corpus is balanced
@@ -350,8 +348,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     # a new key: the former quality_filter_whale row also salted the
     # dictionary rescan, a different plan
     run("quality_filter_whale_nodictsalt",
-        lambda: _materialize(quality_filter(
-            wstate["df"], salt_partitions=CPUS * 2)),
+        lambda: _materialize(quality_filter(wstate["df"])),
         clear_cache=True, restore=_restore_whale)
     n_whale = corpora["whale"]["turns"]
     timings["_whale_turns"] = n_whale
@@ -369,8 +366,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
         lstate["df"] = _cached(spark, corpora["longdocs"]["path"])
 
     run("quality_filter_longdocs",
-        lambda: _materialize(quality_filter(
-            lstate["df"], salt_partitions=CPUS * 2)),
+        lambda: _materialize(quality_filter(lstate["df"])),
         clear_cache=True, restore=_restore_longdocs)
     timings["_longdoc_turns"] = corpora["longdocs"]["turns"]
     timings["_longdoc_mb"] = round(ld_mb, 1)
@@ -388,8 +384,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
         mlstate["df"] = _cached(spark, corpora["multilang"]["path"])
 
     run("quality_filter_multilang",
-        lambda: _materialize(quality_filter(
-            mlstate["df"], salt_partitions=CPUS * 2)),
+        lambda: _materialize(quality_filter(mlstate["df"])),
         clear_cache=True, restore=_restore_multilang)
     n_ml = corpora["multilang"]["turns"]
     timings["_multilang_turns"] = n_ml
@@ -409,8 +404,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
         s1["df"] = _cached(spark, corpora["sf1"]["path"])
 
     run("quality_filter_sf1",
-        lambda: _materialize(quality_filter(
-            s1["df"], salt_partitions=CPUS * 2)),
+        lambda: _materialize(quality_filter(s1["df"])),
         reps=3, clear_cache=True, restore=_restore_sf1)
     n1 = corpora["sf1"]["turns"]
     timings["_sf1_turns"] = n1
@@ -424,8 +418,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     # would actually run" row; its delta vs quality_filter_sf1 prices the
     # two exchanges combined
     run("quality_filter_atscale_sf1",
-        lambda: _materialize(quality_filter(
-            s1["df"], salt_partitions=CPUS * 2, drop_text=True)),
+        lambda: _materialize(quality_filter(s1["df"], drop_text=True)),
         clear_cache=True, restore=_restore_sf1)
     timings["_atscale_sf1_turns_per_sec"] = round(
         n1 / timings["quality_filter_atscale_sf1"], 1)
@@ -437,8 +430,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     # honest double scan (featurize + dictionary) off the file layout
     run("quality_filter_sf1_files256",
         lambda: _materialize(quality_filter(
-            spark.read.parquet(corpora["sf1_files256"]["path"]),
-            salt_partitions=CPUS * 2)),
+            spark.read.parquet(corpora["sf1_files256"]["path"]))),
         clear_cache=True)
     timings["_sf1_files256_turns_per_sec"] = round(
         n1 / timings["quality_filter_sf1_files256"], 1)
@@ -454,8 +446,7 @@ def bench_queries(spark, sf_dir: str, corpus_root: str,
     # a new key: the former quality_filter_whale_sf1 row also salted the
     # dictionary rescan, a different plan
     run("quality_filter_whale_sf1_nodictsalt",
-        lambda: _materialize(quality_filter(
-            ws1["df"], salt_partitions=CPUS * 2)),
+        lambda: _materialize(quality_filter(ws1["df"])),
         clear_cache=True, restore=_restore_whale_sf1)
     nws1 = corpora["whale_sf1"]["turns"]
     timings["_whale_sf1_turns"] = nws1
@@ -586,9 +577,8 @@ def run_scaling() -> dict:
         # thread-scale (shared memory bus): measured r7, salted 1→4 reads
         # 0.65-0.79 while this config reads ≥0.8; on a real cluster the
         # exchange scales with per-node DRAM + NICs instead.
-        def _job(frame, c=cores):
-            return quality_filter(frame, salt_partitions=c * 2,
-                                  drop_text=True)
+        def _job(frame):
+            return quality_filter(frame, drop_text=True)
 
         # warm-up (JIT, Arrow init, python-worker pool) then measured run.
         # clearCache between them: CacheManager would otherwise serve the

@@ -1,13 +1,15 @@
 """spark-submit entry point (north rule: ``spark-submit --py-files``).
 
-Usage:
-    spark-submit --py-files bytefreq_spark.zip -m bytefreq_spark.cli \\
+Usage (spark-submit runs a file, so it launches this module through the
+``scripts/submit_job.py`` shim):
+    spark-submit --py-files bytefreq_spark.zip scripts/submit_job.py \\
         quality-filter --input /data/transcripts --output /data/labels \\
-        [--salt-partitions 512] [--checkpoint-dir /data/ckpt]
+        [--checkpoint-dir /data/ckpt]
     ... profile --input /data/table.parquet --columns a,b,c --grain LU \\
         --output /data/report
+    python -m bytefreq_spark.cli <command> ...   (the same, without a cluster)
 
-Build the zip with:  (cd repo && zip -r bytefreq_spark.zip bytefreq_spark)
+Build the zip with:  python scripts/make_pyfiles.py
 """
 
 from __future__ import annotations
@@ -24,10 +26,6 @@ def main(argv: list[str] | None = None) -> int:
     qf = sub.add_parser("quality-filter", help="transcript quality-filter pipeline")
     qf.add_argument("--input", required=True, help="parquet dir / table of transcripts")
     qf.add_argument("--output", required=True)
-    qf.add_argument("--salt-partitions", type=int, default=None,
-                    help="width of the featurize salt, when the input "
-                         "layout probe keeps it (default: 2x the default "
-                         "parallelism)")
     qf.add_argument("--drop-text", action="store_true",
                     help="drop raw text/tool from the output (the at-scale "
                          "config: scrubbed text is the deliverable, and the "
@@ -87,7 +85,6 @@ def main(argv: list[str] | None = None) -> int:
                          "directory of arriving files (--stream)")
     ig.add_argument("--snapshot-dir", required=True,
                     help="snapshot root (labels + freq + conv_index tables)")
-    ig.add_argument("--salt-partitions", type=int, default=None)
     ig.add_argument("--stream", action="store_true",
                     help="run as a Structured Streaming job (foreachBatch "
                          "around the same crash-safe commit); requires "
@@ -127,13 +124,9 @@ def main(argv: list[str] | None = None) -> int:
         df = spark.read.parquet(args.input)
         if args.checkpoint_dir:
             out = run_with_checkpoints(
-                spark, df, args.checkpoint_dir,
-                salt_partitions=args.salt_partitions,
-                drop_text=args.drop_text,
-            )
+                spark, df, args.checkpoint_dir, drop_text=args.drop_text)
         else:
-            out = quality_filter(df, salt_partitions=args.salt_partitions,
-                                 drop_text=args.drop_text)
+            out = quality_filter(df, drop_text=args.drop_text)
         writer = out.write.mode("overwrite")
         if args.format == "iceberg":
             writer.format("iceberg").save(args.output)
@@ -237,9 +230,7 @@ def main(argv: list[str] | None = None) -> int:
                     .parquet(args.input)
                 )
             writer = incremental_ingest_stream(
-                stream, args.snapshot_dir, args.checkpoint_dir,
-                salt_partitions=args.salt_partitions,
-            )
+                stream, args.snapshot_dir, args.checkpoint_dir)
             if args.trigger_interval:
                 # long-running: poll for new files on a processing-time
                 # trigger until the query is stopped externally
@@ -259,10 +250,7 @@ def main(argv: list[str] | None = None) -> int:
             from .pipeline import run_incremental
 
             df = spark.read.parquet(args.input)
-            labels, n_new = run_incremental(
-                spark, df, args.snapshot_dir,
-                salt_partitions=args.salt_partitions,
-            )
+            labels, n_new = run_incremental(spark, df, args.snapshot_dir)
             print(json.dumps({"snapshot_dir": args.snapshot_dir,
                               "labels_rows": labels.count(),
                               "new_turns": n_new, "mode": "batch"}))

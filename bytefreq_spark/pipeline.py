@@ -4,9 +4,11 @@ One tally pass, then one rule pass — every entry point runs the same chain
 (all declarative DataFrame ops; Python only in Arrow-vectorized pandas-UDF
 stages):
 
-1. **salt probe** — ``input_salt_decision`` measures the input's partition
-   layout and keeps the featurize round-robin only when partitions are too
-   few or skewed by rows or bytes.
+1. **salt probe** (one-shot and checkpointed runs) —
+   ``input_salt_decision`` measures the input's partition layout and keeps
+   the featurize round-robin only when partitions are too few or skewed by
+   rows or bytes; the incremental run and the streams featurize in the
+   input's own layout.
 2. **featurize** — one pandas-UDF stage computing per-turn features, langid,
    perplexity, the LU mask key and scrubbed text from the shared kernels
    (single Arrow round-trip; no per-row Python).  Only ``text`` crosses in;
@@ -43,6 +45,7 @@ from pyspark.sql.types import (
 
 from .langid import detect_language
 from .perplexity import perplexity
+from .profile import per_file_counts
 from .quality import text_features
 from .scrub import scrub_series_sparse
 
@@ -116,8 +119,11 @@ def with_mask_key_arrow(df: DataFrame) -> DataFrame:
     1.87 s against 1.04 s unsalted on the whale_sf1 dictionary branch."""
     from .quality import LU_KEY_SRC_CHARS
 
+    # invalid UTF-8 (a binary cast) is repaired to U+FFFD before it reaches
+    # Arrow, as in featurize, so both keys see the same text
     pref = df.select(
-        F.substring(F.col("text"), 1, LU_KEY_SRC_CHARS).alias("_pref")
+        F.substring(F.make_valid_utf8("text"), 1, LU_KEY_SRC_CHARS)
+        .alias("_pref")
     )
     return pref.select(_lu_key_udf()(F.col("_pref")).alias("lu_key"))
 
@@ -194,10 +200,14 @@ def featurize(df: DataFrame, salt_partitions: int | None = None) -> DataFrame:
     order-independent, so this is free correctness-wise.  The Arrow stage
     ships only ``text``; every turn is scrubbed by the one Python rule
     table (``scrub.scrub_series_sparse``), and the rows it leaves unchanged
-    coalesce back to the input JVM-side.
+    coalesce back to the input JVM-side.  Invalid UTF-8 in ``text`` (a
+    binary cast) is replaced by U+FFFD first, exactly as Python's
+    ``bytes.decode("utf-8", "replace")`` does, so the Arrow stage never
+    fails on it and every later column sees the repaired text.
     """
     if salt_partitions:
         df = df.repartition(salt_partitions)  # round-robin: breaks any skew
+    df = df.withColumn("text", F.make_valid_utf8("text"))
     # n_chars stays a JVM projection (one length() call); every other
     # feature, lu_key included, comes from the UDF's Python kernels.  The
     # rescan dictionary branch runs the same lu_key kernel
@@ -354,24 +364,18 @@ def label_turns(
     return labels.drop("lu_key") if drop_text else labels
 
 
-def _probe_salt(df: DataFrame, salt_partitions: int | None) -> int | None:
-    """The one salt rule: probe the input layout and keep the featurize
-    round-robin only where the probe finds too few or skewed partitions
-    (``input_salt_decision``).  ``salt_partitions`` only sizes the salt the
-    probe keeps; without it the probe targets 2× the session's default
-    parallelism.  Looks ``input_salt_decision`` up at call time, so a
-    wrapper installed on this module (the traced benchmark's probe timer)
-    sees every call."""
-    target = salt_partitions or (
-        df.sparkSession.sparkContext.defaultParallelism * 2)
-    return input_salt_decision(df, target)
+def _probe_salt(df: DataFrame) -> int | None:
+    """The one salt rule of the one-shot and checkpointed runs: probe the
+    input layout and keep a featurize round-robin of 2× the session's
+    default parallelism only where the probe finds too few or skewed
+    partitions (``input_salt_decision``).  Looks ``input_salt_decision`` up
+    at call time, so a wrapper installed on this module (the traced
+    benchmark's probe timer) sees every call."""
+    return input_salt_decision(
+        df, df.sparkSession.sparkContext.defaultParallelism * 2)
 
 
-def quality_filter(
-    df: DataFrame,
-    salt_partitions: int | None = None,
-    drop_text: bool = False,
-) -> DataFrame:
+def quality_filter(df: DataFrame, drop_text: bool = False) -> DataFrame:
     """Full pipeline: transcripts → labeled/scrubbed turns.
 
     The corpus-wide mask-frequency dictionary — the one stage that
@@ -398,12 +402,11 @@ def quality_filter(
     shape; the whale corpus measurably keeps the salt, see the salt-decision
     tests in tests/test_pipeline.py).  The probe costs one cheap
     column-pruned job (0.1 s at sf0.1, ~0.5 s at sf1; free on real Iceberg
-    via file metadata).  ``salt_partitions`` only sizes the salt the probe
-    keeps.  To pin a plan shape instead, compose the parts:
+    via file metadata).  To pin a plan shape instead, compose the parts:
     ``label_turns(featurize(df, n), mask_frequency_dict(
     with_mask_key_arrow(df)))`` with ``n`` partitions or ``None``.
     """
-    feat = featurize(df, _probe_salt(df, salt_partitions))
+    feat = featurize(df, _probe_salt(df))
     return label_turns(
         feat, mask_frequency_dict(with_mask_key_arrow(df)), drop_text)
 
@@ -412,7 +415,6 @@ def run_incremental(
     spark: SparkSession,
     transcripts: DataFrame,
     out_dir: str,
-    salt_partitions: int | None = None,
     config: dict | None = None,
 ) -> tuple[DataFrame, int]:
     """Incremental ingest — the 10^12-turn reality: you never reprocess the
@@ -437,8 +439,11 @@ def run_incremental(
     rewrites old+new as v(N+1) (the sandbox parquet stand-in); on Iceberg
     this is a fast append of the new files to the table snapshot.
 
-    ``salt_partitions`` is the new batch's unconditional featurize salt (no
-    probe); it only places rows, so the config is ``{**config, version: 2}``.
+    The new batch featurizes in its own layout: no salt and no layout
+    probe.  A per-batch probe measured 0.5-1.5 s dearer per two-batch
+    ingest at ``local[4]`` (BENCH/NOTES.md, "Per-batch salt probe"); a
+    probe that needs no Spark job (file metadata) is what would make it
+    free.  The config is ``{**config, version: 2}``.
 
     Returns ``(labels_df, n_new_turns)``.
     """
@@ -473,7 +478,7 @@ def run_incremental(
         freq = freq_old.unionByName(freq).groupBy("lu_key").agg(
             F.sum("lu_count").alias("lu_count"))
 
-    labeled_new = label_turns(featurize(new, salt_partitions), freq)
+    labeled_new = label_turns(featurize(new), freq)
     combined = (
         labeled_new if old_labels is None
         else old_labels.unionByName(labeled_new)
@@ -663,33 +668,22 @@ def _materialize(
     return read_snapshot(spark, out_dir, name)
 
 
-def _file_lineage(df: DataFrame) -> DataFrame:
-    """Per source-file row counts (`input_file_name`).  Non-file inputs
-    (generators, cached frames) yield a single ''-keyed row; the many-file
-    pytest asserts one row per real part file."""
-    return (
-        df.select(F.input_file_name().alias("file"))
-        .groupBy("file").agg(F.count("*").alias("rows"))
-    )
-
-
 def run_with_checkpoints(
     spark: SparkSession,
     transcripts: DataFrame,
     out_dir: str,
     config: dict | None = None,
-    salt_partitions: int | None = None,
     drop_text: bool = False,
 ) -> DataFrame:
     """Resumable run: each stage materializes a snapshot; a restart reloads
     completed stages (manifest + config fingerprint match) instead of
     recomputing — the sandbox stand-in for Iceberg snapshot checkpoints.
 
-    The probe decides the salt as in :func:`quality_filter`
-    (``salt_partitions`` only sizes it), and with ``drop_text`` the labels
-    snapshot carries scrubbed text only.  The labels come from the same
-    :func:`label_turns` tail; the dictionary is tallied from the featurized
-    snapshot's ``lu_key`` instead of a rescan of the input.
+    The probe decides the salt as in :func:`quality_filter`, and with
+    ``drop_text`` the labels snapshot carries scrubbed text only.  The
+    labels come from the same :func:`label_turns` tail; the dictionary is
+    tallied from the featurized snapshot's ``lu_key`` instead of a rescan
+    of the input.
 
     The config is ``{**config, version: 2, drop_text}``: the salt only
     places rows and is not part of it, so the probe runs inside the
@@ -705,8 +699,7 @@ def run_with_checkpoints(
     def build_labels() -> DataFrame:
         feat = _materialize(
             spark, out_dir, "featurized", config,
-            lambda: featurize(
-                transcripts, _probe_salt(transcripts, salt_partitions)))
+            lambda: featurize(transcripts, _probe_salt(transcripts)))
         return label_turns(feat, mask_frequency_dict(feat), drop_text)
 
     labels = _materialize(spark, out_dir, "labels", config, build_labels)
@@ -722,8 +715,8 @@ def run_with_checkpoints(
             F.sum(F.col("keep").cast("int")).alias("kept"),
             F.approx_count_distinct("conv_id").alias("convs"),
         ),
-        "lineage": lambda: _file_lineage(labels),
-        "input_lineage": lambda: _file_lineage(transcripts),
+        "lineage": lambda: per_file_counts(labels),
+        "input_lineage": lambda: per_file_counts(transcripts),
     }
     for name, build in tables.items():
         if not snapshot_valid(out_dir, name, derived):

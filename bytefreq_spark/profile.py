@@ -338,13 +338,13 @@ def field_count_histogram(df: DataFrame, column: str, sep: str = "\\|") -> DataF
 
 
 def per_file_counts(df: DataFrame) -> DataFrame:
-    """Per-source-file row counts (A6, awk ``wc[FILENAME]++``) — the seed of
-    the lineage table."""
+    """Per-source-file row counts (A6, awk ``wc[FILENAME]++``), unordered —
+    also the checkpointed run's ``lineage`` and ``input_lineage`` tables.
+    Non-file inputs (generators, cached frames) yield one ''-keyed row."""
     return (
         df.select(F.input_file_name().alias("file"))
         .groupBy("file")
         .agg(F.count("*").alias("rows"))
-        .orderBy("file")
     )
 
 

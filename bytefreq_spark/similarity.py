@@ -81,48 +81,13 @@ def make_planes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-# above this many terms (n_planes × dim) the bit-exact sequential-fold Arrow
-# kernel gives way to the blocked matmul (same answers away from the
-# sign boundary; the matmul amortizes better at production dims 768-1536)
-LSH_NATIVE_MAX_TERMS = 1024
-
-
 def hyperplane_signature_udf(planes: np.ndarray):
     """Arrow-vectorized hyperplane signature: one (batch × dim) @ (dim ×
-    n_planes) matmul per batch — the production-dim path (768-1536 dims)."""
+    n_planes) matmul per batch.  NULL and ragged vectors (length ≠ dim)
+    yield signature 0, as the native literal-tree expression kept with the
+    tests (``hyperplane_signature_col``) does."""
     p_t = planes.astype(np.float64).T.copy()
-    weights = np.left_shift(
-        np.uint64(1), np.arange(planes.shape[0], dtype=np.uint64)
-    )
-
-    @F.pandas_udf("long")
-    def sig(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        bits = (x @ p_t) >= 0
-        out = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
-        return pd.Series(out.astype(np.int64))
-
-    return sig
-
-
-def hyperplane_signature_seq_udf(planes: np.ndarray):
-    """Arrow hyperplane signature, BIT-IDENTICAL to the native literal-tree
-    expression (a differential reference kept with the tests): the JVM
-    evaluates each plane dot product as a strict left fold of IEEE doubles
-    — ``((0.0 + x₀·p₀) + x₁·p₁) + …`` — so accumulating one dimension at a
-    time in float64 performs the exact same sequence of IEEE operations and
-    reproduces every sign bit, including dots within rounding of zero
-    (where a blocked matmul could round the other way).  NULL/ragged
-    vectors yield signature 0, matching the native NULL-condition
-    ``when().otherwise(0)`` fold.
-
-    Why it exists (r8): the native expression tree is n_planes × dim literal
-    nodes evaluated through interpreted higher-order functions — measured
-    3.7× slower *per pass* than this kernel at 16×64 and re-planned/
-    re-evaluated at every use of the signature subtree.  This keeps the
-    native path's exact semantics at Arrow-batch speed."""
-    p64 = planes.astype(np.float64)
-    n_planes, dim = p64.shape
+    n_planes, dim = planes.shape
     weights = np.left_shift(
         np.uint64(1), np.arange(n_planes, dtype=np.uint64)
     )
@@ -135,11 +100,9 @@ def hyperplane_signature_seq_udf(planes: np.ndarray):
         )
         out = np.zeros(len(vecs), dtype=np.uint64)
         if ok.any():
-            x = np.array([np.asarray(v) for v in vecs[ok]], dtype=np.float64)
-            acc = np.zeros((len(x), n_planes), dtype=np.float64)
-            for j in range(dim):
-                acc += x[:, j, None] * p64[None, :, j]
-            out[ok] = ((acc >= 0).astype(np.uint64) * weights[None, :]).sum(axis=1)
+            x = np.array(vecs[ok].tolist(), dtype=np.float64)
+            bits = (x @ p_t) >= 0
+            out[ok] = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
         return pd.Series(out.astype(np.int64))
 
     return sig
@@ -188,19 +151,10 @@ def hyperplane_signatures(
     df: DataFrame, planes: np.ndarray,
     vec_col: str = "embedding", out_col: str = "_sig",
 ) -> DataFrame:
-    """Signature column, routed by the plane×dim product: the
-    sequential-fold Arrow kernel (bit-identical to the native expression —
-    see ``hyperplane_signature_seq_udf``) up to ``LSH_NATIVE_MAX_TERMS``,
-    the Arrow matmul above.  The one routing caveat is a dot product within
-    float rounding of zero, where the sequential fold and BLAS blocked
-    summation could round to opposite signs — for a FIXED config the
-    routing (and thus the summation order) is deterministic, so an index
-    never mixes the two paths."""
-    if planes.size <= LSH_NATIVE_MAX_TERMS:
-        sig = hyperplane_signature_seq_udf(planes)
-    else:
-        sig = hyperplane_signature_udf(planes)
-    return df.withColumn(out_col, sig(F.col(vec_col)))
+    """Signature column from the Arrow matmul kernel
+    (``hyperplane_signature_udf``)."""
+    return df.withColumn(
+        out_col, hyperplane_signature_udf(planes)(F.col(vec_col)))
 
 
 # ---------------------------------------------------------------------------

@@ -316,50 +316,33 @@ def read_excel(
 ) -> DataFrame:
     """Excel scan → all-string DataFrame (S7; reference excel.rs:17-114):
     sheet by 0-based index or by name, every cell stringified, header row N
-    with the standard name normalization.  Driver-side parse — Excel files
-    are small config/reference tables, not the 100 TB path (for a DIRECTORY
-    of workbooks use ``read_excel_files``, which parallelizes per file)."""
-    with open(path, "rb") as f:
-        rows = parse_xlsx(f.read(), sheet)
-    header = dedupe_headers([normalize_header(c) for c in rows[header_row - 1]])
-    body = rows[header_row:]
-    return spark.createDataFrame(body or [], schema=" ".join(
-        f"`{h}` string," for h in header
-    ).rstrip(","))
-
-
-def read_excel_files(
-    spark: SparkSession, path_glob: str, sheet: int | str = 0,
-    header_row: int = 1,
-) -> DataFrame:
-    """Distributed Excel scan: ``binaryFile`` source → one parse task per
-    workbook (mapInPandas over the file bytes), headers normalized per file
-    and required to agree.  The Spark-first shape for MANY small workbooks;
-    each file is bounded (xlsx is a zip loaded in memory), parallelism comes
-    from the file count."""
+    with the standard name normalization.  ``path`` is one workbook or a
+    glob of many: a ``binaryFile`` source feeds one parse task per workbook
+    (mapInPandas over the file bytes), and every workbook's headers must
+    agree.  Each file is bounded (xlsx is a zip loaded in memory);
+    parallelism comes from the file count."""
     import pandas as pd
 
-    bins = spark.read.format("binaryFile").load(path_glob)
+    bins = spark.read.format("binaryFile").load(path)
     first = bins.select("content").first()
     if first is None:
-        raise FileNotFoundError(f"no files match {path_glob}")
-    head_rows = parse_xlsx(bytes(first["content"]), sheet)
-    header = dedupe_headers(
-        [normalize_header(c) for c in head_rows[header_row - 1]]
-    )
+        raise FileNotFoundError(f"no files match {path}")
+
+    def header_of(rows: list[list[str]]) -> list[str]:
+        return dedupe_headers(
+            [normalize_header(c) for c in rows[header_row - 1]])
+
+    header = header_of(parse_xlsx(bytes(first["content"]), sheet))
     schema = ", ".join(f"`{h}` string" for h in header)
 
     def gen(batches):
         for pdf in batches:
             for blob in pdf["content"]:
                 rows = parse_xlsx(bytes(blob), sheet)
-                hdr = dedupe_headers(
-                    [normalize_header(c) for c in rows[header_row - 1]]
-                )
+                hdr = header_of(rows)
                 if hdr != header:
                     raise ValueError(
-                        f"workbook header mismatch: {hdr} != {header}"
-                    )
+                        f"workbook header mismatch: {hdr} != {header}")
                 yield pd.DataFrame(rows[header_row:], columns=header)
 
     return bins.select("content").mapInPandas(gen, schema=schema)

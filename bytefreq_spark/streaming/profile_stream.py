@@ -54,7 +54,6 @@ def quality_filter_stream(
     output_dir: str,
     checkpoint_dir: str,
     freq: DataFrame,
-    salt_partitions: int | None = None,
 ):
     """Stateless streaming quality filter via foreachBatch.
 
@@ -64,12 +63,13 @@ def quality_filter_stream(
     runs the batch pipeline's own labelling tail (``pipeline.label_turns``),
     so its duplicate flag sees only turns inside the same micro-batch; a
     duplicate pair straddling two batches is caught by the stateful operator
-    in ``streaming.stateful_dedup`` instead.
+    in ``streaming.stateful_dedup`` instead.  Each batch featurizes in its
+    own layout (no salt, no layout probe), as ``run_incremental`` does.
     """
     from ..pipeline import featurize, label_turns
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        (label_turns(featurize(batch_df, salt_partitions), freq)
+        (label_turns(featurize(batch_df), freq)
          .write.mode("append").parquet(output_dir))
 
     return (
@@ -82,7 +82,6 @@ def incremental_ingest_stream(
     stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    salt_partitions: int | None = None,
 ):
     """Streaming incremental ingest: the 10^12-turn ingest loop as a
     Structured Streaming job.  Each micro-batch of arriving conversations
@@ -103,10 +102,7 @@ def incremental_ingest_stream(
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        run_incremental(
-            batch_df.sparkSession, batch_df, out_dir,
-            salt_partitions=salt_partitions,
-        )
+        run_incremental(batch_df.sparkSession, batch_df, out_dir)
 
     return (
         stream.writeStream.foreachBatch(process_batch)

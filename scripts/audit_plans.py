@@ -132,8 +132,10 @@ def main():
     audit("quality_filter", qf, [
         ("exactly 2 arrow UDF stages (featurize + dict key; decision native)",
          lambda p: len(re.findall(r"^\(\d+\) ArrowEvalPython", p, re.M)) == 2),
-        ("dict-key arrow stage ships only the 512-char prefix",
-         lambda p: bool(re.search(r"lu_key\(substring\(text", p))),
+        ("dict-key arrow stage ships only the UTF-8-repaired 512-char prefix",
+         lambda p: bool(re.search(
+             r"lu_key\(substring\(invoke\(text#\d+\.makeValid\(\)\), 1, 512\)\)",
+             p))),
         ("featurize arrow stage ships only text",
          lambda p: bool(re.search(r"\[feats\(text#\d+\)#\d+\]", p))),
         ("no JVM regex scrub (one scrub engine, in the featurize UDF)",

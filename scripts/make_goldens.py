@@ -33,7 +33,7 @@ def main():
 
     tr = gen_transcripts_spark(spark, 120, skew_every=50, skew_len=300)
     (
-        quality_filter(tr, salt_partitions=8)
+        quality_filter(tr)
         .select(
             "conv_id", "turn_idx", "role", "lang", "keep", "drop_reason",
             F.md5(F.coalesce("scrubbed_text", F.lit(""))).alias("scrub_md5"),
@@ -50,7 +50,7 @@ def main():
     try:
         tr60 = gen_transcripts_spark(spark, 60)
         (
-            run_with_checkpoints(spark, tr60, ck, salt_partitions=8)
+            run_with_checkpoints(spark, tr60, ck)
             .select("conv_id", "turn_idx", "keep", "drop_reason")
             .orderBy("conv_id", "turn_idx").toPandas()
             .to_csv(os.path.join(GOLDEN, "checkpoint_labels_60.csv"),

@@ -429,18 +429,18 @@ def test_ivf_partitioned_pruning(spark, tmp_path):
 
 
 def test_lsh_signature_native_equals_arrow(spark):
-    """All three signature kernels must agree at every dim: the Arrow
-    matmul (production dims), the Arrow sequential-fold kernel (small dims —
-    required BIT-identical to the native expression, its left-fold IEEE
-    order reproduced exactly), and the native literal-tree reference.
-    Routing never plans the literal tree (r8: it was a ~5k-node interpreted
-    expression re-evaluated per consumer) — small dims take the seq kernel,
-    large dims the matmul; both are ArrowEvalPython."""
+    """The Arrow matmul signature kernel agrees with the native literal-tree
+    reference at a small and a production dim, NULL and ragged vectors
+    included (signature 0 on both, not a failed batch), and
+    ``hyperplane_signatures`` plans it as an Arrow stage (never the literal
+    tree — r8: a ~5k-node interpreted expression re-evaluated per
+    consumer).  The embedding near-dup job over such a frame completes and
+    finds the one planted copy."""
     import numpy as np
 
     from bytefreq_spark.similarity import (
-        LSH_NATIVE_MAX_TERMS, hyperplane_signature_seq_udf,
-        hyperplane_signature_udf, hyperplane_signatures, make_planes,
+        embedding_near_dup_pairs, hyperplane_signature_udf,
+        hyperplane_signatures, make_planes,
     )
     from tests.reference_paths import hyperplane_signature_col
 
@@ -448,24 +448,24 @@ def test_lsh_signature_native_equals_arrow(spark):
     for dim, n_planes in ((16, 8), (768, 12)):
         rows = [(i, [float(x) for x in rng.standard_normal(dim)])
                 for i in range(30)]
+        rows += [(30, None), (31, [1.0, 2.0]), (32, rows[0][1])]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         planes = make_planes(dim, n_planes, seed=5)
         sigs = df.select(
             "vec_id",
             hyperplane_signature_col("embedding", planes).alias("nat"),
             hyperplane_signature_udf(planes)("embedding").alias("arw"),
-            hyperplane_signature_seq_udf(planes)("embedding").alias("seq"),
         ).collect()
         nat = {r["vec_id"]: r["nat"] for r in sigs}
         assert nat == {r["vec_id"]: r["arw"] for r in sigs}, (dim, n_planes)
-        assert nat == {r["vec_id"]: r["seq"] for r in sigs}, (dim, n_planes)
-        # routing by plane×dim product: seq kernel below the term cap,
-        # matmul above — both are Arrow stages (never the literal tree)
+        assert nat[30] == nat[31] == 0
         routed = hyperplane_signatures(df, planes)
         plan = routed._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" in plan
         assert {r["vec_id"]: r["_sig"] for r in routed.collect()} == nat
-        assert (planes.size <= LSH_NATIVE_MAX_TERMS) == (dim == 16)
+        pairs = {(r["id_a"], r["id_b"]) for r in embedding_near_dup_pairs(
+            df, threshold=0.99, dim=dim).collect()}
+        assert pairs == {(0, 32)}, dim
 
 
 def test_seq_dot_udf_equals_expression(spark):

@@ -48,7 +48,7 @@ def test_quality_filter_matches_golden(spark):
 
     tr = gen_transcripts_spark(spark, 120, skew_every=50, skew_len=300)
     got = (
-        quality_filter(tr, salt_partitions=8)
+        quality_filter(tr)
         .select(
             "conv_id", "turn_idx", "role", "lang", "keep", "drop_reason",
             F.md5(F.coalesce("scrubbed_text", F.lit(""))).alias("scrub_md5"),
@@ -81,7 +81,7 @@ def test_checkpoint_labels_match_golden(spark, tmp_path):
 
     tr = gen_transcripts_spark(spark, 60)
     got = (
-        run_with_checkpoints(spark, tr, str(tmp_path / "ck"), salt_partitions=8)
+        run_with_checkpoints(spark, tr, str(tmp_path / "ck"))
         .select("conv_id", "turn_idx", "keep", "drop_reason")
         .orderBy("conv_id", "turn_idx")
         .toPandas()

@@ -51,7 +51,7 @@ def reference_labels(corpus_pdf):
 @pytest.fixture(scope="module")
 def spark_labels(spark, corpus_pdf):
     df = spark.createDataFrame(corpus_pdf)
-    return quality_filter(df, salt_partitions=16).toPandas()
+    return quality_filter(df).toPandas()
 
 
 def test_generator_parity(spark, corpus_pdf):
@@ -110,7 +110,7 @@ def test_stable_output_ordering(spark, corpus_pdf):
     from pyspark.sql import functions as SF
 
     df = spark.createDataFrame(corpus_pdf)
-    out = quality_filter(df, salt_partitions=16)
+    out = quality_filter(df)
     pdf = out.select(
         SF.spark_partition_id().alias("pid"), "conv_id", "turn_idx"
     ).toPandas()
@@ -127,7 +127,7 @@ def test_stable_output_ordering(spark, corpus_pdf):
 def test_parallelism_invariance(spark, corpus_pdf, spark_labels):
     """Same labels under a different salt/partitioning (scaling determinism)."""
     df = spark.createDataFrame(corpus_pdf).repartition(3)
-    other = quality_filter(df, salt_partitions=5).toPandas()
+    other = forced_salt(df, 5).toPandas()
     key = ["conv_id", "turn_idx"]
     a = spark_labels.set_index(key)[["keep", "scrubbed_text"]].sort_index()
     b = other.set_index(key)[["keep", "scrubbed_text"]].sort_index()
@@ -139,9 +139,9 @@ def test_checkpoint_resume(spark, corpus_pdf, reference_labels):
     tmp = tempfile.mkdtemp(prefix="bfq_ckpt_")
     try:
         df = spark.createDataFrame(corpus_pdf)
-        first = run_with_checkpoints(spark, df, tmp, salt_partitions=8).toPandas()
+        first = run_with_checkpoints(spark, df, tmp).toPandas()
         # resume: same config → featurized+labels snapshots reused
-        second = run_with_checkpoints(spark, df, tmp, salt_partitions=8).toPandas()
+        second = run_with_checkpoints(spark, df, tmp).toPandas()
         key = ["conv_id", "turn_idx"]
         a = first.set_index(key).sort_index()
         b = second.set_index(key).sort_index()
@@ -307,7 +307,7 @@ def test_whale_conversation_stress(spark):
     assert n < whale["count"] * 1.5   # ...and dominates the corpus
 
     # (a) completes, labels every turn
-    out = quality_filter(tr, salt_partitions=16).cache()
+    out = quality_filter(tr).cache()
     assert out.count() == n
     assert out.filter(F.col("keep").isNull()).count() == 0
 
@@ -352,7 +352,7 @@ def test_longdoc_corpus_parity(spark):
 
     ref = run_reference(pdf)
     out = (
-        quality_filter(spark.createDataFrame(pdf), salt_partitions=8)
+        quality_filter(spark.createDataFrame(pdf))
         .toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
     refs = ref.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
@@ -381,7 +381,6 @@ def test_quality_filter_stream_matches_batch(spark, tmp_path):
         q = (
             quality_filter_stream(
                 read_transcript_stream(spark, in_dir), out_dir, ckpt, freq,
-                salt_partitions=8,
             )
             .trigger(availableNow=True)
             .start()
@@ -391,7 +390,7 @@ def test_quality_filter_stream_matches_batch(spark, tmp_path):
     run_stream()
     cols = ["conv_id", "turn_idx", "keep", "drop_reason", "scrubbed_text"]
     got = spark.read.parquet(out_dir).select(cols)
-    want = quality_filter(batch_input, salt_partitions=8).select(cols)
+    want = quality_filter(batch_input).select(cols)
     assert got.count() == batch_input.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
@@ -555,7 +554,7 @@ def test_quality_filter_stream_multibatch_boundary(spark, tmp_path):
         .option("maxFilesPerTrigger", 1).parquet(in_dir)
     )
     q = (
-        quality_filter_stream(stream, out_dir, ckpt, freq, salt_partitions=2)
+        quality_filter_stream(stream, out_dir, ckpt, freq)
         .trigger(availableNow=True)
         .start()
     )
@@ -568,7 +567,7 @@ def test_quality_filter_stream_multibatch_boundary(spark, tmp_path):
         .set_index(key).sort_index()
     )
     want = (
-        quality_filter(full, salt_partitions=2)
+        quality_filter(full)
         .select(*key, "keep", "drop_reason").toPandas()
         .set_index(key).sort_index()
     )
@@ -600,7 +599,7 @@ def test_labels_bucket_pruning(spark, tmp_path):
     from bytefreq_spark.synth import gen_transcripts_spark
 
     tr = gen_transcripts_spark(spark, 60)
-    labels = quality_filter(tr, salt_partitions=8)
+    labels = quality_filter(tr)
     path = str(tmp_path / "labels")
     write_labels_partitioned(labels, path, n_buckets=8)
 
@@ -641,12 +640,12 @@ def test_run_incremental(spark, tmp_path):
 
     out = str(tmp_path)
     a = gen_transcripts_spark(spark, 40)
-    lab1, n1 = run_incremental(spark, a, out, salt_partitions=8)
+    lab1, n1 = run_incremental(spark, a, out)
     assert n1 == a.count() and lab1.count() == n1
 
     ab = gen_transcripts_spark(spark, 70)  # serials 0..69 ⊃ A's 0..39
     b_only = ab.join(a.select("conv_id").distinct(), "conv_id", "left_anti")
-    lab2, n2 = run_incremental(spark, ab, out, salt_partitions=8)
+    lab2, n2 = run_incremental(spark, ab, out)
     assert n2 == b_only.count() and n2 > 0
     assert lab2.count() == ab.count()
     assert snapshot_versions(out, "labels") == [1, 2]
@@ -663,13 +662,13 @@ def test_run_incremental(spark, tmp_path):
     cols = ["conv_id", "turn_idx", "keep", "drop_reason"]
     b_ids = b_only.select("conv_id").distinct()
     got_b = lab2.join(b_ids, "conv_id").select(cols)
-    want_b = quality_filter(ab, salt_partitions=8).join(
+    want_b = quality_filter(ab).join(
         b_ids, "conv_id").select(cols)
     assert got_b.exceptAll(want_b).count() == 0
     assert want_b.exceptAll(got_b).count() == 0
 
     # idempotence: same corpus again → nothing new, table unchanged
-    lab3, n3 = run_incremental(spark, ab, out, salt_partitions=8)
+    lab3, n3 = run_incremental(spark, ab, out)
     assert n3 == 0 and lab3.count() == ab.count()
     assert snapshot_versions(out, "labels") == [1, 2]
 
@@ -682,7 +681,7 @@ def test_run_incremental(spark, tmp_path):
                                   "lu_key string, lu_count long")
     write_snapshot(bogus, out, "freq", {"labels_version": -1})
     abc = gen_transcripts_spark(spark, 85)
-    lab4, n4 = run_incremental(spark, abc, out, salt_partitions=8)
+    lab4, n4 = run_incremental(spark, abc, out)
     assert n4 > 0 and lab4.count() == abc.count()
     freq_inc3 = {r["lu_key"]: r["lu_count"]
                  for r in read_snapshot(spark, out, "freq").collect()}
@@ -703,7 +702,7 @@ def test_run_incremental(spark, tmp_path):
         [("never-a-conv",)], "conv_id string")
     write_snapshot(poisoned, out, "conv_index", {"labels_version": -1})
     abcd = gen_transcripts_spark(spark, 100)
-    lab5, n5 = run_incremental(spark, abcd, out, salt_partitions=8)
+    lab5, n5 = run_incremental(spark, abcd, out)
     d_only = abcd.join(abc.select("conv_id").distinct(), "conv_id",
                        "left_anti")
     assert n5 == d_only.count() and lab5.count() == abcd.count()
@@ -742,8 +741,7 @@ def test_incremental_ingest_stream(spark, tmp_path):
             .option("maxFilesPerTrigger", 1).parquet(in_dir)
         )
         q = (
-            incremental_ingest_stream(stream, out, ckpt_dir,
-                                      salt_partitions=8)
+            incremental_ingest_stream(stream, out, ckpt_dir)
             .trigger(availableNow=True).start()
         )
         q.awaitTermination()
@@ -774,8 +772,8 @@ def test_drop_text_equals_default_projection(spark, corpus_pdf):
     columns, over the standard corpus (which includes non-ASCII, scrubbed,
     NULL-tool and empty-text rows), not just the dup-flag core."""
     df = spark.createDataFrame(corpus_pdf)
-    full = quality_filter(df, salt_partitions=8).toPandas()
-    dropped = quality_filter(df, salt_partitions=8, drop_text=True).toPandas()
+    full = quality_filter(df).toPandas()
+    dropped = quality_filter(df, drop_text=True).toPandas()
     surviving = [c for c in full.columns if c not in ("text", "tool", "lu_key")]
     assert sorted(dropped.columns) == sorted(surviving)
     key = ["conv_id", "turn_idx"]
@@ -800,7 +798,7 @@ def test_auto_salt_decision(spark):
     assert input_salt_decision(wdf, 8) == 8    # one fat partition → salt
 
     key = ["conv_id", "turn_idx"]
-    out_a = (quality_filter(df, salt_partitions=8)
+    out_a = (quality_filter(df)
              .toPandas().sort_values(key).reset_index(drop=True))
     out_b = (forced_salt(df, 8)
              .toPandas().sort_values(key).reset_index(drop=True))
@@ -808,23 +806,23 @@ def test_auto_salt_decision(spark):
 
 
 def test_auto_salt_is_default(spark):
-    """r8 (VERDICT_r7 #2): a plain ``quality_filter(df, salt_partitions=N)``
-    call probes the layout and drops the round-robin exchange on balanced
-    input, while the composed pipeline with ``featurize(df, N)`` salts
-    unconditionally."""
+    """r8 (VERDICT_r7 #2): a plain ``quality_filter(df)`` call probes the
+    layout and drops the round-robin exchange on balanced input, while the
+    composed pipeline with ``featurize(df, N)`` salts unconditionally."""
     from bytefreq_spark.synth import gen_transcripts_pandas as gen
 
     df = spark.createDataFrame(gen(120)).repartition(8)
-    # salt width 12 ≠ the input's own repartition(8), so the salt exchange
-    # is identifiable in the plan text (and CollapseRepartition cannot merge
-    # the two the way equal widths would)
+    # the probe's width 16 (2 × the session's 8 cores) ≠ the input's own
+    # repartition(8), so the salt exchange is identifiable in the plan text
+    # (and CollapseRepartition cannot merge the two the way equal widths
+    # would)
     def plan_of(frame):
         return frame._jdf.queryExecution().executedPlan().toString()
 
-    probed = quality_filter(df, salt_partitions=12)
-    forced = forced_salt(df, 12)
-    assert "RoundRobinPartitioning(12)" not in plan_of(probed)  # skipped
-    assert "RoundRobinPartitioning(12)" in plan_of(forced)      # pinned salt
+    probed = quality_filter(df)
+    forced = forced_salt(df, 16)
+    assert "RoundRobinPartitioning(16)" not in plan_of(probed)  # skipped
+    assert "RoundRobinPartitioning(16)" in plan_of(forced)      # pinned salt
 
 
 def test_checkpoint_resume_skips_salt_probe(spark, tmp_path, monkeypatch):
@@ -835,7 +833,7 @@ def test_checkpoint_resume_skips_salt_probe(spark, tmp_path, monkeypatch):
 
     df = gen_transcripts_spark(spark, 40, partitions=4)
     out = str(tmp_path / "ckpt_probe_skip")
-    first = run_with_checkpoints(spark, df, out, salt_partitions=8)
+    first = run_with_checkpoints(spark, df, out)
     n_first = first.count()
 
     calls = {"n": 0}
@@ -846,17 +844,13 @@ def test_checkpoint_resume_skips_salt_probe(spark, tmp_path, monkeypatch):
         return real(*a, **k)
 
     monkeypatch.setattr(P, "input_salt_decision", spy)
-    labels = P.run_with_checkpoints(spark, df, out, salt_partitions=8)
+    labels = P.run_with_checkpoints(spark, df, out)
     assert calls["n"] == 0, "resume re-ran the input salt probe"
     assert labels.count() == n_first
-    # another salt width is not another config: no probe, no new labels
-    P.run_with_checkpoints(spark, df, out, salt_partitions=16)
-    assert calls["n"] == 0
     assert P.snapshot_versions(out, "labels") == [1]
     # a fresh directory (here also another config) probes once
     out2 = str(tmp_path / "ckpt_probe_skip2")
-    P.run_with_checkpoints(spark, df, out2, salt_partitions=8,
-                           drop_text=True)
+    P.run_with_checkpoints(spark, df, out2, drop_text=True)
     assert calls["n"] == 1
 
 
@@ -874,7 +868,7 @@ def test_input_lineage_many_files(spark, tmp_path):
 
     tr = spark.read.parquet(src)
     out_dir = str(tmp_path / "ckpt_lineage")
-    run_with_checkpoints(spark, tr, out_dir, salt_partitions=8)
+    run_with_checkpoints(spark, tr, out_dir)
 
     from bytefreq_spark.pipeline import read_snapshot
 
@@ -908,8 +902,7 @@ def test_input_salt_decision_byte_skew(spark):
 
 
 def test_auto_salt_default_target(spark):
-    """r7 review: with no salt_partitions the probe still runs (against a
-    parallelism-derived target) and produces identical output — previously
+    """r7 review: the probe runs against a parallelism-derived target and produces identical output — previously
     it was a silent no-op."""
     pdf = gen_transcripts_pandas(100)
     df = spark.createDataFrame(pdf).repartition(8)
@@ -932,13 +925,10 @@ def test_checkpoint_drop_text_and_auto_salt(spark, corpus_pdf, drop_text):
     tmp = _tf.mkdtemp(prefix="bfq_ckpt_at_")
     try:
         labels = run_with_checkpoints(
-            spark, df, tmp, salt_partitions=8,
-            drop_text=drop_text,
-        ).toPandas()
+            spark, df, tmp, drop_text=drop_text).toPandas()
         for gone in ("text", "tool", "lu_key"):
             assert (gone in labels.columns) is not drop_text
-        full = quality_filter(
-            df, salt_partitions=8, drop_text=drop_text).toPandas()
+        full = quality_filter(df, drop_text=drop_text).toPandas()
         assert list(labels.columns) == list(full.columns)
         key = ["conv_id", "turn_idx"]
         a = labels.sort_values(key).reset_index(drop=True)
@@ -958,7 +948,7 @@ def test_checkpoint_lineage_resume_gap(spark, tmp_path):
 
     df = gen_transcripts_spark(spark, 40, partitions=4)
     out = str(tmp_path / "ckpt_gap")
-    run_with_checkpoints(spark, df, out, salt_partitions=8)
+    run_with_checkpoints(spark, df, out)
 
     import json as _json
 
@@ -971,7 +961,7 @@ def test_checkpoint_lineage_resume_gap(spark, tmp_path):
     # is exactly "metrics committed, input_lineage never did"
     _os.remove(_os.path.join(out, "input_lineage.manifest.json"))
 
-    labels = run_with_checkpoints(spark, df, out, salt_partitions=8)
+    labels = run_with_checkpoints(spark, df, out)
     cfg = {"version": 2, "drop_text": False, "labels_version": 1}
     assert snapshot_valid(out, "input_lineage", cfg)
     lin = read_snapshot(spark, out, "input_lineage").toPandas()
@@ -979,3 +969,110 @@ def test_checkpoint_lineage_resume_gap(spark, tmp_path):
     # the already-committed tables were NOT re-appended
     for n, v in before.items():
         assert _current(n) == v
+
+
+# byte strings that are not valid UTF-8, one per failure class: truncated
+# sequences, a lone continuation byte, overlong forms, a UTF-16 surrogate,
+# a code point above U+10FFFF, a 5-byte form and stray 0xFF/0xFE
+_BAD_UTF8 = [
+    b"\xff\xfe", b"\xed\xa0\x80", b"\xc3", b"\xe2\x82", b"\xf0\x9f\x98",
+    b"\x80", b"\xc0\xaf", b"\xe0\x80\xaf", b"\xf4\x90\x80\x80",
+    b"\xf8\x88\x80\x80\x80",
+]
+_GOOD_UTF8 = [b"", b"hello world", "café".encode(), "😀".encode()]
+
+
+def _binary_text_frame(spark, rows):
+    """``(conv_id, turn_idx, role, bytes)`` rows → a transcript frame whose
+    ``text`` is ``CAST(binary AS STRING)``: the JVM holds the bytes as they
+    are, invalid UTF-8 included."""
+    raw = spark.createDataFrame(
+        [(c, t, r, bytearray(b)) for c, t, r, b in rows],
+        "conv_id string, turn_idx int, role string, raw binary")
+    return raw.select(
+        "conv_id", "turn_idx", "role", F.col("raw").cast("string").alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit(None).cast("timestamp").alias("ts"))
+
+
+def test_invalid_utf8_repair_equals_python_decode(spark):
+    """featurize and the rescan key replace invalid UTF-8 exactly as
+    ``bytes.decode("utf-8", "replace")`` does: the repaired text, every
+    feature and the dictionary keys equal a run over the Python-decoded
+    strings (hand-picked failure classes plus random concatenations)."""
+    import random
+
+    rng = random.Random(7)
+    pool = _BAD_UTF8 + _GOOD_UTF8 + [bytes([b]) for b in range(0x80, 0x100)]
+    cases = _BAD_UTF8 + _GOOD_UTF8 + [
+        b"".join(rng.choice(pool) for _ in range(rng.randint(1, 6)))
+        for _ in range(2000)]
+    rows = [("c", i, "user", b) for i, b in enumerate(cases)]
+    cast = _binary_text_frame(spark, rows)
+    decoded = spark.createDataFrame(
+        [(c, i, r, b.decode("utf-8", "replace"), None, None)
+         for c, i, r, b in rows],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    cols = ["turn_idx", "text", "n_chars", "lu_key", "lang", "ppl",
+            "scrubbed_text"]
+
+    def feats(df):
+        return featurize(df).select(cols).toPandas().sort_values(
+            "turn_idx").reset_index(drop=True)
+
+    got = feats(cast)
+    assert got["text"].tolist() == [b.decode("utf-8", "replace")
+                                    for b in cases]
+    pd.testing.assert_frame_equal(got, feats(decoded))
+
+    def keys(df):
+        return sorted(r["lu_key"] for r in with_mask_key_arrow(df).collect())
+
+    assert keys(cast) == keys(decoded)
+
+
+def test_invalid_utf8_every_entry_point(spark, tmp_path):
+    """A turn holding invalid UTF-8 no longer fails the job: the one-shot,
+    checkpointed, incremental and streaming runs all label the frame as
+    the single-node reference labels the Python-decoded texts."""
+    from bytefreq_spark.pipeline import run_incremental
+    from bytefreq_spark.streaming.profile_stream import (
+        quality_filter_stream, read_transcript_stream,
+    )
+
+    rows = [("c1", 0, "user", b"hello world"),
+            ("c1", 1, "assistant", b"\xff\xfe"),
+            ("c1", 2, "user", b"\xed\xa0\x80")]
+    pdf = pd.DataFrame(
+        [(c, t, r, b.decode("utf-8", "replace"), None, None)
+         for c, t, r, b in rows],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    key = ["conv_id", "turn_idx"]
+    cols = key + ["keep", "drop_reason", "scrubbed_text"]
+    want = run_reference(pdf)[cols].sort_values(key).reset_index(drop=True)
+    assert want["scrubbed_text"].tolist()[1:] == ["\ufffd" * 2, "\ufffd" * 3]
+
+    df = _binary_text_frame(spark, rows)
+    in_dir = str(tmp_path / "in")
+    df.coalesce(1).write.parquet(in_dir)
+    out_dir = str(tmp_path / "out")
+    q = (quality_filter_stream(
+            read_transcript_stream(spark, in_dir), out_dir,
+            str(tmp_path / "sck"),
+            mask_frequency_dict(with_mask_key_arrow(spark.read.parquet(in_dir))))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    runs = {
+        "quality_filter": quality_filter(df),
+        "run_with_checkpoints": run_with_checkpoints(
+            spark, df, str(tmp_path / "ck")),
+        "run_incremental": run_incremental(
+            spark, df, str(tmp_path / "inc"))[0],
+        "quality_filter_stream": spark.read.parquet(out_dir),
+    }
+    for name, out in runs.items():
+        got = out.select(cols).toPandas().sort_values(key).reset_index(
+            drop=True)
+        pd.testing.assert_frame_equal(got, want[cols], check_dtype=False,
+                                      obj=name)

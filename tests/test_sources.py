@@ -362,17 +362,17 @@ def test_read_excel_spark(spark, tmp_path):
 
 
 def test_read_excel_files_distributed(spark, tmp_path):
-    """Many workbooks → binaryFile + one parse task per file."""
+    """A glob of many workbooks → binaryFile + one parse task per file."""
     import pytest as _pytest
 
-    from bytefreq_spark.sources.tabular import read_excel_files
+    from bytefreq_spark.sources.tabular import read_excel
 
     hdr = [["Id", "Val"]]
     for i in range(3):
         (tmp_path / f"wb{i}.xlsx").write_bytes(
             _make_xlsx({"s": hdr + [[i * 10 + j, f"v{i}-{j}"]
                                     for j in range(4)]}))
-    df = read_excel_files(spark, str(tmp_path / "*.xlsx"))
+    df = read_excel(spark, str(tmp_path / "*.xlsx"))
     assert df.columns == ["Id", "Val"]
     assert df.count() == 12
     got = {tuple(r) for r in df.collect()}
@@ -381,7 +381,7 @@ def test_read_excel_files_distributed(spark, tmp_path):
     (tmp_path / "bad.xlsx").write_bytes(
         _make_xlsx({"s": [["Other", "Header"], [1, "x"]]}))
     with _pytest.raises(Exception, match="header mismatch"):
-        read_excel_files(spark, str(tmp_path / "*.xlsx")).collect()
+        read_excel(spark, str(tmp_path / "*.xlsx")).collect()
 
 
 def test_read_delimited_multipartition(spark, tmp_path_factory):

@@ -40,8 +40,7 @@ def test_spark_submit_pyfiles(tmp_path, spark):
             "--conf", "spark.sql.shuffle.partitions=8",
             "--py-files", zip_path,
             os.path.join(REPO, "scripts", "submit_job.py"),
-            "--input", in_dir, "--output", out_dir,
-            "--salt-partitions", "4",
+            "quality-filter", "--input", in_dir, "--output", out_dir,
         ],
         cwd=str(tmp_path),  # NOT the repo: imports must come from the zip
         capture_output=True, text=True, timeout=420,
@@ -71,8 +70,7 @@ def test_cli_ingest_batch_idempotent(tmp_path, spark):
     def run_cli():
         proc = subprocess.run(
             [sys.executable, "-m", "bytefreq_spark.cli", "ingest",
-             "--input", in_dir, "--snapshot-dir", snap,
-             "--salt-partitions", "4"],
+             "--input", in_dir, "--snapshot-dir", snap],
             cwd=REPO, capture_output=True, text=True, timeout=420,
         )
         assert proc.returncode == 0, proc.stderr[-4000:]
