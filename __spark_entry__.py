@@ -718,8 +718,9 @@ def q_incremental_ingest_stream(spark, sf_dir):
     two ingest-atomic conversation batches land as two files in a watched
     directory; ``maxFilesPerTrigger=1`` under an availableNow trigger forces
     two micro-batches, each running the crash-safe ``run_incremental``
-    commit (anti-join against the committed labels, monoid mask-dict merge,
-    manifest-last snapshot commit).  The committed labels snapshot is staged
+    commit (anti-join against the committed labels, the dictionary tallied
+    from the committed labels' keys plus the batch's, manifest-last
+    snapshot commit).  The committed labels snapshot is staged
     flat; DuckDB takes its row universe from the staged INPUT files and
     left-joins the decision replay over the staged labels — a lost batch
     changes the row set and goes red; a double-committed batch leaves

@@ -84,7 +84,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="parquet dir of transcripts (batch) or a watched "
                          "directory of arriving files (--stream)")
     ig.add_argument("--snapshot-dir", required=True,
-                    help="snapshot root (labels + freq + conv_index tables)")
+                    help="snapshot root (the labels table, the commit point, "
+                         "and its conv_index cache)")
     ig.add_argument("--stream", action="store_true",
                     help="run as a Structured Streaming job (foreachBatch "
                          "around the same crash-safe commit); requires "

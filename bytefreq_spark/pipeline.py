@@ -18,7 +18,7 @@ stages):
    (the Spark analogue of bytefreq's associative-array tallies).  Only its
    source differs per entry point: a column-pruned Arrow rescan of the input
    (``quality_filter``), the featurized snapshot (``run_with_checkpoints``),
-   the monoid merge of the committed tally with the new batch's
+   the committed labels' ``lu_key`` column plus a rescan of the new batch
    (``run_incremental``), or a caller-supplied dictionary (the stream).
 4. **labelling** — :func:`label_turns`: broadcast-join the dictionary (J4),
    hash the raw text to 64 bits, ONE hash exchange on ``conv_id`` sorted by
@@ -128,16 +128,17 @@ def with_mask_key_arrow(df: DataFrame) -> DataFrame:
     return pref.select(_lu_key_udf()(F.col("_pref")).alias("lu_key"))
 
 
-def input_salt_decision(
-    df: DataFrame, target: int, skew_tolerance: float = 2.0,
-) -> int | None:
+SKEW_TOLERANCE = 2.0  # max rows or text bytes of a partition, × the mean
+
+
+def input_salt_decision(df: DataFrame, target: int) -> int | None:
     """Measured salt decision (VERDICT_r6 #1): probe the input's partition
     layout with one cheap job and return ``None`` when the layout is already
     acceptable — the featurize round-robin exchange is pure overhead on a
     balanced input (docs/SCALE.md: salt is optional on bucketed Iceberg).
 
     "Acceptable" = enough partitions to occupy the cluster (≥ target/2) AND
-    no partition more than ``skew_tolerance``× the mean by EITHER row count
+    no partition more than ``SKEW_TOLERANCE``× the mean by EITHER row count
     or text bytes — a whale conversation is whale-shaped in rows, but a
     longdocs-style file is whale-shaped in bytes at balanced row counts,
     and both starve the featurize stage (r7 review: the original
@@ -159,21 +160,18 @@ def input_salt_decision(
     by_part = df.groupBy(F.spark_partition_id().alias("p"))
     counts = [r["cnt"] for r in by_part.agg(
         F.count("*").alias("cnt")).collect()]
-    if not _layout_acceptable(counts, None, target, skew_tolerance):
+    if not _layout_acceptable(counts, None, target):
         return target
     if "text" not in df.columns:
         return None
     chars = [r["chars"] for r in by_part.agg(
         F.coalesce(F.sum(F.length("text")), F.lit(0)).alias("chars")
     ).collect()]
-    ok = _layout_acceptable(counts, chars, target, skew_tolerance)
+    ok = _layout_acceptable(counts, chars, target)
     return None if ok else target
 
 
-def _layout_acceptable(
-    counts: list, chars: list | None, target: int,
-    skew_tolerance: float = 2.0,
-) -> bool:
+def _layout_acceptable(counts: list, chars: list | None, target: int) -> bool:
     """Pure decision core of :func:`input_salt_decision` (property-tested):
     acceptable iff there are enough partitions to occupy the cluster AND
     the layout is balanced by rows AND (when known) by bytes."""
@@ -182,7 +180,7 @@ def _layout_acceptable(
 
     def _balanced(vals: list) -> bool:
         mean = sum(vals) / len(vals)
-        return mean == 0 or max(vals) <= skew_tolerance * mean
+        return mean == 0 or max(vals) <= SKEW_TOLERANCE * mean
 
     return (
         len(counts) >= max(target // 2, 1)
@@ -412,86 +410,73 @@ def quality_filter(df: DataFrame, drop_text: bool = False) -> DataFrame:
 
 
 def run_incremental(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    config: dict | None = None,
+    spark: SparkSession, transcripts: DataFrame, out_dir: str,
 ) -> tuple[DataFrame, int]:
     """Incremental ingest — the 10^12-turn reality: you never reprocess the
     corpus; each batch labels only conversations not yet in the labels
     snapshot and commits new snapshot versions.
 
-    The mask-frequency dictionary is maintained as the additive monoid it is
-    (bytefreq's tally is just counts): ``freq(N+1) = freq(N) ⊎ tally(new
-    turns)`` — exactly equal to a full-corpus recompute (asserted in
-    test_run_incremental), with only the new turns scanned.  Crash safety:
-    the labels table is the ONLY commit point (it retains ``lu_key`` —
-    which is also why this path deliberately offers no ``drop_text``: the
-    freq snapshot is rebuilt from labels on a validity mismatch, so the
-    mask key must survive in the committed table; run the checkpointed or
-    one-shot pipeline for the text-free output shape); the
-    freq snapshot is a derived cache validity-keyed to the labels version,
-    rebuilt from labels whenever the key mismatches — a failure between the
-    labels and freq commits can never double- or under-count.  New
-    conversations are decided against the dictionary as of their ingest;
-    conversations are ingest-atomic (all turns arrive together), so the
-    dup-lag and ordering semantics are unaffected.  The labels commit here
-    rewrites old+new as v(N+1) (the sandbox parquet stand-in); on Iceberg
-    this is a fast append of the new files to the table snapshot.
+    The mask-frequency dictionary is the additive monoid it is (bytefreq's
+    tally is just counts): one ``groupBy`` over the committed labels'
+    ``lu_key`` column plus the new turns' rescan keys, never written —
+    exactly a full-corpus recompute (asserted in test_run_incremental).
+    That column is the dictionary's only source for committed turns, which
+    is why the labels keep ``lu_key`` and this path offers no
+    ``drop_text`` (run the checkpointed or one-shot pipeline for the
+    text-free output shape).  Crash safety: the labels table is the ONLY
+    commit point; its one derived cache, ``conv_index`` (the anti-join's
+    right side), is validity-keyed to the labels version and rebuilt from
+    the labels on a mismatch, so a failure between the two commits can
+    never lose or duplicate conversations.  New conversations are decided
+    against the dictionary as of their ingest; conversations are
+    ingest-atomic (all turns arrive together), so the dup-lag and ordering
+    semantics are unaffected.  The labels commit here rewrites old+new as
+    v(N+1) (the sandbox parquet stand-in); on Iceberg this is a fast
+    append of the new files to the table snapshot.
 
     The new batch featurizes in its own layout: no salt and no layout
     probe.  A per-batch probe measured 0.5-1.5 s dearer per two-batch
     ingest at ``local[4]`` (BENCH/NOTES.md, "Per-batch salt probe"); a
     probe that needs no Spark job (file metadata) is what would make it
-    free.  The config is ``{**config, version: 2}``.
+    free.  The config is ``{version: 2}``.
 
-    Returns ``(labels_df, n_new_turns)``.
+    Returns ``(labels_df, n_new_turns)``, the count taken from the two
+    labels versions' parquet footers.
     """
-    config = dict(config or {}, version=2)
+    config = {"version": 2}
     labels_v = snapshot_versions(out_dir, "labels")
     if labels_v:
         old_labels = read_snapshot(spark, out_dir, "labels")
-        derived = dict(config, labels_version=labels_v[-1])
-        # the anti-join's right side is the THIN conv_index cache (one
-        # distinct conv_id column, ~avg_turns_per_conv × narrower than the
-        # wide labels table a per-batch distinct would rescan); like freq it
-        # is keyed to the labels version, so a crash between the commits can
-        # never lose or duplicate conversations.  AQE turns the anti-join
-        # into a broadcast join whenever the index is small enough.
+        # the anti-join's right side is the THIN conv_index cache (one row
+        # per conversation, ~avg_turns_per_conv × fewer than the labels'
+        # conv_id column).  AQE turns the anti-join into a broadcast join
+        # whenever the index is small enough.
         existing = _materialize(
-            spark, out_dir, "conv_index", derived,
+            spark, out_dir, "conv_index",
+            dict(config, labels_version=labels_v[-1]),
             lambda: old_labels.select("conv_id").distinct())
         new = transcripts.join(existing, "conv_id", "left_anti")
+        if new.isEmpty():
+            return old_labels, 0
     else:
         old_labels, new = None, transcripts
-    n_new = new.count()
-    if n_new == 0 and old_labels is not None:
-        return old_labels, 0
 
-    # the delta tally runs the rescan's Arrow mask kernel, so it agrees
-    # with featurize's lu_key by construction
-    freq = mask_frequency_dict(with_mask_key_arrow(new))
+    # the new turns' keys come from the rescan's Arrow mask kernel, so they
+    # agree with featurize's lu_key by construction
+    keys = with_mask_key_arrow(new)
     if old_labels is not None:
-        freq_old = _materialize(
-            spark, out_dir, "freq", derived,
-            lambda: mask_frequency_dict(old_labels))
-        freq = freq_old.unionByName(freq).groupBy("lu_key").agg(
-            F.sum("lu_count").alias("lu_count"))
-
-    labeled_new = label_turns(featurize(new), freq)
-    combined = (
-        labeled_new if old_labels is None
-        else old_labels.unionByName(labeled_new)
-    )
+        keys = old_labels.select("lu_key").unionByName(keys)
+    combined = label_turns(featurize(new), mask_frequency_dict(keys))
+    if old_labels is not None:
+        combined = old_labels.unionByName(combined)
     write_snapshot(combined, out_dir, "labels", config)  # THE commit point
     labels = read_snapshot(spark, out_dir, "labels")
-    # refresh the derived caches, keyed to the version just committed
     derived = dict(
         config, labels_version=snapshot_versions(out_dir, "labels")[-1])
-    write_snapshot(mask_frequency_dict(labels), out_dir, "freq", derived)
     write_snapshot(
         labels.select("conv_id").distinct(), out_dir, "conv_index", derived)
-    return labels, n_new
+    n_old = 0 if old_labels is None else old_labels.count()
+    return labels, labels.count() - n_old
 
 
 def conv_bucket_col(n_buckets: int) -> F.Column:
@@ -672,7 +657,6 @@ def run_with_checkpoints(
     spark: SparkSession,
     transcripts: DataFrame,
     out_dir: str,
-    config: dict | None = None,
     drop_text: bool = False,
 ) -> DataFrame:
     """Resumable run: each stage materializes a snapshot; a restart reloads
@@ -685,7 +669,7 @@ def run_with_checkpoints(
     tallied from the featurized snapshot's ``lu_key`` instead of a rescan
     of the input.
 
-    The config is ``{**config, version: 2, drop_text}``: the salt only
+    The config is ``{version: 2, drop_text}``: the salt only
     places rows and is not part of it, so the probe runs inside the
     featurized build and a resume with valid labels neither probes nor
     reads ``featurized``.  A resume serves the committed labels whatever
@@ -694,7 +678,7 @@ def run_with_checkpoints(
     committed only when stale, so a crash between their commits leaves a
     resumable gap."""
     os.makedirs(out_dir, exist_ok=True)
-    config = dict(config or {}, version=2, drop_text=drop_text)
+    config = {"version": 2, "drop_text": drop_text}
 
     def build_labels() -> DataFrame:
         feat = _materialize(

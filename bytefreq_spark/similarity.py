@@ -174,6 +174,8 @@ def ivf_train_centroids(
     standard IVF recipe; only assignment and search are distributed.
     Determinism: sample = first ``sample_n`` rows by ``xxhash64(id, seed)``
     order, init = first ``n_centroids`` of the sample, fixed iteration count.
+    NULL vectors and vectors whose length differs from the sample's first
+    vector are skipped, as :func:`ivf_assign_udf` gives them no cluster.
     """
     sample = (
         df.select(F.col(id_col), F.col(vec_col))
@@ -181,7 +183,9 @@ def ivf_train_centroids(
         .limit(sample_n)
         .collect()
     )
-    x = np.array([list(r[vec_col]) for r in sample], dtype=np.float64)
+    vecs = [r[vec_col] for r in sample if r[vec_col] is not None]
+    x = np.array([list(v) for v in vecs if len(v) == len(vecs[0])],
+                 dtype=np.float64)
     cents = x[:n_centroids].copy()
     for _ in range(iters):
         d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
@@ -194,16 +198,25 @@ def ivf_train_centroids(
 
 
 def ivf_assign_udf(centroids: np.ndarray):
-    """Arrow-vectorized nearest-centroid assignment (one matmul per batch)."""
+    """Arrow-vectorized nearest-centroid assignment (one matmul per batch).
+    NULL and ragged vectors (length ≠ the centroids' dim) get a NULL
+    cluster, so no probe ever selects them."""
     cents = centroids.astype(np.float64)
     c2 = (cents ** 2).sum(axis=1)
+    dim = cents.shape[1]
 
     @F.pandas_udf("int")
     def assign(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        # argmin ||x-c||² = argmin c·c - 2 x·c  (x·x constant per row)
-        d = c2[None, :] - 2.0 * (x @ cents.T)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
+        ok = np.fromiter(
+            (v is not None and len(v) == dim for v in vecs),
+            dtype=bool, count=len(vecs),
+        )
+        out = np.zeros(len(vecs), dtype=np.int32)
+        if ok.any():
+            x = np.array(vecs[ok].tolist(), dtype=np.float64)
+            # argmin ||x-c||² = argmin c·c - 2 x·c  (x·x constant per row)
+            out[ok] = (c2[None, :] - 2.0 * (x @ cents.T)).argmin(axis=1)
+        return pd.Series(pd.arrays.IntegerArray(out, ~ok))
 
     return assign
 

@@ -87,8 +87,9 @@ def incremental_ingest_stream(
     Structured Streaming job.  Each micro-batch of arriving conversations
     runs the same crash-safe ``run_incremental`` commit the batch path uses —
     anti-join against the committed labels snapshot, label only the new
-    conversations, maintain the mask-frequency dictionary as an additive
-    monoid (≡ full-corpus tally, asserted in tests).
+    conversations against the dictionary tallied from the committed
+    labels' ``lu_key`` column plus the batch's own keys (≡ full-corpus
+    tally, asserted in tests).
 
     Effectively-exactly-once WITHOUT sink transactions: ``foreachBatch`` is
     at-least-once on retry, but the anti-join makes reprocessing a batch a

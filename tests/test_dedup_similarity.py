@@ -350,6 +350,42 @@ def test_ivf_assignments_deterministic(spark, emb):
     assert a == b
 
 
+def test_ivf_null_and_ragged_vectors(spark):
+    """A NULL or ragged vector gets a NULL cluster instead of failing the
+    job: training skips it, the valid rows get the clusters they get
+    alone, and the full-probe search equals the brute force over the valid
+    rows."""
+    import numpy as np
+
+    from bytefreq_spark.similarity import (
+        ivf_assignments, ivf_topk, ivf_train_centroids,
+    )
+
+    rng = np.random.RandomState(11)
+    valid = [(i, [float(x) for x in rng.standard_normal(8)])
+             for i in range(60)]
+    schema = "vec_id long, embedding array<float>"
+    good = spark.createDataFrame(valid, schema)
+    df = spark.createDataFrame(valid + [(100, None), (101, [1.0, 2.0])], schema)
+
+    cents = ivf_train_centroids(df, n_centroids=4)
+    assert np.allclose(cents, ivf_train_centroids(good, n_centroids=4))
+    got = {r["vec_id"]: r["ivf_cluster"]
+           for r in ivf_assignments(df, cents).collect()}
+    alone = {r["vec_id"]: r["ivf_cluster"]
+             for r in ivf_assignments(good, cents).collect()}
+    assert got[100] is None and got[101] is None
+    assert {i: c for i, c in got.items() if i < 100} == alone
+    assert all(c is not None for c in alone.values())
+
+    q = valid[5][1]
+    full = [(r["vec_id"], r["cosine"]) for r in
+            ivf_topk(df, q, k=10, n_centroids=4, n_probe=4).collect()]
+    brute = [(r["vec_id"], r["cosine"])
+             for r in cosine_topk(good, q, k=10).collect()]
+    assert full == brute
+
+
 def test_cosine_zero_vector_yields_null_not_crash(spark):
     """ANSI mode: zero vectors must produce NULL cosine (try_divide), not a
     DIVIDE_BY_ZERO crash taking down the scan."""

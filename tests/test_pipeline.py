@@ -629,16 +629,16 @@ def test_labels_bucket_pruning(spark, tmp_path):
 
 def test_run_incremental(spark, tmp_path):
     """Incremental ingest: only new conversations are labeled, the mask
-    dictionary is maintained as an additive monoid (exactly equal to the
-    full-corpus tally), new rows match a full recompute, and re-ingesting
-    the same corpus is a no-op."""
+    dictionary is an additive monoid (the committed labels' tally equals
+    the full-corpus tally), new rows match a full recompute, re-ingesting
+    the same corpus is a no-op, and no freq snapshot is written or read."""
     from bytefreq_spark.pipeline import (
         mask_frequency_dict, quality_filter, read_snapshot, run_incremental,
-        snapshot_versions,
+        snapshot_versions, write_snapshot,
     )
     from bytefreq_spark.synth import gen_transcripts_spark
 
-    out = str(tmp_path)
+    out = str(tmp_path / "inc")
     a = gen_transcripts_spark(spark, 40)
     lab1, n1 = run_incremental(spark, a, out)
     assert n1 == a.count() and lab1.count() == n1
@@ -650,9 +650,10 @@ def test_run_incremental(spark, tmp_path):
     assert lab2.count() == ab.count()
     assert snapshot_versions(out, "labels") == [1, 2]
 
-    # monoid check: incrementally-maintained dictionary == full-corpus tally
+    # monoid check: the committed labels' lu_key tally (the dictionary's
+    # source for committed turns) == the full-corpus rescan tally
     freq_inc = {r["lu_key"]: r["lu_count"]
-                for r in read_snapshot(spark, out, "freq").collect()}
+                for r in mask_frequency_dict(lab2).collect()}
     freq_full = {r["lu_key"]: r["lu_count"]
                  for r in mask_frequency_dict(with_mask_key(ab)).collect()}
     assert freq_inc == freq_full
@@ -671,24 +672,28 @@ def test_run_incremental(spark, tmp_path):
     lab3, n3 = run_incremental(spark, ab, out)
     assert n3 == 0 and lab3.count() == ab.count()
     assert snapshot_versions(out, "labels") == [1, 2]
+    assert snapshot_versions(out, "freq") == []
 
-    # crash safety: a stale/corrupt freq cache (validity key mismatching the
-    # labels version — what a crash between the labels and freq commits
-    # leaves behind) is ignored and rebuilt from the committed labels table
-    from bytefreq_spark.pipeline import write_snapshot
-
-    bogus = spark.createDataFrame([("zzzz", 999999)],
+    # a leftover freq table, as an older version wrote it (keyed to the
+    # current labels version, so it would pass a validity check), changes
+    # no decision: the next batch labels exactly as it does in a copy of
+    # the directory without it
+    clean = str(tmp_path / "clean")
+    shutil.copytree(out, clean)
+    bogus = spark.createDataFrame([("zzzz", 10**9)],
                                   "lu_key string, lu_count long")
-    write_snapshot(bogus, out, "freq", {"labels_version": -1})
+    write_snapshot(bogus, out, "freq", {"version": 2, "labels_version": 2})
     abc = gen_transcripts_spark(spark, 85)
     lab4, n4 = run_incremental(spark, abc, out)
-    assert n4 > 0 and lab4.count() == abc.count()
-    freq_inc3 = {r["lu_key"]: r["lu_count"]
-                 for r in read_snapshot(spark, out, "freq").collect()}
+    want4, want_n4 = run_incremental(spark, abc, clean)
+    assert n4 == want_n4 > 0 and lab4.count() == abc.count()
+    assert lab4.select(cols).exceptAll(want4.select(cols)).count() == 0
+    assert want4.select(cols).exceptAll(lab4.select(cols)).count() == 0
+    assert snapshot_versions(clean, "freq") == []
     freq_full3 = {r["lu_key"]: r["lu_count"]
                   for r in mask_frequency_dict(with_mask_key(abc)).collect()}
-    assert freq_inc3 == freq_full3
-    assert "zzzz" not in freq_inc3
+    assert {r["lu_key"]: r["lu_count"]
+            for r in mask_frequency_dict(lab4).collect()} == freq_full3
 
     # the thin conv_index cache (the anti-join's right side at scale) is
     # maintained and equals the committed conversations; a stale/corrupt one
@@ -715,7 +720,7 @@ def test_incremental_ingest_stream(spark, tmp_path):
     """r4: the 10^12-turn ingest loop as a streaming job — each micro-batch
     runs the crash-safe run_incremental commit.  Asserts (a) multi-micro-
     batch ingest (maxFilesPerTrigger=1) labels everything exactly once and
-    the monoid dictionary equals the full-corpus tally, (b) REPLAYING the
+    the committed labels' tally equals the full-corpus tally, (b) REPLAYING the
     whole feed under a FRESH checkpoint (foreachBatch's at-least-once worst
     case) is a no-op thanks to the anti-join — effectively-exactly-once
     without sink transactions."""
@@ -754,7 +759,7 @@ def test_incremental_ingest_stream(spark, tmp_path):
     assert n_versions >= 2  # really ingested in >1 micro-batch
 
     freq_inc = {r["lu_key"]: r["lu_count"]
-                for r in read_snapshot(spark, out, "freq").collect()}
+                for r in mask_frequency_dict(labels).collect()}
     freq_full = {r["lu_key"]: r["lu_count"]
                  for r in mask_frequency_dict(with_mask_key(full)).collect()}
     assert freq_inc == freq_full
