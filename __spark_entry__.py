@@ -33,19 +33,28 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-# Every staged-oracle artifact below lives under /tmp/bytefreq_*_{pid}; the
-# oracle SQL reads them AFTER the Spark query returns, so they cannot be
-# deleted inline — sweep them when the driver process exits instead
-# (ADVICE r6: the langid/minhash/... stage dirs accumulated across runs).
+# Every staged-oracle artifact below lives under one root per checkout, named
+# by a hash of this file's directory: the oracle SQL embeds the staged paths,
+# so it renders the same in every process, and two checkouts compared side
+# by side never share a root.  The oracle SQL reads the artifacts AFTER the
+# Spark query returns, so they cannot be deleted inline — the root is swept
+# when the process exits instead.  Processes of ONE checkout share the
+# root, so run one query sweep per checkout at a time.
 import atexit  # noqa: E402
-import glob as _glob  # noqa: E402
+import hashlib as _hashlib  # noqa: E402
 import shutil as _shutil  # noqa: E402
+
+_STAGE_ROOT = "/tmp/bytefreq_stage_" + _hashlib.sha1(
+    os.path.dirname(os.path.abspath(__file__)).encode()).hexdigest()[:12]
+
+
+def _stage(name: str) -> str:
+    return os.path.join(_STAGE_ROOT, name)
 
 
 @atexit.register
 def _sweep_stage_dirs() -> None:
-    for d in _glob.glob(f"/tmp/bytefreq_*_{os.getpid()}"):
-        _shutil.rmtree(d, ignore_errors=True)
+    _shutil.rmtree(_STAGE_ROOT, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -329,15 +338,12 @@ def q_ivf_partitioned_topk(spark, sf_dir):
     return ivf_topk_partitioned(spark, IVF_LAYOUT_DIR, qvec, cents, k=10, n_probe=3)
 
 
-# PID-suffixed paths: the oracle SQL below reads the same staged artifacts
-# the Spark query wrote earlier in the same process; concurrent driver
-# processes each get their own staging root
-IVF_LAYOUT_DIR = f"/tmp/bytefreq_r3_ivf_layout_{os.getpid()}"
-IVF_PROBES_DIR = f"/tmp/bytefreq_r3_ivf_probes_{os.getpid()}"
-IVF_QUERY_DIR = f"/tmp/bytefreq_r3_ivf_query_{os.getpid()}"
+IVF_LAYOUT_DIR = _stage("ivf_layout")
+IVF_PROBES_DIR = _stage("ivf_probes")
+IVF_QUERY_DIR = _stage("ivf_query")
 
 
-LANGID_STAGE_DIR = f"/tmp/bytefreq_r6_langid_{os.getpid()}"
+LANGID_STAGE_DIR = _stage("langid")
 
 
 def q_langid_docs(spark, sf_dir):
@@ -432,18 +438,14 @@ def q_lsh_hot_buckets(spark, sf_dir):
     )
 
 
-# staging roots for the replay oracles, PID-suffixed so concurrent driver
-# processes can't clobber each other's artifacts (the oracle SQL is built in
-# the same process that ran the Spark query, so the suffix always agrees)
-_STAGE_TAG = os.getpid()
-MINHASH_SIGS_DIR = f"/tmp/bytefreq_r3_minhash_sigs_{_STAGE_TAG}"
-MINHASH_BANDS_DIR = f"/tmp/bytefreq_r3_minhash_bands_{_STAGE_TAG}"
-HOTBUCKET_BANDS_DIR = f"/tmp/bytefreq_r3_hotbucket_bands_{_STAGE_TAG}"
-SIMHASH_GROUPS_DIR = f"/tmp/bytefreq_r3_simhash_vals_{os.getpid()}"
-SIMHASH_BANDS_DIR = f"/tmp/bytefreq_r3_simhash_bands_{os.getpid()}"
-ANN_SIGS_DIR = f"/tmp/bytefreq_r3_ann_sigs_{os.getpid()}"
-ANN_PROBES_DIR = f"/tmp/bytefreq_r3_ann_probes_{os.getpid()}"
-ANN_QUERY_DIR = f"/tmp/bytefreq_r3_ann_query_{os.getpid()}"
+MINHASH_SIGS_DIR = _stage("minhash_sigs")
+MINHASH_BANDS_DIR = _stage("minhash_bands")
+HOTBUCKET_BANDS_DIR = _stage("hotbucket_bands")
+SIMHASH_GROUPS_DIR = _stage("simhash_vals")
+SIMHASH_BANDS_DIR = _stage("simhash_bands")
+ANN_SIGS_DIR = _stage("ann_sigs")
+ANN_PROBES_DIR = _stage("ann_probes")
+ANN_QUERY_DIR = _stage("ann_query")
 
 
 def q_simhash_groups(spark, sf_dir):
@@ -664,9 +666,9 @@ def q_streaming_sessions(spark, sf_dir):
     )
 
 
-QF_STAGE_DIR = f"/tmp/bytefreq_r5_qf_stage_{os.getpid()}"
-CKPT_RESUME_DIR = f"/tmp/bytefreq_r5_ckpt_{os.getpid()}"
-INC_STREAM_DIR = f"/tmp/bytefreq_r5_incstream_{os.getpid()}"
+QF_STAGE_DIR = _stage("qf_stage")
+CKPT_RESUME_DIR = _stage("ckpt")
+INC_STREAM_DIR = _stage("incstream")
 
 
 def q_quality_filter_transcripts(spark, sf_dir):
@@ -790,7 +792,7 @@ def q_embedding_near_dups(spark, sf_dir):
     ).orderBy("id_a", "id_b")
 
 
-EMB_BANDS_DIR = f"/tmp/bytefreq_r3_emb_bands_{os.getpid()}"
+EMB_BANDS_DIR = _stage("emb_bands")
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -828,7 +830,7 @@ def q_multimodal_features(spark, sf_dir):
     )
 
 
-MEDIA_STR_DIR = f"/tmp/bytefreq_r3_media_str_{os.getpid()}"
+MEDIA_STR_DIR = _stage("media_str")
 
 
 def q_ann_lsh(spark, sf_dir):
@@ -900,7 +902,7 @@ def q_excel_scan(spark, sf_dir):
     return read_excel(spark, path)
 
 
-EXCEL_STAGE_DIR = f"/tmp/bytefreq_r4_excel_{os.getpid()}"
+EXCEL_STAGE_DIR = _stage("excel")
 
 
 def q_doubled_columns(spark, sf_dir):
@@ -993,7 +995,8 @@ def q_encoding_repair(spark, sf_dir):
 
 
 def _tmp_path(sf_dir: str, name: str) -> str:
-    return f"/tmp/bytefreq_r2_{name}_{os.path.basename(os.path.normpath(sf_dir))}"
+    os.makedirs(_STAGE_ROOT, exist_ok=True)
+    return _stage(f"{name}_{os.path.basename(os.path.normpath(sf_dir))}")
 
 
 def q_ragged_columns(spark, sf_dir):

@@ -42,8 +42,13 @@ This mirrors bytefreq's mask philosophy: cheap character-class evidence first
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
+
+from .masks import CodepointTable, flat_codes
+from .quality import _rowwise_count
 
 # Unicode script ranges (public Unicode block boundaries) — the single
 # source of truth: the fast path compares codepoints against these ranges
@@ -143,14 +148,13 @@ CAP_CHARS = 2048  # language is decidable from a prefix; bounds cost on huge tur
 _TOK_MAX = 5
 _CODE_BITS = 5
 _INVALID_CODE = 31
-_CODE_LUT_SIZE = 0x1000  # marker chars are all < U+1000; others can't match
 
 # marker word → packed per-language membership bits (words can belong to
 # several languages, e.g. 'la' in fr and es, 'de' in fr and es)
 _PACKED: dict[str, int] = {}
 for _i, _lang in enumerate(LATIN_ORDER):
     for _w in LATIN_MARKER_WORDS[_lang]:
-        assert len(_w) <= _TOK_MAX and all(ord(c) < _CODE_LUT_SIZE for c in _w)
+        assert len(_w) <= _TOK_MAX
         _PACKED[_w] = _PACKED.get(_w, 0) | (1 << _i)
 
 _MARKER_ALPHABET = sorted({c for w in _PACKED for c in w})
@@ -167,65 +171,16 @@ _MARKER_BITS = np.array(
     [_PACKED[w] for w in sorted(_PACKED, key=_pack_word)], dtype=np.int64
 )
 
-_W_LUT_SIZE = 0x10000  # BMP dense; astral resolves per-unique through re
-_W_LUT: np.ndarray | None = None
-_CODE_LUT: np.ndarray | None = None
-
-
-def _w_lut() -> np.ndarray:
-    """int8 LUT: 1 iff ``re.match(r"\\w", chr(cp))`` for cp < _W_LUT_SIZE —
-    built FROM the regex engine itself, so token boundaries are \\w-exact by
-    construction; sentinel 2 at the clip index routes astral codepoints to
-    the per-unique fallback."""
-    global _W_LUT
-    if _W_LUT is None:
-        import re
-
-        pat = re.compile(r"\w")
-        _W_LUT = np.append(
-            np.fromiter(
-                (1 if pat.match(chr(cp)) else 0 for cp in range(_W_LUT_SIZE)),
-                dtype=np.int8, count=_W_LUT_SIZE,
-            ),
-            np.int8(2),
-        )
-    return _W_LUT
-
-
-def _code_lut() -> np.ndarray:
-    """uint8 LUT fusing lowercase + alphabet classify: cp → 5-bit code of
-    ``chr(cp).lower()`` in the marker alphabet, or _INVALID_CODE when the
-    lowercase is multi-char ('İ'), outside the alphabet, or the source cp is
-    out of LUT range (clip index)."""
-    global _CODE_LUT
-    if _CODE_LUT is None:
-        vals = []
-        for cp in range(_CODE_LUT_SIZE):
-            low = chr(cp).lower()
-            vals.append(
-                _CHAR_CODE.get(low, _INVALID_CODE) if len(low) == 1
-                else _INVALID_CODE
-            )
-        vals.append(_INVALID_CODE)  # clip sentinel
-        _CODE_LUT = np.array(vals, dtype=np.uint8)
-    return _CODE_LUT
-
-
-def _seg_count16(mask: np.ndarray, starts: np.ndarray,
-                 lens: np.ndarray) -> np.ndarray:
-    """Per-row popcount of a flat boolean mask (uint16 reduceat — counts are
-    bounded by CAP_CHARS) through ``quality._rowwise_sum``, which also
-    handles the empty-row quirks.
-
-    PRECONDITION: per-row counts must fit uint16 — every caller caps texts
-    at CAP_CHARS first.  Asserted here (ADVICE r6): a future uncapped caller
-    would otherwise get silently truncated counts."""
-    assert not len(lens) or int(lens.max()) < (1 << 16), (
-        "_seg_count16 requires rows < 2^16 chars (cap at CAP_CHARS first)"
-    )
-    from .quality import _rowwise_sum
-
-    return _rowwise_sum(mask.astype(np.uint16), starts, lens).astype(np.int64)
+# \w per codepoint, built FROM the regex engine itself so token boundaries
+# are \w-exact by construction; dense over the BMP
+_is_word = CodepointTable(
+    lambda cp: re.match(r"\w", chr(cp)) is not None, 0x10000, bool)
+# lowercase + alphabet classify fused: 5-bit code of ``chr(cp).lower()`` in
+# the marker alphabet, or _INVALID_CODE when it is outside it or multi-char
+# ('İ'); dense below U+1000, where every marker char lies
+_marker_code = CodepointTable(
+    lambda cp: _CHAR_CODE.get(chr(cp).lower(), _INVALID_CODE), 0x1000,
+    "uint8")
 
 
 def _script_counts(sub: pd.Series) -> dict[str, np.ndarray]:
@@ -234,39 +189,19 @@ def _script_counts(sub: pd.Series) -> dict[str, np.ndarray]:
     script, replacing four regex ``str.count`` passes (the last regex in
     the langid hot path).  Range ≡ regex char class by construction
     (SCRIPT_PATTERNS is derived from SCRIPT_RANGES)."""
-    from .masks import flat_codes
-
     n = len(sub)
     if not n:
         return {lang: np.zeros(0, dtype=np.int64) for lang in SCRIPT_RANGES}
     codes, starts, lens = flat_codes(sub)
+    bound = int(lens.max())
     out = {}
     for lang, ranges in SCRIPT_RANGES.items():
         m = None
         for lo, hi in ranges:
             part = (codes >= np.uint32(lo)) & (codes <= np.uint32(hi))
             m = part if m is None else (m | part)
-        out[lang] = _seg_count16(m, starts, lens)
+        out[lang] = _rowwise_count(m, starts, lens, bound)
     return out
-
-
-def _word_mask(codes: np.ndarray) -> np.ndarray:
-    """bool \\w mask per codepoint (dense BMP LUT + per-unique astral
-    fallback, same shape as masks.hu_class_codes)."""
-    import re
-
-    w8 = _w_lut().take(codes, mode="clip")
-    big_idx = np.flatnonzero(w8 == 2)
-    if len(big_idx):
-        big = codes[big_idx]
-        u = np.unique(big)
-        pat = re.compile(r"\w")
-        vals = np.fromiter(
-            (1 if pat.match(chr(int(cp))) else 0 for cp in u),
-            dtype=np.int8, count=len(u),
-        )
-        w8[big_idx] = vals[np.searchsorted(u, big)]
-    return w8.astype(bool)
 
 
 def _latin_scores(sub: pd.Series) -> np.ndarray:
@@ -274,12 +209,11 @@ def _latin_scores(sub: pd.Series) -> np.ndarray:
 
     One flat codepoint buffer for the batch; \\w runs found positionally
     (rows reset the run so tokens never span rows); each candidate token is
-    lower+classified per-char through a fused LUT and packed into one uint32, then
-    matched against the sorted marker-key table with searchsorted.  No
-    per-token Python objects — the regex findall + dict map this replaced
-    spent 85% of the latin tier materializing and hashing token strings."""
-    from .masks import flat_codes
-
+    lower+classified per-char through ``_marker_code`` and packed into one
+    uint32, then matched against the sorted marker-key table with
+    searchsorted.  No per-token Python objects — the regex findall + dict
+    map this replaced spent 85% of the latin tier materializing and hashing
+    token strings."""
     n = len(sub)
     scores = np.zeros((len(LATIN_ORDER), n), dtype=np.int64)
     if not n:
@@ -287,7 +221,7 @@ def _latin_scores(sub: pd.Series) -> np.ndarray:
     codes, starts, lens = flat_codes(sub)
     if not len(codes):
         return scores
-    w = _word_mask(codes)
+    w = _is_word(codes)
     prev = np.empty(len(codes), dtype=bool)
     prev[0] = False
     prev[1:] = w[:-1]
@@ -299,7 +233,7 @@ def _latin_scores(sub: pd.Series) -> np.ndarray:
     ts_mask = tok_start[wpos]
     tstarts = np.flatnonzero(ts_mask)          # token starts, compacted
     toklen = np.diff(np.append(tstarts, len(wpos)))
-    codew = _code_lut().take(codes[wpos], mode="clip")
+    codew = _marker_code(codes[wpos])
     # pack: char i of a token fills bits [5i, 5i+5) — no carries (max code
     # 31 fits the field exactly), so equality with a marker key ⟺ the
     # lowered chars match positionally, and an out-of-alphabet char's

@@ -19,6 +19,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from .masks import (
+    CodepointTable, flat_codes, hu_class_codes, lu_mask_key_series,
+)
+
 # Decision thresholds (frozen contract)
 MAX_CHARS = 20_000
 WEIRD_NUM, WEIRD_DEN = 1, 5          # drop if weird_count * 5 > n_chars  (>20%)
@@ -34,34 +38,9 @@ ALLOWED_LANGS = ("en", "fr", "de", "es", "ja", "zh", "ru", "el", "hi",
 LU_KEY_LEN = 64                      # mask-dictionary key = LU mask truncated
 LU_KEY_SRC_CHARS = 512               # ...computed from this text prefix only
 
-# whitespace LUT matching regex \s EXACTLY (verified: \s ≡ str.isspace over
-# the BMP; no astral whitespace exists) — max whitespace cp is U+3000
-_WS_LUT_SIZE = 0x3001
-_WS_LUT: np.ndarray | None = None
-
-
-def _ws_lut() -> np.ndarray:
-    global _WS_LUT
-    if _WS_LUT is None:
-        _WS_LUT = np.fromiter(
-            (chr(i).isspace() for i in range(_WS_LUT_SIZE)),
-            dtype=bool, count=_WS_LUT_SIZE,
-        )
-    return _WS_LUT
-
-
-_WS_LUT_EXT: np.ndarray | None = None
-
-
-def _ws_lut_ext() -> np.ndarray:
-    """``_ws_lut`` plus one False sentinel at index ``_WS_LUT_SIZE`` so
-    callers can clamp+gather (np.minimum) instead of the boolean-mask
-    gather/scatter, which materializes a second full-size index buffer
-    (measured 10× slower on a 176M-char batch)."""
-    global _WS_LUT_EXT
-    if _WS_LUT_EXT is None:
-        _WS_LUT_EXT = np.append(_ws_lut(), False)
-    return _WS_LUT_EXT
+# \s ≡ str.isspace (the token split); no astral whitespace exists, so the
+# BMP-dense table leaves only emoji and other astral codes to the tail
+_is_space = CodepointTable(lambda cp: chr(cp).isspace(), 0x10000, bool)
 
 
 def _rowwise_sum(vals: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -88,13 +67,45 @@ def _rowwise_sum(vals: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.n
     return out
 
 
-def _rowwise_count(mask: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Per-row popcount of a flat boolean mask (segmented reduce).  int32
-    accumulator (rows are far below 2^31 chars): halves the memory traffic
-    of the astype+reduceat pair on the flat buffer."""
-    return _rowwise_sum(mask.astype(np.int32), starts, lens).astype(np.int64)
+def _rowwise_count(mask: np.ndarray, starts: np.ndarray, lens: np.ndarray,
+                   bound: int) -> np.ndarray:
+    """Per-row popcount of a flat boolean mask whose row counts are at most
+    ``bound``: a uint16 accumulator when that fits, else uint32 — the
+    narrowest reduceat buffer (uint16 measured ~16% faster than int32)."""
+    acc = np.uint16 if bound < (1 << 16) else np.uint32
+    return _rowwise_sum(mask.astype(acc), starts, lens).astype(np.int64)
 
 
+def _class_counts(cls: np.ndarray, classes, starts: np.ndarray,
+                  lens: np.ndarray, max_len: int) -> np.ndarray:
+    """(len(classes), n_rows) per-row count of each class id in the flat
+    int8 buffer ``cls``, for rows of at most ``max_len`` codes.
+
+    Counts ride packed: a row's count fits ``w = max_len.bit_length()``
+    bits, so class ``classes[i]`` adds ``1 << (w * field)`` to an int64
+    word of ``64 // w`` fields, and ONE gather + segmented reduce counts
+    every class of the word (the one-pass-per-class formulation measured
+    8× slower on a 176M-char batch).  Five classes take one word below
+    4096-char rows, then 4+1, 3+2 and (from 2^21) 2+2+1 fields.  A field
+    may set bit 63: the wraparound is benign, adds and shift+mask are
+    bit-exact in two's complement.  A word left with one field counts by
+    compare-and-cast (``_rowwise_count``): a gather there measured 3.4×
+    slower on a 4.2M-char batch."""
+    w = max(max_len.bit_length(), 1)
+    per_word = 64 // w
+    field = (1 << w) - 1
+    out = []
+    for k in range(0, len(classes), per_word):
+        word = classes[k:k + per_word]
+        if len(word) == 1:
+            out.append(_rowwise_count(cls == word[0], starts, lens, max_len))
+            continue
+        pack = np.zeros(256, dtype=np.int64)  # one slot per int8 class id
+        for i, c in enumerate(word):
+            pack[c] = np.int64(1) << (w * i)
+        s = _rowwise_sum(pack[cls], starts, lens)
+        out.extend((s >> (w * i)) & field for i in range(len(word)))
+    return np.stack(out)
 
 
 def text_features(texts: pd.Series) -> pd.DataFrame:
@@ -102,105 +113,39 @@ def text_features(texts: pd.Series) -> pd.DataFrame:
 
     ONE flat codepoint buffer per batch (utf-32 view), classified per-cp
     directly (``hu_class_codes``) — the HU mask string is never
-    materialized, and class counts come from boundary-subtracted cumsums
-    instead of a positions-repeat + bincount (the repeat alone allocated
-    8 bytes/char).  Identical results to ``text_features_naive``
+    materialized — and counted per row by packed segmented reduces whose
+    field width follows the batch's longest row (``_class_counts``).
+    Identical results to ``text_features_naive``
     (tests/reference_paths.py) by the kernel differential test."""
-    from .masks import flat_codes, hu_class_codes, lu_mask_key_series
-
     t = texts.fillna("")
     # fused flat-buffer LU key (≡ mask_series(prefix).str.slice(0, key_len);
-    # differential-tested) — one flatten + LUT gather instead of per-char
+    # differential-tested) — one flatten + table gather instead of per-char
     # dict translate + re-flatten, decoding only the surviving key chars
     lu = lu_mask_key_series(t, LU_KEY_SRC_CHARS, LU_KEY_LEN)
 
     rcodes, rstarts, rlens = flat_codes(t)
     n_chars = rlens.astype(np.int64)
 
-    # per-row class counts: class(cp) LUT, then all five classes in TWO
-    # packed segmented reduces — class c contributes 1 << (21*field(c)) to
-    # one of two int64 accumulators (3 + 2 fields of 21 bits), so each
-    # reduce pass covers 3 classes instead of one compare+reduce per class
-    # (5 passes → 2; measured 8× on a 176M-char batch).  21-bit fields hold
-    # rows up to 2M chars; longer rows take the per-class fallback.
-    cls = hu_class_codes(rcodes)
+    # per-row counts of the HU classes a, A, 9, space and weird (cls 4
+    # exactly; 5 is the kept punctuation)
     max_len = int(rlens.max()) if len(rlens) else 0
-    if max_len < (1 << 12):
-        # short rows (the typical transcript-turn case): all five classes
-        # fit 12-bit fields of a single int64 — ONE gather + ONE reduce
-        pack = np.zeros(8, dtype=np.int64)
-        for c, shift in ((0, 0), (1, 12), (2, 24), (3, 36), (4, 48)):
-            pack[c] = np.int64(1) << shift
-        s = _rowwise_sum(pack[cls], rstarts, rlens)
-        m12 = (1 << 12) - 1
-        counts = np.stack([
-            s & m12, (s >> 12) & m12, (s >> 24) & m12, (s >> 36) & m12,
-        ])  # a, A, 9, space
-        weird = (s >> 48) & m12
-    elif max_len < (1 << 16):
-        # mid rows (the 4K-64K longdoc case): the FOUR reported classes fit
-        # 16-bit fields of ONE int64 — half the gather+reduce traffic of the
-        # two-pack 21-bit path below (VERDICT_r5: the duplicate pack gathers
-        # were the remaining featurize body cost).  weird (cls 4 exactly —
-        # higher class codes exist for punctuation/other) rides a separate
-        # narrow segmented count.  The top field may set bit 63
-        # (space_count ≥ 2^15 at position 48): int64 wraparound is benign —
-        # adds and shift+mask are bit-pattern exact in two's complement.
-        pack = np.zeros(8, dtype=np.int64)
-        for c, shift in ((0, 0), (1, 16), (2, 32), (3, 48)):
-            pack[c] = np.int64(1) << shift
-        s = _rowwise_sum(pack[cls], rstarts, rlens)
-        m16 = (1 << 16) - 1
-        counts = np.stack([
-            s & m16, (s >> 16) & m16, (s >> 32) & m16, (s >> 48) & m16,
-        ])  # a, A, 9, space
-        # uint16 accumulator: weird ≤ row len < 2^16 in this tier, and the
-        # narrower reduceat buffer is ~16% faster than the int32 path
-        weird = _rowwise_sum(
-            (cls == 4).astype(np.uint16), rstarts, rlens
-        ).astype(np.int64)
-    elif max_len < (1 << 21):
-        pack_a = np.zeros(8, dtype=np.int64)  # cls 0,1,2 -> fields 0,1,2
-        pack_b = np.zeros(8, dtype=np.int64)  # cls 3,4   -> fields 0,1
-        for c, shift in ((0, 0), (1, 21), (2, 42)):
-            pack_a[c] = np.int64(1) << shift
-        for c, shift in ((3, 0), (4, 21)):
-            pack_b[c] = np.int64(1) << shift
-        sum_a = _rowwise_sum(pack_a[cls], rstarts, rlens)
-        sum_b = _rowwise_sum(pack_b[cls], rstarts, rlens)
-        m21 = (1 << 21) - 1
-        counts = np.stack([
-            sum_a & m21, (sum_a >> 21) & m21, (sum_a >> 42) & m21,
-            sum_b & m21,
-        ])  # a, A, 9, space
-        weird = (sum_b >> 21) & m21
-    else:
-        counts = np.stack(
-            [_rowwise_count(cls == i, rstarts, rlens) for i in range(4)]
-        )
-        weird = _rowwise_count(cls == 4, rstarts, rlens)
+    counts = _class_counts(hu_class_codes(rcodes), range(5), rstarts, rlens,
+                           max_len)
+    weird = counts[4]
+    counts = counts[:4]  # a, A, 9, space
     known = counts.sum(axis=0)
     other = np.maximum(n_chars - known, 0)  # '_' + kept punctuation ",.-\""
     digits = counts[2]
 
-    # token count ≡ str.count(r"\S+"): non-ws positions preceded by ws/start.
-    # take(mode='clip') clamps to the sentinel index (_WS_LUT_SIZE is False,
-    # and no codepoint ≥ U+3001 is whitespace) without materializing the
-    # np.minimum temp — ~25% faster than clamp-then-gather, bit-identical
-    ws = _ws_lut_ext().take(rcodes, mode="clip")
+    # token count ≡ str.count(r"\S+"): non-ws positions preceded by ws/start
+    # (tokens per row ≤ ceil(len/2), so max_len bounds the count)
+    ws = _is_space(rcodes)
     prev_ws = np.empty(len(rcodes), dtype=bool)
     if len(rcodes):
         prev_ws[0] = True
         prev_ws[1:] = ws[:-1]
         prev_ws[rstarts[rstarts < len(rcodes)]] = True  # rows are independent
-    tok = ~ws & prev_ws
-    if max_len < (1 << 16):
-        # tokens per row ≤ ceil(len/2) < 2^15 here — uint16 accumulation
-        # halves the reduceat buffer vs int32
-        n_tokens = _rowwise_sum(
-            tok.astype(np.uint16), rstarts, rlens).astype(np.int64)
-    else:
-        n_tokens = _rowwise_count(tok, rstarts, rlens)
+    n_tokens = _rowwise_count(~ws & prev_ws, rstarts, rlens, max_len)
 
     # class entropy (nats) over [a, A, 9, space, other]
     full = np.vstack([counts, other[None, :]]).astype(np.float64)

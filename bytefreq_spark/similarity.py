@@ -175,7 +175,8 @@ def ivf_train_centroids(
     Determinism: sample = first ``sample_n`` rows by ``xxhash64(id, seed)``
     order, init = first ``n_centroids`` of the sample, fixed iteration count.
     NULL vectors and vectors whose length differs from the sample's first
-    vector are skipped, as :func:`ivf_assign_udf` gives them no cluster.
+    vector are skipped, as :func:`ivf_assign_udf` gives them no cluster;
+    an input with no non-NULL vector raises ``ValueError``.
     """
     sample = (
         df.select(F.col(id_col), F.col(vec_col))
@@ -184,6 +185,10 @@ def ivf_train_centroids(
         .collect()
     )
     vecs = [r[vec_col] for r in sample if r[vec_col] is not None]
+    if not vecs:
+        raise ValueError(
+            f"cannot train IVF centroids: no non-NULL {vec_col!r} vector "
+            "in the input")
     x = np.array([list(v) for v in vecs if len(v) == len(vecs[0])],
                  dtype=np.float64)
     cents = x[:n_centroids].copy()

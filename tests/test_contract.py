@@ -25,3 +25,27 @@ def test_queries_and_oracles_consistent():
     # surface gets a CORRECTNESS row every round
     assert len(qs) == 50, len(qs)
     assert len(oracles) >= 40, len(oracles)
+
+
+def test_oracle_sql_same_in_every_process():
+    """The oracle SQL embeds the staged-artifact paths; it must render
+    byte-identically in a fresh process, or a harness comparing oracle
+    fingerprints across runs reports a change that never happened."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import __spark_entry__ as e
+
+    # the child exits through os._exit: its exit sweep would remove the
+    # staging root this checkout's other processes share
+    root = os.path.dirname(os.path.abspath(e.__file__))
+    fresh = subprocess.run(
+        [sys.executable, "-c",
+         "import json, os, sys, __spark_entry__ as e; "
+         "print(json.dumps(e.oracle_sql(), sort_keys=True)); "
+         "sys.stdout.flush(); os._exit(0)"],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout
+    assert json.loads(fresh) == e.oracle_sql()

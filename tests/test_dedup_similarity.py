@@ -386,6 +386,19 @@ def test_ivf_null_and_ragged_vectors(spark):
     assert full == brute
 
 
+def test_ivf_train_without_vectors_names_column(spark):
+    """An input with no usable vector (empty, or every vector NULL) fails
+    training with a ValueError naming the vector column, not a numpy
+    IndexError from the empty sample."""
+    from bytefreq_spark.similarity import ivf_train_centroids
+
+    schema = "vec_id long, emb array<float>"
+    for rows in ([], [(1, None), (2, None)]):
+        df = spark.createDataFrame(rows, schema)
+        with pytest.raises(ValueError, match="'emb'"):
+            ivf_train_centroids(df, n_centroids=4, vec_col="emb")
+
+
 def test_cosine_zero_vector_yields_null_not_crash(spark):
     """ANSI mode: zero vectors must produce NULL cosine (try_divide), not a
     DIVIDE_BY_ZERO crash taking down the scan."""

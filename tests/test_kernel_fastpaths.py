@@ -12,6 +12,7 @@ import re
 import sys
 
 import pandas as pd
+import pytest
 
 from bytefreq_spark.langid import detect_language
 from bytefreq_spark.scrub import MOJIBAKE_MAP, SCRUB_RULES, scrub_series
@@ -326,57 +327,79 @@ def test_text_features_fast_equals_naive():
 
 
 def test_text_features_pack_tiers_equal_naive():
-    """The packed segmented-reduce has FOUR width tiers chosen by the
-    batch's max row length (12-bit one-pack / 16-bit one-pack+weird /
-    21-bit two-pack / per-class fallback).  Drive a batch through EACH tier
-    with rows straddling the boundaries, including a space-heavy row that
-    sets bit 63 of the 16-bit pack's top field (the benign-wraparound
-    case), and require bit-identity with the naive per-class counts."""
+    """The packed class count takes its field width from the batch's
+    longest row (``w = max_len.bit_length()``, ``64 // w`` fields per int64
+    word), so the fields per word change at 2^12 (5 → 4+1, the one-field
+    word counted by compare-and-cast), at 2^16 (→ 3+2) and at 2^21
+    (→ 2+2+1).  Drive batches across each change with rows straddling it,
+    including a space-heavy row that sets bit 63 of a 16-bit word's top
+    field (the benign-wraparound case), and require bit-identity with the
+    naive per-class counts."""
     from bytefreq_spark.quality import text_features
 
     mixed = "aA9 ,é1234 zz "  # all five classes + punct
     boundary_rows = [
         mixed * 50,                      # well under 2^12
-        ("x y " * 1024)[:4095],          # 12-bit tier ceiling
-        ("x y " * 1025)[:4097],          # just over -> 16-bit tier
-        (mixed * 5000)[:65535],          # 16-bit tier ceiling
+        ("x y " * 1024)[:4095],          # last 5-field width (12 bits)
+        ("x y " * 1025)[:4097],          # just over -> 13 bits, 4+1
+        (mixed * 5000)[:65535],          # last 4+1 width (16 bits)
         " " * 40000 + "a1",              # space-heavy: top field bit 63 path
-        (mixed * 5000)[:65537],          # just over -> 21-bit tier
-        "é" * 70000 + " 9A",             # non-ascii in the 21-bit tier
+        (mixed * 5000)[:65537],          # just over -> 17 bits, 3+2
+        "é" * 70000 + " 9A",             # non-ascii at 3+2
     ]
-    # each batch's tier is set by its MAX row; run every boundary row both
-    # in its own tier and dragged up a tier by a longer neighbor
-    for anchor in ["", "z" * 5000, "z" * 70000]:
+    # each batch's width is set by its MAX row; run every boundary row both
+    # at its own width and dragged wider by a longer neighbor
+    for anchor in ["", "z" * 5000, "z" * 65535, "z" * 70000]:
         rows = [r for r in boundary_rows if anchor == "" or len(r) <= len(anchor)]
         s = pd.Series(rows + ([anchor] if anchor else []))
         pd.testing.assert_frame_equal(
             text_features(s), text_features_naive(s))
-    # fallback tier (rows >= 2^21 chars)
+    # rows >= 2^21 chars: 22-bit fields, 2+2+1
     s = pd.Series([mixed * 150000, "short 1A"])
     assert len(s[0]) >= (1 << 21)
     pd.testing.assert_frame_equal(text_features(s), text_features_naive(s))
 
 
-def test_hu_class_codes_equals_table():
-    """r4: the direct codepoint classifier must agree with classify-the-
-    mask-output for every LUT codepoint AND a random sample of the high
-    range (CJK, Indic, astral, surrogates) that goes through the per-unique
-    fallback."""
+def _codepoint_tables():
+    """Every ``CodepointTable`` instance with its per-codepoint spec, called
+    one code at a time: the dense table, the per-unique tail and the dtype
+    must all reproduce it."""
+    from bytefreq_spark import langid, masks, quality
+
+    hu = masks._HU_TABLE
+    return {
+        "hu_class": (masks.hu_class_codes,
+                     lambda cp: masks._HU_CLASS_INDEX[hu[cp]]),
+        "hu_mask": (masks._hu_mask_codes, lambda cp: ord(hu[cp])),
+        "word": (langid._is_word,
+                 lambda cp: bool(re.fullmatch(r"\w", chr(cp)))),
+        "marker_code": (langid._marker_code,
+                        lambda cp: langid._CHAR_CODE.get(
+                            chr(cp).lower(), langid._INVALID_CODE)),
+        "space": (quality._is_space, lambda cp: chr(cp).isspace()),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_codepoint_tables()))
+def test_hu_class_codes_equals_table(name):
+    """Each codepoint table agrees with its spec for every code of its
+    dense range AND a random sample above it (CJK, Indic, surrogates,
+    astral) that goes through the per-unique tail, shuffled together so
+    the tail's scatter lands between dense codes."""
     import numpy as np
 
-    from bytefreq_spark.masks import (
-        _HU_CLASS_INDEX, _HU_CP_LUT_SIZE, _HU_TABLE, hu_class_codes,
-    )
-
+    table, spec = _codepoint_tables()[name]
     rng = np.random.RandomState(7)
     cps = np.concatenate([
-        np.arange(_HU_CP_LUT_SIZE),
-        rng.randint(_HU_CP_LUT_SIZE, 0x30000, 2000),
+        np.arange(table.size),
+        rng.randint(table.size, 0x110000, 2000),
+        rng.randint(0xD800, 0xE000, 50),        # lone surrogates
+        [0x1F44D, 0x1F3FD, 0x10FFFF, 0x3000, 0xFEFF, 0x200F],
     ]).astype(np.uint32)
-    got = hu_class_codes(cps)
-    want = np.array(
-        [_HU_CLASS_INDEX[_HU_TABLE[int(c)]] for c in cps], dtype=np.int8
-    )
+    rng.shuffle(cps)
+    got = table(cps)
+    assert got.dtype == np.dtype(table.dtype)
+    want = np.array([spec(int(c)) for c in cps], dtype=table.dtype)
     assert np.array_equal(got, want)
 
 

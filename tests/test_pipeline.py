@@ -992,7 +992,8 @@ def _binary_text_frame(spark, rows):
     ``text`` is ``CAST(binary AS STRING)``: the JVM holds the bytes as they
     are, invalid UTF-8 included."""
     raw = spark.createDataFrame(
-        [(c, t, r, bytearray(b)) for c, t, r, b in rows],
+        [(c, t, r, None if b is None else bytearray(b))
+         for c, t, r, b in rows],
         "conv_id string, turn_idx int, role string, raw binary")
     return raw.select(
         "conv_id", "turn_idx", "role", F.col("raw").cast("string").alias("text"),
@@ -1038,25 +1039,39 @@ def test_invalid_utf8_repair_equals_python_decode(spark):
 
 
 def test_invalid_utf8_every_entry_point(spark, tmp_path):
-    """A turn holding invalid UTF-8 no longer fails the job: the one-shot,
-    checkpointed, incremental and streaming runs all label the frame as
-    the single-node reference labels the Python-decoded texts."""
+    """A turn holding invalid UTF-8 or other pathological text no longer
+    fails the job: the one-shot, checkpointed, incremental and streaming
+    runs all label the frame as the single-node reference labels the
+    Python-decoded texts.  The pathological rows: NUL bytes, an astral
+    emoji with a skin-tone modifier, stacked combining marks, BOM and
+    RTL/LTR marks, a 200k-space run, a 1 MiB turn, a 2.4M-char turn (at
+    least 2^21 chars: the widest class-count packing), an empty and a NULL
+    text."""
     from bytefreq_spark.pipeline import run_incremental
     from bytefreq_spark.streaming.profile_stream import (
         quality_filter_stream, read_transcript_stream,
     )
 
-    rows = [("c1", 0, "user", b"hello world"),
-            ("c1", 1, "assistant", b"\xff\xfe"),
-            ("c1", 2, "user", b"\xed\xa0\x80")]
+    texts = [b"hello world", b"\xff\xfe", b"\xed\xa0\x80",
+             b"nul\x00byte\x00\x00 end",
+             "thumbs \U0001F44D\U0001F3FD up \U0001F9D1\U0001F3FF\u200d"
+             "\U0001F4BB".encode(),
+             "e\u0301\u0301 n\u0303o Z\u0351\u0352\u0353\u0354".encode(),
+             "\ufeffhello \u200f\u05e9\u05dc\u05d5\u05dd\u200e world".encode(),
+             b"a" + b" " * 200_000 + b"b",
+             (b"The quick brown fox, 42 times. " * 40_000)[:1 << 20],
+             ("aA9 ,\u00e91234 zz " * 200_000)[:2_400_000].encode(),
+             b"", None]
+    rows = [("c1", i, ("user", "assistant")[i % 2], b)
+            for i, b in enumerate(texts)]
     pdf = pd.DataFrame(
-        [(c, t, r, b.decode("utf-8", "replace"), None, None)
-         for c, t, r, b in rows],
+        [(c, t, r, None if b is None else b.decode("utf-8", "replace"),
+          None, None) for c, t, r, b in rows],
         columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
     key = ["conv_id", "turn_idx"]
     cols = key + ["keep", "drop_reason", "scrubbed_text"]
     want = run_reference(pdf)[cols].sort_values(key).reset_index(drop=True)
-    assert want["scrubbed_text"].tolist()[1:] == ["\ufffd" * 2, "\ufffd" * 3]
+    assert want["scrubbed_text"].tolist()[1:3] == ["\ufffd" * 2, "\ufffd" * 3]
 
     df = _binary_text_frame(spark, rows)
     in_dir = str(tmp_path / "in")
