@@ -6,4 +6,8 @@ quality-filter + PII-scrub pipeline described by BASELINE.json's north rule.
 See SURVEY.md for the blueprint and file:line parity citations.
 """
 
+from . import _worker
+
 __version__ = "0.1.0"
+
+_worker.install()  # once per process; see _worker for the per-task costs it spares

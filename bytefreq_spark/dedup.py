@@ -166,9 +166,11 @@ def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n_hashes: int = 64, shingle: int = 5, seed: int = 42,
 ) -> DataFrame:
+    # invalid UTF-8 (a binary cast) is repaired to U+FFFD before Arrow
     return df.select(
         F.col(id_col),
-        minhash_udf(n_hashes, shingle, seed)(F.col(text_col)).alias("signature"),
+        minhash_udf(n_hashes, shingle, seed)(F.make_valid_utf8(text_col))
+        .alias("signature"),
     )
 
 

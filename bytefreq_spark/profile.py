@@ -60,9 +60,10 @@ def pattern_col(column: Column, raw: Column, grain: str = "LU") -> Column:
     """The mask of ``raw`` for a value of profiled ``column``: the Arrow
     kernel (NULL → NULL), except under a ``.Rules.`` path, whose values are
     rule outputs and keep their raw value as the mask (M5, main.rs:34-36) so
-    enhanced output can be re-profiled without double-masking."""
+    enhanced output can be re-profiled without double-masking.  Invalid
+    UTF-8 (a binary cast) reaches the kernel as U+FFFD, as in featurize."""
     return F.when(column.contains(".Rules."), raw).otherwise(
-        mask_pandas_udf(grain)(raw))
+        mask_pandas_udf(grain)(F.make_valid_utf8(raw)))
 
 
 def tally(long: DataFrame, grain: str, example: Column) -> DataFrame:

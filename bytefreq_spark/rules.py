@@ -344,8 +344,10 @@ def enhanced(
     out = []
     for c in cols:
         raw = F.col(c).cast("string")
-        hu = mask_pandas_udf("HU")(raw)
-        lu = mask_pandas_udf("LU")(raw)
+        # invalid UTF-8 (a binary cast) reaches the mask kernels as U+FFFD
+        valid = F.make_valid_utf8(raw)
+        hu = mask_pandas_udf("HU")(valid)
+        lu = mask_pandas_udf("LU")(valid)
         out.append(
             F.struct(
                 raw.alias("raw"),

@@ -81,6 +81,33 @@ def make_planes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
+def _fits(vecs: pd.Series, dim: int) -> np.ndarray:
+    """Rows holding a non-NULL vector of length ``dim``.  Every vector
+    kernel's pandas UDF calls it, so unpickling the UDF on a worker imports
+    the package (and runs its per-process worker setup) even though
+    cloudpickle ships the UDF's closure by value."""
+    return np.fromiter((v is not None and len(v) == dim for v in vecs),
+                       dtype=bool, count=len(vecs))
+
+
+def _seq_dot(xa: np.ndarray, xb: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two ``(n, dim)`` float64 arrays, each a left
+    fold from ``0.0`` over the dimensions in order — the IEEE operation
+    sequence of ``_dot``'s ``aggregate``.  The fold runs over 256-row
+    blocks: a block's products are transposed to ``(dim, 256)`` so that
+    each of the ``dim`` adds is a contiguous vector op on a cache-resident
+    slice: 8,211 × 768 pairs fold in ~36 ms, against ~150 ms for a loop of
+    strided column adds over all rows (one core of a 4-CPU host)."""
+    out = np.empty(len(xa), dtype=np.float64)
+    for s in range(0, len(xa), 256):
+        p = (xa[s:s + 256] * xb[s:s + 256]).T.copy()
+        acc = np.zeros(p.shape[1], dtype=np.float64)
+        for row in p:
+            acc += row
+        out[s:s + 256] = acc
+    return out
+
+
 def hyperplane_signature_udf(planes: np.ndarray):
     """Arrow-vectorized hyperplane signature: one (batch × dim) @ (dim ×
     n_planes) matmul per batch.  NULL and ragged vectors (length ≠ dim)
@@ -94,10 +121,7 @@ def hyperplane_signature_udf(planes: np.ndarray):
 
     @F.pandas_udf("long")
     def sig(vecs: pd.Series) -> pd.Series:
-        ok = np.fromiter(
-            (v is not None and len(v) == dim for v in vecs),
-            dtype=bool, count=len(vecs),
-        )
+        ok = _fits(vecs, dim)
         out = np.zeros(len(vecs), dtype=np.uint64)
         if ok.any():
             x = np.array(vecs[ok].tolist(), dtype=np.float64)
@@ -112,10 +136,12 @@ def seq_dot_udf(dim: int):
     """Arrow pairwise dot product, BIT-IDENTICAL to ``_dot`` (the
     ``zip_with``/``aggregate`` expression): float32→float64 widening is
     exact, and accumulating one dimension at a time reproduces the JVM
-    fold's sequence of IEEE operations — so a caller that keeps the
-    norm/divide/round arithmetic JVM-side gets byte-identical cosines.
-    NULL or ragged vectors yield NaN, which every downstream threshold
-    filter drops exactly like the expression path's NULL.
+    fold's sequence of IEEE operations (``_seq_dot``) — so a caller that
+    keeps the norm/divide/round arithmetic JVM-side gets byte-identical
+    cosines.  The kernel gives a NULL or ragged pair NaN, and the pandas-UDF
+    return path turns that NaN into NULL, as the expression path's NULL.
+    The NULL is what a threshold filter drops: Spark orders NaN above every
+    number, so ``NaN >= 0.99`` is true.
 
     Exists for the near-dup rescore (r8): the candidate set is
     quadratic-ish in bucket size and the interpreted higher-order-function
@@ -124,20 +150,11 @@ def seq_dot_udf(dim: int):
 
     @F.pandas_udf("double")
     def dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        ok = np.fromiter(
-            (x is not None and y is not None
-             and len(x) == dim and len(y) == dim
-             for x, y in zip(a, b)),
-            dtype=bool, count=len(a),
-        )
+        ok = _fits(a, dim) & _fits(b, dim)
         out = np.full(len(a), np.nan, dtype=np.float64)
         if ok.any():
-            xa = np.array([np.asarray(v) for v in a[ok]], dtype=np.float64)
-            xb = np.array([np.asarray(v) for v in b[ok]], dtype=np.float64)
-            acc = np.zeros(len(xa), dtype=np.float64)
-            for j in range(dim):
-                acc += xa[:, j] * xb[:, j]
-            out[ok] = acc
+            out[ok] = _seq_dot(np.array(a[ok].tolist(), dtype=np.float64),
+                               np.array(b[ok].tolist(), dtype=np.float64))
         return pd.Series(out)
 
     # marked nondeterministic so the optimizer cannot copy it: a
@@ -212,10 +229,7 @@ def ivf_assign_udf(centroids: np.ndarray):
 
     @F.pandas_udf("int")
     def assign(vecs: pd.Series) -> pd.Series:
-        ok = np.fromiter(
-            (v is not None and len(v) == dim for v in vecs),
-            dtype=bool, count=len(vecs),
-        )
+        ok = _fits(vecs, dim)
         out = np.zeros(len(vecs), dtype=np.int32)
         if ok.any():
             x = np.array(vecs[ok].tolist(), dtype=np.float64)

@@ -649,6 +649,21 @@ def test_embedding_near_dup_pairs(spark):
     assert len(set(got) - planted) <= 2
 
 
+def test_embedding_near_dup_pairs_drop_null_and_ragged(spark):
+    """NULL and ragged vectors (all signature 0, so all in one bucket) pair
+    with nothing even at threshold -1.0: the rescore dot comes back NULL,
+    never NaN — Spark orders NaN above every number, so a NaN cosine would
+    pass any threshold."""
+    from bytefreq_spark.similarity import embedding_near_dup_pairs
+
+    v = [0.5, -1.0, 2.0, 0.25]
+    rows = [(0, v), (1, v), (2, [1.0, 2.0, 3.0]),
+            (3, [1.0, 2.0, 3.0, 4.0, 5.0]), (4, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = embedding_near_dup_pairs(df, threshold=-1.0, dim=4).collect()
+    assert [tuple(r) for r in got] == [(0, 1, 1.0)]
+
+
 def _plan_nodes(node, seen_caches):
     """Every node of an executed physical plan, each cached plan walked once
     (however many scans read it) and reused exchanges not re-walked."""

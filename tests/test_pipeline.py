@@ -1096,3 +1096,34 @@ def test_invalid_utf8_every_entry_point(spark, tmp_path):
             drop=True)
         pd.testing.assert_frame_equal(got, want[cols], check_dtype=False,
                                       obj=name)
+
+
+def test_invalid_utf8_profiling_entry_points(spark):
+    """The mask tally (every grain), the enhanced HU/LU masks and the
+    minhash near-dup search take invalid UTF-8 (a binary cast) as the
+    Python-decoded text: their Arrow kernels see U+FFFD, as featurize's
+    does, instead of failing the job."""
+    from bytefreq_spark.dedup import minhash_near_dups
+    from bytefreq_spark.profile import mask_frequency
+    from bytefreq_spark.rules import enhanced
+
+    fox = b"the quick brown fox jumps over the lazy dog "
+    texts = [b"hello world", b"\xff\xfe", b"\xed\xa0\x80 x9",
+             fox + b"\xff\xfe", fox + b"\xff\xfe!", b"caf\xc3\xa9 42", b"",
+             None]
+    rows = [("c1", i, "user", b) for i, b in enumerate(texts)]
+    bad = _binary_text_frame(spark, rows).select(
+        F.col("turn_idx").alias("doc_id"), "text")
+    good = spark.createDataFrame(
+        [(i, None if b is None else b.decode("utf-8", "replace"))
+         for i, b in enumerate(texts)], "doc_id int, text string")
+    for grain in ("H", "L", "HU", "LU", "AWK_H", "AWK_L"):
+        got, want = ({(r["pattern"], r["count"]) for r in mask_frequency(
+            df, ["text"], grain).collect()} for df in (bad, good))
+        assert got == want, grain
+    got, want = (sorted(str(tuple(r)) for r in enhanced(df, ["text"]).select(
+        "text.HU", "text.LU").collect()) for df in (bad, good))
+    assert got == want
+    got, want = ({(r["id_a"], r["id_b"]) for r in minhash_near_dups(
+        df, threshold=0.5).collect()} for df in (bad, good))
+    assert got == want and (3, 4) in got
